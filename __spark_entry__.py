@@ -2113,7 +2113,7 @@ _GATE_FIRST = [
     # oracle SQL changed (fixpoint error() assert added to the refine
     # unroll per ADVICE r04) — the gate runs the oracle, so it re-gates
     "leiden_deterministic",
-    # louvain.py _Scratch gained rows_hint (the truncation substrate every
+    # the louvain scratch gained rows_hint (the truncation substrate every
     # scratch loop shares) — louvain local+distributed pair + the
     # single-level variant re-gate as the substrate representatives
     "louvain", "louvain_distributed", "modularity_optimization",

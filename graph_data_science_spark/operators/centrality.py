@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, functions as F
 import os
 
 from graph_data_science_spark.graph import Graph
-from graph_data_science_spark.operators.louvain import _Scratch
+from graph_data_science_spark.plans.loop_state import Scratch
 from graph_data_science_spark.plans.partitioning import shuffle_hash
 
 # Runtime-adaptive join strategy for the per-level MSBFS joins: the scratch
@@ -45,7 +45,7 @@ from graph_data_science_spark.plans.partitioning import shuffle_hash
 _BCAST_MAX_ROWS = int(os.environ.get("SPARK_GRAFT_BCAST_MAX_ROWS", "1000000"))
 
 
-def _loop_edges(graph: Graph, scratch: _Scratch) -> DataFrame:
+def _loop_edges(graph: Graph, scratch: Scratch) -> DataFrame:
     """Edge table for an iterative level loop: reuse the caller's cached
     edges directly (a cache scan is cheaper than a parquet round-trip);
     truncate into scratch only when uncached (lineage may be a full
@@ -62,7 +62,7 @@ def msbfs(graph: Graph, sources: list[int] | None = None,
     where ``v`` is reachable from source ``s`` (includes (s, s, 0, 1)).
     ``sigma`` = number of distinct shortest s→v paths (Brandes' σ)."""
     spark = graph.nodes.sparkSession
-    scratch = _Scratch(spark)
+    scratch = Scratch(spark)
     try:
         edges = _loop_edges(graph, scratch)
         if sources is None:
@@ -104,14 +104,14 @@ def msbfs(graph: Graph, sources: list[int] | None = None,
                 .select("s", "v", F.lit(r).cast("long").alias("dist"), "sigma")
             new = scratch.truncate(
                 new, f"frontier_{r}",
-                rows_hint=scratch._rows.get(f"frontier_{r - 1}"))
+                rows_hint=scratch.rows(f"frontier_{r - 1}"))
             # truncate already observed the row count — reading it is free,
             # where isEmpty() was one extra job per BFS level (O(diameter)
             # jobs per run, the measured per-level overhead in betweenness)
-            if scratch._rows.get(f"frontier_{r}", 0) == 0:
+            if scratch.rows(f"frontier_{r}") == 0:
                 break
             state = state.unionByName(new)
-            prev_rows = scratch._rows.get(f"frontier_{r}", 0)
+            prev_rows = scratch.rows(f"frontier_{r}")
             state_rows += prev_rows
             frontier = new
         out = state if with_sigma else state.select("s", "v", "dist")
@@ -141,7 +141,7 @@ def betweenness(graph: Graph, sources: list[int] | None = None,
     partial-agg sum per level, all sources in the same pass."""
     spark = graph.nodes.sparkSession
     pairs = msbfs(graph, sources, max_iterations, with_sigma=True)
-    scratch = _Scratch(spark)
+    scratch = Scratch(spark)
     try:
         edges = _loop_edges(graph, scratch)
         # one D-row collect gives both max depth and per-level sizes (the
@@ -190,7 +190,7 @@ def betweenness(graph: Graph, sources: list[int] | None = None,
             )
             delta_next = scratch.truncate(
                 contrib, f"delta_{d}",
-                rows_hint=scratch._rows.get(f"delta_{d + 1}"))
+                rows_hint=scratch.rows(f"delta_{d + 1}"))
             incs.append(delta_next.where(F.col("s") != F.col("v"))
                         .select("v", "delta"))
         if not incs:

@@ -30,7 +30,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Window, functions as F
 
 from graph_data_science_spark.graph import Graph
-from graph_data_science_spark.operators.louvain import _Scratch
+from graph_data_science_spark.plans.loop_state import Scratch
 
 
 @dataclass
@@ -60,7 +60,7 @@ def kmeans(
     from graph_data_science_spark.operators.embeddings import _u01
 
     spark = vecs.sparkSession
-    scratch = _Scratch(spark)
+    scratch = Scratch(spark)
     try:
         pts = vecs.select(
             F.col(id_col).alias("id"),
@@ -106,7 +106,7 @@ def k1coloring(graph: Graph, max_rounds: int = 50) -> DataFrame:
     """``gds.k1coloring`` analog → (node_id, color), a proper coloring of
     the undirected simple graph (deterministic recurrence — module doc)."""
     spark = graph.nodes.sparkSession
-    scratch = _Scratch(spark)
+    scratch = Scratch(spark)
     try:
         e = graph.canonical_undirected_edges()
         edges = e.unionByName(
@@ -128,7 +128,7 @@ def k1coloring(graph: Graph, max_rounds: int = 50) -> DataFrame:
                             & (F.col("src") > F.col("dst")))
                      .select(F.col("src").alias("node_id")).distinct())
             confl = scratch.truncate(confl, "confl")
-            if scratch._rows.get("confl", 0) == 0:  # count rode truncate
+            if scratch.rows("confl") == 0:  # count rode truncate
                 break
             # smallest color in 0..deg not used by any neighbor (prev round)
             nbr_colors = (edges.join(confl.withColumnRenamed("node_id", "src"),

@@ -20,7 +20,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, functions as F
 
 from graph_data_science_spark.graph import Graph
-from graph_data_science_spark.operators.louvain import _Scratch, _adjacency
+from graph_data_science_spark.operators.louvain import _adjacency
+from graph_data_science_spark.plans.loop_state import Scratch
 from graph_data_science_spark.plans.partitioning import shuffle_hash
 
 
@@ -40,7 +41,7 @@ def maxkcut(
     weighted: bool = True,
 ) -> MaxKCutResult:
     spark = graph.nodes.sparkSession
-    scratch = _Scratch(spark)
+    scratch = Scratch(spark)
     try:
         adj = scratch.truncate(_adjacency(graph, weighted), "adj")
         nodes = graph.nodes.select("node_id")

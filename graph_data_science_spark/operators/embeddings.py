@@ -31,7 +31,7 @@ import math
 from pyspark.sql import DataFrame, functions as F
 
 from graph_data_science_spark.graph import Graph, UNDIRECTED
-from graph_data_science_spark.operators.louvain import _Scratch
+from graph_data_science_spark.plans.loop_state import Scratch
 
 TWO60 = float(1 << 60)
 
@@ -58,7 +58,7 @@ def fastrp(
     if iteration_weights is None:
         iteration_weights = [0.0, 1.0, 1.0]
     spark = graph.nodes.sparkSession
-    scratch = _Scratch(spark)
+    scratch = Scratch(spark)
     try:
         g = graph.oriented(UNDIRECTED)
         edges = scratch.truncate(g.edges.select("src", "dst").distinct(), "edges")
@@ -239,7 +239,7 @@ def _node2vec_distributed(graph, pairs, d, ep, ns, lr0, sd,
     remaining driver-resident trainer):
 
     - MODEL STATE is a long-format DataFrame ``(node_id, dim, win, wout)``
-      truncated per epoch through ``_Scratch`` — nothing n-sized lives on
+      truncated per epoch through ``Scratch`` — nothing n-sized lives on
       or moves through the driver (the prior trainer collected all node
       ids into a dict, broadcast the 2·n·d model every epoch and
       collected up to n gradient rows back).
@@ -262,17 +262,16 @@ def _node2vec_distributed(graph, pairs, d, ep, ns, lr0, sd,
     testable monotone descent.
     """
     from graph_data_science_spark.operators.graphsage import _Q, _ml
-    from graph_data_science_spark.operators.louvain import _Scratch
     from graph_data_science_spark.plans.partitioning import (
         bucketed_exclusive_prefix)
 
     spark = graph.nodes.sparkSession
-    scratch = _Scratch(spark)
+    scratch = Scratch(spark)
     try:
         parts = int(num_partitions or spark.sparkContext.defaultParallelism)
         pair_df = scratch.truncate(
             pairs.repartition(parts, "walk_id", "s1", "s2"), "pairs")
-        m_pairs = max(1, scratch._rows.get("pairs", 0))
+        m_pairs = max(1, scratch.rows("pairs"))
 
         nodes = graph.nodes.select("node_id")
         bounds = nodes.agg(F.min("node_id").alias("mn"),
@@ -407,7 +406,7 @@ def hashgnn(
     if int(iterations) < 1:
         raise ValueError("hashgnn requires iterations >= 1")
     spark = graph.nodes.sparkSession
-    scratch = _Scratch(spark)
+    scratch = Scratch(spark)
     try:
         edges = scratch.truncate(graph.edges.select("src", "dst").distinct(), "edges")
         feats = spark.range(int(feature_space)).select(
@@ -472,7 +471,7 @@ def random_walks(
     from pyspark.sql import Window
 
     spark = graph.nodes.sparkSession
-    scratch = _Scratch(spark)
+    scratch = Scratch(spark)
     try:
         edges = graph.edges.select("src", "dst").distinct()
         w = Window.partitionBy("src").orderBy("dst")
@@ -501,7 +500,7 @@ def random_walks(
                        .select("walk_id", F.lit(step).cast("long").alias("step"),
                                F.col("dst").alias("node_id")))
                 nxt = scratch.truncate(nxt, "cur")
-                if scratch._rows.get("cur", 0) == 0:  # count rode truncate
+                if scratch.rows("cur") == 0:  # count rode truncate
                     break
                 out = scratch.truncate(out.unionByName(nxt), "out")
                 cur = nxt
@@ -544,7 +543,7 @@ def random_walks(
                        .select("walk_id", F.col("cur").alias("prev"),
                                F.col("cand").alias("node_id")))
             nxt = scratch.truncate(nxt, "cur2")
-            if scratch._rows.get("cur2", 0) == 0:  # count rode truncate
+            if scratch.rows("cur2") == 0:  # count rode truncate
                 break
             out = scratch.truncate(out.unionByName(
                 nxt.select("walk_id", F.lit(step).cast("long").alias("step"),

@@ -52,7 +52,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from graph_data_science_spark.graph import Graph
 from graph_data_science_spark.operators.embeddings import _u01
-from graph_data_science_spark.operators.louvain import _Scratch
+from graph_data_science_spark.plans.loop_state import Scratch
 
 
 def _py_u01(*args) -> float:
@@ -128,7 +128,7 @@ def graphsage_predict(
         sample_sizes = [None] * len(weights)
     if len(sample_sizes) != len(weights):
         raise ValueError("sample_sizes must match the number of layers")
-    scratch = _Scratch(spark)
+    scratch = Scratch(spark)
     try:
         edges = scratch.truncate(
             graph.edges.select("src", "dst").distinct(), "edges")
@@ -256,7 +256,7 @@ def graphsage_train_distributed(
     if layer_dims[0] != feat_w:
         raise ValueError("layer_dims[0] must equal the feature width")
 
-    scratch = _Scratch(spark)
+    scratch = Scratch(spark)
     try:
         edges = scratch.truncate(
             graph.edges.select("src", "dst").distinct(), "edges")

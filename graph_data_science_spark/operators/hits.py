@@ -27,6 +27,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, functions as F
 
 from graph_data_science_spark.graph import Graph
+from graph_data_science_spark.plans.loop_state import Scratch
 from graph_data_science_spark.plans.partitioning import shuffle_hash
 
 
@@ -38,11 +39,9 @@ class HitsResult:
 
 def hits(graph: Graph, hits_iterations: int = 20) -> HitsResult:
     """Returns (node_id, hub, auth), both L2-normalized per iteration."""
-    from graph_data_science_spark.operators.louvain import _Scratch
-
     spark = graph.nodes.sparkSession
     edges = graph.edges.select("src", "dst").persist()
-    scratch = _Scratch(spark)
+    scratch = Scratch(spark)
 
     state = scratch.truncate(
         graph.nodes.select(

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from graph_data_science_spark.graph import Graph
 from graph_data_science_spark.operators.embeddings import _u01
-from graph_data_science_spark.operators.louvain import _Scratch
+from graph_data_science_spark.plans.loop_state import Scratch
 
 
 def influence_maximization_celf(
@@ -44,7 +44,7 @@ def influence_maximization_celf(
     activated count (avg over simulations) of the seed set up to this rank,
     rounded 6dp."""
     spark = graph.nodes.sparkSession
-    scratch = _Scratch(spark)
+    scratch = Scratch(spark)
     try:
         edges = graph.edges.select("src", "dst").distinct()
         deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
@@ -77,7 +77,7 @@ def influence_maximization_celf(
                    .distinct()
                    .join(reach, ["cand", "sim", "node_id"], "left_anti"))
             nxt = scratch.truncate(nxt, "frontier")
-            if scratch._rows.get("frontier", 0) == 0:  # count rode truncate
+            if scratch.rows("frontier") == 0:  # count rode truncate
                 break
             reach = scratch.truncate(reach.unionByName(nxt), "reach")
             frontier = nxt

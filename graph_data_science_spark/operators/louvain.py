@@ -46,9 +46,9 @@ Spark plan per sub-round: volumes = one partial-agg sum over the assignment;
 candidate tallies = adj ⋈ assignment (shuffle-hash on the state side) + one
 partial-agg sum; argmax per node = one more partial-agg max(struct) — no
 windows, no Python in the loop. Sub-rounds are FUSED per iteration into one
-lazy plan (see _local_move) and each block's output is truncated via a
-parquet-round-trip scratch snapshot (same discipline as plans/pregel —
-chained localCheckpoint is 10× slower here, see its module doc #1).
+lazy plan (see _local_move) and each block's output is truncated through
+the size-gated ``Scratch`` of plans/loop_state.py (the Pregel driver's
+truncation).
 """
 
 from __future__ import annotations
@@ -59,19 +59,14 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, functions as F
 
 from graph_data_science_spark.graph import Graph
+from graph_data_science_spark.plans.loop_state import Scratch
 from graph_data_science_spark.plans.partitioning import shuffle_hash
 
 # edge-weight mass (m = Σw/2 ≈ edge count unweighted) above which fused
 # sub-round chains disable AQE during scratch writes — below it AQE's
-# partition coalescing is worth 3× at local scale (_Scratch docstring);
-# above it static ReuseExchange dedup wins (docs/SCALE_NOTES.md §11)
+# partition coalescing is worth 3× at local scale (loop_state.Scratch
+# docstring); above it static ReuseExchange dedup wins (SCALE_NOTES §11)
 _AQE_OFF_MIN_M = float(os.environ.get("SPARK_GRAFT_AQE_OFF_MIN_M", "2000000"))
-
-# stream row count below which _Scratch auto mode truncates in memory
-# instead of via parquet round-trip — the same 1M-row gate (and the same
-# reasoning) as plans/pregel._AQE_OFF_MIN_ROWS: small states are job-floor
-# bound, large states rescan faster from columnar parquet
-_MEM_TRUNC_MAX_ROWS = int(os.environ.get("SPARK_GRAFT_AQE_OFF_MIN_ROWS", "1000000"))
 
 # adjacency ROW count (mirrored, ≈ 2× edges) at or below which the remaining
 # levels finish on the driver (_local_solve) instead of paying the per-job
@@ -83,124 +78,6 @@ _MEM_TRUNC_MAX_ROWS = int(os.environ.get("SPARK_GRAFT_AQE_OFF_MIN_ROWS", "100000
 # floor — finish it locally, bit-identically. 0 disables.
 _LOCAL_FINISH_MAX_ROWS = int(
     os.environ.get("SPARK_GRAFT_LOUVAIN_LOCAL_MAX", "2000000"))
-
-
-class _Scratch:
-    """Per-stream loop-state truncation: parquet round-trip OR retired
-    in-memory checkpoints, SIZE-gated per truncate.
-
-    Parquet mode (the 100 TB path): two alternating slots per named stream
-    bound disk to the last two states; rescans are vectorized columnar
-    batch reads (measured 2× faster than serialized-checkpoint rescans at
-    the 8M-row north-rule scale — plans/pregel.py truncation notes).
-
-    Memory mode (below the gate): eager SERIALIZED ``localCheckpoint``
-    with the GRANDPARENT checkpoint retired per truncate — the same
-    two-states-per-stream validity window as the parquet slots (a
-    stream's previous state stays readable until the stream truncates
-    twice more), so the two modes are drop-in interchangeable. At small
-    state sizes this removes the ~0.3 s/truncate write+read floor that
-    dominates fixed sub-round schedules (measured at sf0.1: pagerank ~2×).
-
-    ``mode="auto"`` (default) picks per call: the first truncate of a
-    stream is parquet (row count unknown — the scale-safe side), then the
-    stream's own observed row count (the count rides the materializing job
-    via ``Observation`` — no extra action) gates subsequent calls at
-    ``_MEM_TRUNC_MAX_ROWS``. ``SPARK_GRAFT_TRUNCATION`` pins a mode.
-
-    ``aqe_off`` is SIZE-gated by the caller, not hardwired: disabling AQE
-    protects static ReuseExchange dedup inside fused sub-round chains
-    (docs/SCALE_NOTES.md §11), which pays off only when the per-stage data
-    is large enough that re-executed exchanges dominate. Below that, AQE's
-    partition coalescing wins outright — measured at sf0.1 (600k edges,
-    local[32]) a 2-level Louvain is 97.6 s with AQE off vs 31.8 s with AQE
-    on (3×: every 32-task stage of a ~17-sub-round schedule is scheduling
-    floor, not work), while the §11 depth-2 chain at 14M edges runs ~1.5×
-    better with AQE off."""
-
-    def __init__(self, spark, aqe_off: bool = False, mode: str | None = None):
-        import tempfile
-        self.spark = spark
-        self.dir = tempfile.mkdtemp(prefix="gds_louvain_")
-        self._n: dict[str, int] = {}
-        self.aqe_off = aqe_off
-        if mode is None:
-            mode = os.environ.get("SPARK_GRAFT_TRUNCATION", "auto")
-        if mode not in ("memory", "parquet", "auto"):
-            raise ValueError(f"unknown truncation {mode!r}")
-        self.mode = mode
-        self._rows: dict[str, int] = {}   # stream -> last observed row count
-        self._hist: dict[str, list] = {}  # stream -> live checkpoint RDDs
-
-    def truncate(self, df: DataFrame, stream: str,
-                 rows_hint: int | None = None) -> DataFrame:
-        """``rows_hint`` seeds the auto-mode gate for a stream's FIRST
-        truncate (callers using per-level stream names pass the previous
-        level's observed count); the stream's own observation takes over
-        from the second truncate on."""
-        import os
-        from pyspark.sql import Observation
-        known = self._rows.get(stream, rows_hint)
-        use_mem = self.mode == "memory" or (
-            self.mode == "auto"
-            and (known if known is not None else _MEM_TRUNC_MAX_ROWS)
-            < _MEM_TRUNC_MAX_ROWS)
-        obs = Observation()
-        df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-        rdd = None
-        if use_mem:
-            from pyspark.storagelevel import StorageLevel
-
-            from graph_data_science_spark.plans.loop_state import (
-                strip_origin_stats)
-            new = df.localCheckpoint(
-                eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
-            try:
-                rdd = new._jdf.queryExecution().analyzed().rdd()
-            except Exception:  # pragma: no cover - plan shape changed
-                pass
-            # drop carried-forward origin stats — chained checkpoints
-            # compound join-size estimates exponentially (nested Borůvka/
-            # min-label loops overflow BigInteger; loop_state.py docstring)
-            new = strip_origin_stats(new)
-        else:
-            c = self._n.get(stream, 0)
-            path = os.path.join(self.dir, f"{stream}-{c % 2}")
-            if self.aqe_off:
-                from graph_data_science_spark.plans.pregel import no_aqe
-                with no_aqe(self.spark):
-                    df.write.mode("overwrite").parquet(path)
-            else:
-                df.write.mode("overwrite").parquet(path)
-            self._n[stream] = c + 1
-            new = self.spark.read.parquet(path)
-        self._rows[stream] = int(obs.get["rows"] or 0)
-        hist = self._hist.setdefault(stream, [])
-        hist.append(rdd)
-        if len(hist) > 2:
-            old = hist.pop(0)
-            if old is not None:
-                try:
-                    old.unpersist(False)
-                except Exception:  # pragma: no cover
-                    pass
-        return new
-
-    def cleanup(self) -> None:
-        """Reclaim scratch: parquet slots AND any live memory checkpoints.
-        Same caller contract as the parquet-only version — a result that
-        must outlive the scratch is detached with its own terminal
-        ``localCheckpoint(eager=True)`` before cleanup."""
-        import shutil
-        shutil.rmtree(self.dir, ignore_errors=True)
-        for hist in self._hist.values():
-            for rdd in hist:
-                if rdd is not None:
-                    try:
-                        rdd.unpersist(False)
-                    except Exception:  # pragma: no cover
-                        pass
-        self._hist.clear()
 
 
 @dataclass
@@ -416,7 +293,7 @@ def _modularity_value(adj: DataFrame, comm: DataFrame, m: float,
 
 
 def _refine_connectivity(adj: DataFrame, comm: DataFrame,
-                         scratch: _Scratch | None = None,
+                         scratch: Scratch | None = None,
                          max_rounds: int = 50) -> DataFrame:
     """Leiden refinement, reduced to its deterministic core: split every
     community into the connected components of its induced subgraph (min-id
@@ -428,7 +305,7 @@ def _refine_connectivity(adj: DataFrame, comm: DataFrame,
     cv = comm.select(F.col("node_id").alias("dst"), F.col("comm").alias("cd"))
     own_scratch = scratch is None
     if scratch is None:
-        scratch = _Scratch(adj.sparkSession)
+        scratch = Scratch(adj.sparkSession)
     intra = (adj.where(F.col("src") != F.col("dst"))
              .join(cu, "src").join(cv, "dst")
              .where(F.col("cs") == F.col("cd"))
@@ -464,7 +341,7 @@ def _refine_connectivity(adj: DataFrame, comm: DataFrame,
 
 def _theta_refine(adj: DataFrame, orig: DataFrame, k: DataFrame, m: float,
                   gamma: float, theta: float, seed: int,
-                  scratch: _Scratch, rounds: int = 3) -> DataFrame:
+                  scratch: Scratch, rounds: int = 3) -> DataFrame:
     """θ-randomized Leiden refinement (Leiden.java:189 RefinementPhase,
     θ default LeidenBaseConfig.java:43), reduced to a bounded distributed
     pass: fragments start as SINGLETONS inside each local-move community
@@ -553,7 +430,7 @@ def modularity_optimization(
     """``gds.beta.modularityOptimization`` analog: ONE level of local moving
     (no coarsening) → (node_id, community), community = min member id."""
     spark = graph.nodes.sparkSession
-    scratch = _Scratch(spark)
+    scratch = Scratch(spark)
     try:
         adj = scratch.truncate(_adjacency(graph, weighted), "adj")
         nodes = graph.nodes.select("node_id")
@@ -569,7 +446,7 @@ def modularity_optimization(
         # same size-gated local finish as _multilevel (one level here)
         lf_max = (_LOCAL_FINISH_MAX_ROWS if local_finish_max_rows is None
                   else local_finish_max_rows)
-        adj_rows = scratch._rows.get("adj")
+        adj_rows = scratch.rows("adj")
         if (0 < lf_max and adj_rows is not None
                 and adj_rows <= lf_max
                 and nodes.count() <= lf_max):
@@ -770,12 +647,12 @@ def _multilevel(graph, max_levels, max_iterations, n_classes, weighted,
     lf_max = (_LOCAL_FINISH_MAX_ROWS if local_finish_max_rows is None
               else local_finish_max_rows)
     spark = graph.nodes.sparkSession
-    scratch = _Scratch(spark)
+    scratch = Scratch(spark)
     try:
         adj0 = scratch.truncate(_adjacency(graph, weighted), "adj0")
         nodes = graph.nodes.select("node_id")
         m = float(adj0.agg(F.sum("w")).first()[0] or 0.0) / 2.0
-        scratch.aqe_off = m >= _AQE_OFF_MIN_M  # see _Scratch docstring
+        scratch.aqe_off = m >= _AQE_OFF_MIN_M  # see Scratch docstring
         identity = nodes.select("node_id", F.col("node_id").alias("community"))
         if m == 0.0:
             return CommunityResult(identity, 0.0, 0, 0, True)
@@ -794,11 +671,11 @@ def _multilevel(graph, max_levels, max_iterations, n_classes, weighted,
             # per-job scheduling floor distributed — run them bit-identically
             # on the driver instead. Level 0 of a 100 TB graph never takes
             # this path; coarsened levels usually do.
-            adj_rows = scratch._rows.get(adj_stream)
+            adj_rows = scratch.rows(adj_stream)
             if (not refine and 0 < lf_max
                     and adj_rows is not None
                     and adj_rows <= lf_max):
-                sup_rows = (scratch._rows.get("sup") if levels > 0
+                sup_rows = (scratch.rows("sup") if levels > 0
                             else sup.count())
                 if (sup_rows is not None
                         and sup_rows <= lf_max):

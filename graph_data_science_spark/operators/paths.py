@@ -26,6 +26,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Window, functions as F
 
 from graph_data_science_spark.graph import Graph
+from graph_data_science_spark.plans.loop_state import Scratch
 from graph_data_science_spark.plans.partitioning import shuffle_hash
 from graph_data_science_spark.plans.pregel import ACTIVE_COL, Pregel
 
@@ -128,7 +129,6 @@ def shortest_paths_delta(graph: Graph, source: int, delta: float = 2.0,
         raise ValueError("delta must be > 0")
     from pyspark.sql import Observation
 
-    from graph_data_science_spark.operators.louvain import _Scratch
     spark = graph.nodes.sparkSession
     w = F.col("weight") if weighted else F.lit(1.0)
     cols = ["src", "dst"] + (["weight"] if weighted else [])
@@ -136,7 +136,7 @@ def shortest_paths_delta(graph: Graph, source: int, delta: float = 2.0,
     light = edges.where(w < F.lit(d)).persist()
     heavy = edges.where(w >= F.lit(d)).persist()
 
-    scratch = _Scratch(spark)
+    scratch = Scratch(spark)
     try:
         state = scratch.truncate(
             graph.nodes.select(
@@ -233,9 +233,7 @@ def _reconstruct_paths(res_state: DataFrame, ran_iterations: int,
     intermediate truncations go through a parquet scratch that is cleaned
     up before returning, so repeated calls (e.g. Yens' spur loop) pin no
     storage."""
-    from graph_data_science_spark.operators.louvain import _Scratch
-
-    scratch = _Scratch(res_state.sparkSession)
+    scratch = Scratch(res_state.sparkSession)
     try:
         preds = scratch.truncate(res_state.select(
             F.col("node_id").alias("_pn"), F.col("pred").alias("_pp")), "preds")
@@ -793,8 +791,9 @@ def bellman_ford(graph: Graph, source: int, weighted: bool = True,
     per dst is ``min(struct(dist+w, src))``, so pred tie-breaks to the
     smallest source id deterministically. A frontier still live after V
     rounds proves a reachable negative cycle (a shortest simple path has
-    ≤ V−1 edges); recovery is the standard pred-graph construction, all
-    set arithmetic:
+    ≤ V−1 edges); one still live when ``max_iterations`` < V stopped the
+    loop proves nothing and raises ``ValueError``. Recovery is the
+    standard pred-graph construction, all set arithmetic:
 
     - AFFECTED = the live frontier after round V;
     - pointer-doubling over pred (⌈log2 V⌉ self-joins) lands every
@@ -811,13 +810,12 @@ def bellman_ford(graph: Graph, source: int, weighted: bool = True,
     """
     import math as _math
 
-    from graph_data_science_spark.operators.louvain import _Scratch
     if weighted and not graph.has_weight():
         raise ValueError("weighted bellman_ford requires edges.weight")
     spark = graph.nodes.sparkSession
     n = graph.node_count()
     rounds = min(int(max_iterations), n) if max_iterations is not None else n
-    scratch = _Scratch(spark)
+    scratch = Scratch(spark)
     try:
         w = F.col("weight").cast("double") if weighted else F.lit(1.0)
         edges = scratch.truncate(
@@ -857,6 +855,11 @@ def bellman_ford(graph: Graph, source: int, weighted: bool = True,
             empty = spark.createDataFrame([], "cycle_id long, node_id long")
             return BellmanFordResult(
                 distances.localCheckpoint(eager=True), empty, False, ran)
+        if ran < n:
+            # a live frontier proves a cycle only after all n rounds
+            raise ValueError(
+                f"bellman_ford did not converge in {ran} iterations "
+                f"(max_iterations < node count {n})")
 
         preds = state.where(F.col("pred").isNotNull()) \
             .select("node_id", "pred")
@@ -878,7 +881,7 @@ def bellman_ford(graph: Graph, source: int, weighted: bool = True,
                     .select(F.col("pred").alias("node_id")).distinct()
                     .join(members, "node_id", "left_anti"))
             grow = scratch.truncate(grow, "grow")
-            if scratch._rows.get("grow", 0) == 0:
+            if scratch.rows("grow") == 0:
                 break
             members = scratch.truncate(members.unionByName(grow), "members")
         ce = (preds.join(members, "node_id", "left_semi")

@@ -45,7 +45,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from graph_data_science_spark.operators.louvain import _Scratch
+from graph_data_science_spark.plans.loop_state import Scratch
 
 
 @dataclass
@@ -111,7 +111,7 @@ def pq_train(
     from graph_data_science_spark.operators.embeddings import _u01
 
     spark = vecs.sparkSession
-    scratch = _Scratch(spark)
+    scratch = Scratch(spark)
     try:
         train = vecs
         if sample_fraction is not None:

@@ -34,11 +34,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from graph_data_science_spark.graph import Graph
-from graph_data_science_spark.operators.louvain import _Scratch
+from graph_data_science_spark.plans.loop_state import Scratch
 from graph_data_science_spark.plans.partitioning import shuffle_hash
 
 
-def _fixpoint_label(edges: DataFrame, nodes: DataFrame, agg, scratch: _Scratch,
+def _fixpoint_label(edges: DataFrame, nodes: DataFrame, agg, scratch: Scratch,
                     stream: str, max_rounds: int, reverse: bool = False,
                     same_label: bool = False) -> DataFrame:
     """Propagate min/max labels to fixpoint. ``agg`` ∈ {F.min, F.max}.
@@ -72,7 +72,7 @@ def _fixpoint_label(edges: DataFrame, nodes: DataFrame, agg, scratch: _Scratch,
     return lab
 
 
-def _sweep_reach(edges: DataFrame, colored: DataFrame, scratch: _Scratch,
+def _sweep_reach(edges: DataFrame, colored: DataFrame, scratch: Scratch,
                  max_rounds: int) -> DataFrame:
     """Backward reachability from each color root within its color class.
     ``colored`` = (node_id, color). Returns reached (node_id, color) rows."""
@@ -97,7 +97,7 @@ def _sweep_reach(edges: DataFrame, colored: DataFrame, scratch: _Scratch,
             .select(F.col("src").alias("node_id"), "color").distinct())
         new = cand.join(reached, ["node_id", "color"], "left_anti")
         new = scratch.truncate(new, "reachf")
-        if scratch._rows.get("reachf", 0) == 0:  # count rode the truncate
+        if scratch.rows("reachf") == 0:  # count rode the truncate
             break
         reached = scratch.truncate(reached.unionByName(new), "reach")
         frontier = new
@@ -108,7 +108,7 @@ def scc(graph: Graph, max_outer: int = 30, max_label_rounds: int = 60,
         max_trim_rounds: int = 60) -> DataFrame:
     """``gds.scc`` analog → (node_id, component), component = min member id."""
     spark = graph.nodes.sparkSession
-    scratch = _Scratch(spark)
+    scratch = Scratch(spark)
     try:
         edges = graph.edges.select("src", "dst") \
             .where(F.col("src") != F.col("dst")).distinct()
@@ -131,13 +131,13 @@ def scc(graph: Graph, max_outer: int = 30, max_label_rounds: int = 60,
                 trimmed = alive.join(keep, "node_id", "left_anti") \
                     .select("node_id", F.col("node_id").alias("component"))
                 trimmed = scratch.truncate(trimmed, "trimmed")
-                if scratch._rows.get("trimmed", 0) == 0:
+                if scratch.rows("trimmed") == 0:
                     break
                 assigned = trimmed if assigned is None else \
                     assigned.unionByName(trimmed)
                 assigned = scratch.truncate(assigned, "assigned")
                 alive = keep
-            if scratch._rows.get("keep", 0) == 0:  # alive IS last "keep"
+            if not scratch.rows("keep"):  # alive IS last "keep"
                 break
             ae = (edges
                   .join(alive.withColumnRenamed("node_id", "src"), "src", "left_semi")

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from graph_data_science_spark.graph import Graph
-from graph_data_science_spark.operators.louvain import _Scratch
+from graph_data_science_spark.plans.loop_state import Scratch
 
 
 def spanning_forest(graph: Graph, max_rounds: int = 30) -> DataFrame:
@@ -27,7 +27,7 @@ def spanning_forest(graph: Graph, max_rounds: int = 30) -> DataFrame:
     if not graph.has_weight():
         raise ValueError("spanning tree requires edges.weight")
     spark = graph.nodes.sparkSession
-    scratch = _Scratch(spark)
+    scratch = Scratch(spark)
     try:
         canon = (graph.edges.select(
             F.least("src", "dst").alias("src"),
@@ -55,7 +55,7 @@ def spanning_forest(graph: Graph, max_rounds: int = 30) -> DataFrame:
                               F.col("_e.weight").alias("weight"))
                       .distinct())
             picked = scratch.truncate(picked, "picked")
-            if scratch._rows.get("picked", 0) == 0:  # count rode truncate
+            if scratch.rows("picked") == 0:  # count rode truncate
                 break
             mst = picked if mst is None else mst.unionByName(picked).distinct()
             mst = scratch.truncate(mst, "mst")
@@ -104,7 +104,7 @@ def spanning_tree(graph: Graph, start_node: int, max_rounds: int = 30) -> DataFr
     forest = spanning_forest(graph, max_rounds)
     # component membership via the forest itself: nodes connected to start
     spark = graph.nodes.sparkSession
-    scratch = _Scratch(spark)
+    scratch = Scratch(spark)
     try:
         pe = forest.select("src", "dst").unionByName(
             forest.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
@@ -118,7 +118,7 @@ def spanning_tree(graph: Graph, start_node: int, max_rounds: int = 30) -> DataFr
                 .select(F.col("dst").alias("node_id")).distinct() \
                 .join(seen, "node_id", "left_anti")
             nxt = scratch.truncate(nxt, "frontier")
-            if scratch._rows.get("frontier", 0) == 0:  # count rode truncate
+            if scratch.rows("frontier") == 0:  # count rode truncate
                 break
             seen = scratch.truncate(seen.unionByName(nxt), "seen")
             frontier = nxt

@@ -1,32 +1,73 @@
-"""In-memory loop-state truncation for ad-hoc iterative operators.
+"""Loop-state truncation: the one implementation every iterative loop uses.
 
-The Pregel driver (plans/pregel.py) truncates each superstep's vertex state
-with an eager SERIALIZED ``localCheckpoint`` and unpersists the PREVIOUS
-superstep's checkpoint RDD once the new state is materialized — without the
-unpersist, chained localCheckpoints pin every iteration's state in storage
-memory forever (the measured 0.5 → 7.4 s/superstep degradation; pregel.py
-module doc #1, docs/SCALE_NOTES.md §2). Several operators run small ad-hoc
-loops outside the Pregel driver (k-core peeling, RWR/CNARW frontier
-sampling, random-forest level descent); this module gives them the same
-discipline without pulling in the full driver.
+An iterative DataFrame loop grows its logical plan every step and Catalyst
+re-analysis cost explodes in plan depth, so each iteration's state is
+materialized and re-read from a flat plan. Two ways to do that, chosen by
+state size at :data:`LARGE_STATE_ROWS`:
 
-Usage::
+- **memory** (below the gate): an eager SERIALIZED ``localCheckpoint`` with
+  its origin statistics stripped (:func:`strip_origin_stats`) and the state
+  two truncations back unpersisted. Without the unpersist, chained
+  localCheckpoints pin every iteration's state in storage memory forever —
+  the measured 0.5 → 7.4 s/superstep degradation (docs/SCALE_NOTES.md §2).
+  Serialized storage keeps the blocks as compact Tungsten bytes the GC scans
+  in O(#blocks), not O(#rows): the deserialized default more than doubled a
+  local[2] 57M-edge suite. Zero disk I/O — at small states this removes the
+  ~0.3 s/truncate write+read floor (measured at sf0.1: pagerank ~2×).
+- **parquet** (at or above the gate): a round-trip through two alternating
+  scratch slots per stream. Rescans are vectorized columnar batch reads
+  inside whole-stage codegen — measured 2× faster than serialized-checkpoint
+  rescans at the 57M-edge, 8M-row scale, where a row-wise checkpoint cache
+  deserializes per row.
 
-    loop = LoopState()
-    state = loop.truncate(initial_state)
-    for ...:
-        state = loop.truncate(new_state)   # old checkpoint retired here
-    return loop.detach(state)              # final state stays; bookkeeping ends
-
-``detach`` (or plain ``truncate`` of the terminal state) leaves exactly one
-checkpoint resident — the returned DataFrame's — matching the single
-terminal ``localCheckpoint`` the non-loop operators use.
+:class:`Scratch` is the size-gated, multi-stream form (the Pregel driver and
+the ad-hoc operator loops); :class:`LoopState` is the memory-only,
+single-state form the remaining ad-hoc loops use (k-core peeling,
+random-walk frontiers, forest level descent, BPE rounds).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import os
+import shutil
+import tempfile
+from contextlib import contextmanager
+
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.storagelevel import StorageLevel
+
+#: state rows at or above which a loop is scan-bound rather than
+#: job-floor-bound: truncation goes to parquet, and the Pregel driver turns
+#: AQE off and superstep fusion on (docs/SCALE_NOTES.md §11, §20)
+LARGE_STATE_ROWS = 1_000_000
+
+
+@contextmanager
+def no_aqe(spark: SparkSession, active: bool = True):
+    """Disable adaptive query execution for the queries run inside (a no-op
+    when ``active`` is False).
+
+    Fused superstep blocks reference each sub-step's output 2-5× (join side
+    + message branch). The static ``ReuseExchange`` rule dedupes those
+    references perfectly — measured per-superstep cost *falls* with block
+    depth (4.9 s → 0.83 s at depth 5 on a 2M-edge WCC step). Under AQE,
+    runtime query-stage reuse stops matching beyond depth ~2 and the chain
+    re-executes its prefix per reference: depth 6 measured ~5× the work
+    (docs/SCALE_NOTES.md §11). Below the size gate AQE's partition
+    coalescing wins outright, so callers pass ``active`` from their gate.
+
+    The flag is read per query execution, so toggling around the single
+    materializing action is safe; restored in a ``finally``."""
+    if not active:
+        yield
+        return
+    key = "spark.sql.adaptive.enabled"
+    prev = spark.conf.get(key, "true")
+    spark.conf.set(key, "false")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
 
 
 def strip_origin_stats(df: DataFrame) -> DataFrame:
@@ -61,33 +102,136 @@ def strip_origin_stats(df: DataFrame) -> DataFrame:
         return df
 
 
-class LoopState:
-    """Eager serialized localCheckpoint + retire-previous for loop state.
+def _checkpoint(df: DataFrame):
+    """Eager serialized localCheckpoint with origin stats stripped →
+    ``(state, checkpoint RDD handle)``; the handle is what a later
+    :func:`_unpersist` retires (None if the plan shape changed)."""
+    new = df.localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
+    try:
+        rdd = new._jdf.queryExecution().analyzed().rdd()
+    except Exception:  # pragma: no cover - plan shape changed
+        rdd = None
+    return strip_origin_stats(new), rdd
 
-    At most TWO iteration states are ever resident (the new one and, briefly,
-    the one being retired) — the same bound as the two-slot parquet scratch,
-    held in RAM (MEMORY_AND_DISK spills under pressure, so the bound is
-    cluster-safe). Serialized storage keeps the blocks as compact Tungsten
-    bytes the GC scans in O(#blocks), not O(#rows) (pregel.py:_mem_truncate).
-    """
+
+def _unpersist(rdd) -> None:
+    if rdd is not None:
+        try:
+            rdd.unpersist(False)
+        except Exception:  # pragma: no cover
+            pass
+
+
+class Scratch:
+    """Per-stream loop-state truncation, SIZE-gated per truncate.
+
+    Each named stream keeps a two-state validity window: a stream's
+    previous state stays readable until the stream truncates twice more
+    (two alternating parquet slots, or the grandparent checkpoint retired),
+    so the memory and parquet paths are drop-in interchangeable.
+
+    The gate is per stream: the first truncate of a stream is parquet (row
+    count unknown — the scale-safe side) unless ``rows_hint`` seeds it;
+    from then on the stream's own row count, observed in the materializing
+    job via ``Observation`` (no extra action), picks memory below
+    :data:`LARGE_STATE_ROWS` and parquet at or above it. :meth:`rows`
+    returns that count, so loops test for an empty frontier for free.
+
+    ``aqe_off`` is SIZE-gated by the caller and applies to parquet writes:
+    disabling AQE protects static ReuseExchange dedup inside fused chains
+    (:func:`no_aqe`), which pays only when re-executed exchanges dominate.
+    Below that, AQE's partition coalescing wins outright — measured at
+    sf0.1 (600k edges, local[32]) a 2-level Louvain is 97.6 s with AQE off
+    vs 31.8 s with AQE on, while a depth-2 chain at 14M edges runs ~1.5×
+    better with AQE off."""
+
+    def __init__(self, spark: SparkSession, aqe_off: bool = False):
+        self.spark = spark
+        self.aqe_off = aqe_off
+        self.dir = tempfile.mkdtemp(prefix="gds_scratch_")
+        self._n: dict[str, int] = {}      # stream -> parquet writes so far
+        self._rows: dict[str, int] = {}   # stream -> last observed row count
+        self._hist: dict[str, list] = {}  # stream -> last two (state, RDD)
+
+    def rows(self, stream: str) -> int | None:
+        """Row count of the stream's latest state (None before its first
+        truncate)."""
+        return self._rows.get(stream)
+
+    def in_memory(self, stream: str, rows_hint: int | None = None) -> bool:
+        """Whether the next truncate of ``stream`` checkpoints in memory."""
+        known = self._rows.get(stream, rows_hint)
+        return known is not None and known < LARGE_STATE_ROWS
+
+    def truncate(self, df: DataFrame, stream: str,
+                 rows_hint: int | None = None) -> DataFrame:
+        """Materialize ``df`` as the stream's new state on a flat plan.
+        ``rows_hint`` seeds the gate for a stream's FIRST truncate (callers
+        using per-level stream names pass the previous level's count)."""
+        obs = Observation()
+        df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
+        rdd = None
+        if self.in_memory(stream, rows_hint):
+            new, rdd = _checkpoint(df)
+        else:
+            c = self._n.get(stream, 0)
+            path = os.path.join(self.dir, f"{stream}-{c % 2}")
+            with no_aqe(self.spark, self.aqe_off):
+                df.write.mode("overwrite").parquet(path)
+            self._n[stream] = c + 1
+            new = self.spark.read.parquet(path)
+        self._rows[stream] = int(obs.get["rows"] or 0)
+        hist = self._hist.setdefault(stream, [])
+        hist.append((new, rdd))
+        if len(hist) > 2:
+            _unpersist(hist.pop(0)[1])
+        return new
+
+    def cleanup(self, keep: DataFrame | None = None) -> DataFrame | None:
+        """Reclaim scratch: parquet slots AND live memory checkpoints.
+
+        A result that must outlive the scratch is passed as ``keep`` and
+        returned detached: a stream's latest memory checkpoint is simply
+        left resident (no extra job); anything else — a parquet-backed state
+        — gets one terminal ``localCheckpoint(eager=True)`` before its files
+        go. The pathology is CHAINED never-unpersisted checkpoints, not one
+        terminal one."""
+        live = [e for hist in self._hist.values() for e in hist]
+        spare = next((rdd for d, rdd in live
+                      if d is keep and rdd is not None), None)
+        if keep is not None and spare is None:
+            keep = keep.localCheckpoint(eager=True)
+        shutil.rmtree(self.dir, ignore_errors=True)
+        for _, rdd in live:
+            if rdd is not spare:
+                _unpersist(rdd)
+        self._hist.clear()
+        return keep
+
+
+class LoopState:
+    """Memory-only loop state with the previous iteration retired.
+
+    Usage::
+
+        loop = LoopState()
+        state = loop.truncate(initial_state)
+        for ...:
+            state = loop.truncate(new_state)   # old checkpoint retired here
+        return loop.detach(state)              # final state stays resident
+
+    At most TWO iteration states are ever resident (the new one and,
+    briefly, the one being retired); MEMORY_AND_DISK spills under pressure,
+    so the bound is cluster-safe. ``detach`` leaves exactly one checkpoint
+    resident — the returned DataFrame's — matching the single terminal
+    ``localCheckpoint`` the non-loop operators use."""
 
     def __init__(self) -> None:
         self._prev_rdd = None
 
     def truncate(self, df: DataFrame) -> DataFrame:
-        new_df = df.localCheckpoint(
-            eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
-        rdd = None
-        try:
-            rdd = new_df._jdf.queryExecution().analyzed().rdd()
-        except Exception:  # pragma: no cover - plan shape changed
-            pass
-        new_df = strip_origin_stats(new_df)
-        if self._prev_rdd is not None:
-            try:
-                self._prev_rdd.unpersist(False)
-            except Exception:  # pragma: no cover
-                pass
+        new_df, rdd = _checkpoint(df)
+        _unpersist(self._prev_rdd)
         self._prev_rdd = rdd
         return new_df
 
@@ -101,9 +245,5 @@ class LoopState:
         """Unpersist the final iteration's blocks too — for loops whose
         result is a driver-side value (e.g. a trained model), where no
         DataFrame escapes the loop."""
-        if self._prev_rdd is not None:
-            try:
-                self._prev_rdd.unpersist(False)
-            except Exception:  # pragma: no cover
-                pass
-            self._prev_rdd = None
+        _unpersist(self._prev_rdd)
+        self._prev_rdd = None

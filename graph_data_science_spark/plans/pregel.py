@@ -11,20 +11,19 @@ Spark-specific disciplines the reference doesn't need (SURVEY §4):
 1. **Lineage control.** An iterative DataFrame loop grows the logical plan
    every step, and Catalyst re-analysis cost explodes super-linearly in plan
    depth (measured locally: a 3-join superstep chained 6 deep takes 32s to
-   *plan*). Persisting alone does NOT truncate the logical plan. Round 1
-   truncated with ``localCheckpoint``; round 2 measured chained
-   localCheckpoints degrading 0.5 → 7.4 s/superstep and switched every loop
-   to a parquet-snapshot round-trip. Round 3 root-caused the localCheckpoint
-   degradation: each eager checkpoint leaves its MEMORY_AND_DISK RDD
-   persisted FOREVER (nothing unpersists it), so a 20-superstep loop pins 20
-   copies of the vertex state — the "hidden planning state" was storage/GC
-   pressure, not Catalyst. ``truncation="memory"`` therefore
-   localCheckpoints each superstep AND unpersists the previous superstep's
-   checkpoint RDD once the new state is materialized: flat plans, no disk
-   I/O, at most two superstep states resident (the same bound as the
-   two-slot parquet scratch, in RAM instead of disk; MEMORY_AND_DISK spills
-   under pressure, so the bound is cluster-safe). ``truncation="parquet"``
-   keeps the round-2 scratch-dir behavior for comparison/debugging.
+   *plan*). Persisting alone does NOT truncate the logical plan. Each block
+   therefore ends in ``Scratch.truncate`` (plans/loop_state.py), the one
+   size-gated truncation every loop in the engine shares: the step-0 state
+   goes to parquet with AQE off (row count still unknown — the scale-safe
+   side); later blocks checkpoint in memory (serialized ``localCheckpoint``,
+   origin stats stripped, older states unpersisted) below
+   ``LARGE_STATE_ROWS`` vertex-state rows and round-trip through two
+   alternating parquet slots at or above it. The same gate turns AQE off
+   and fusion on (the ``fuse`` comment in ``Pregel.__init__``). Round 2
+   measured chained localCheckpoints degrading 0.5 → 7.4 s/superstep;
+   round 3 root-caused it to checkpoint RDDs nobody unpersisted
+   (storage/GC pressure, not Catalyst), which the retirement in
+   ``Scratch`` fixes.
 
 2. **Checkpoint / resume** (north-rule requirement; the reference has no
    mid-run checkpointing — nearest analog is its progress/task system,
@@ -34,11 +33,12 @@ Spark-specific disciplines the reference doesn't need (SURVEY §4):
    metrics record — superstep, wall_ms, active count, rows, partition count,
    per-partition row counts (the lineage record), plus algorithm-supplied
    aggregates like delta_max — is appended to ``{dir}/metrics.jsonl``.
-   Round 3: the snapshot write is ASYNCHRONOUS — the state is materialized
-   in memory first (the critical path), then a background thread writes the
-   parquet snapshot while the next superstep computes. The previous
-   superstep's in-memory state is unpersisted only after its writer thread
-   completes (the write reads from it), and at most one writer is in flight.
+   Below the size gate the snapshot write is ASYNCHRONOUS — the state is
+   materialized in memory first (the critical path), then a background
+   thread writes the snapshot while the next block computes. At most one
+   writer is in flight, and it is joined before the truncate that retires
+   the state it reads. Above the gate the block writes its snapshot
+   synchronously and continues from it.
    Durability is unchanged: resume still reads the latest _SUCCESS-marked
    snapshot; a crash mid-write just resumes one snapshot earlier.
    :func:`Pregel.resume_state` finds the latest complete snapshot so a killed
@@ -59,43 +59,14 @@ import time
 from dataclasses import dataclass, field
 from typing import Callable
 
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
+
+from graph_data_science_spark.plans import loop_state
+from graph_data_science_spark.plans.loop_state import Scratch, no_aqe
+from graph_data_science_spark.sources.table_format import (
+    DEFAULT_FORMAT, IcebergFormat)
 
 ACTIVE_COL = "_active"
-
-# vertex-state rows above which fused block writes disable AQE (see
-# Pregel._aqe_ctx and docs/SCALE_NOTES.md §11); below it AQE partition
-# coalescing wins at local scale
-_AQE_OFF_MIN_ROWS = int(os.environ.get("SPARK_GRAFT_AQE_OFF_MIN_ROWS", "1000000"))
-
-
-from contextlib import contextmanager
-
-
-@contextmanager
-def no_aqe(spark: SparkSession):
-    """Disable adaptive query execution for the queries run inside.
-
-    Fused superstep blocks reference each sub-step's output 2-5× (join side
-    + message branch). The static ``ReuseExchange`` rule dedupes those
-    references perfectly — measured per-superstep cost *falls* with block
-    depth (4.9 s → 0.83 s at depth 5 on a 2M-edge WCC step). Under AQE,
-    runtime query-stage reuse stops matching beyond depth ~2 and the chain
-    re-executes its prefix per reference: depth 6 measured ~5× the work
-    (docs/SCALE_NOTES.md §11). AQE's wins (skew join, partition coalescing)
-    matter for the one-shot relational operators, not for the fixed-layout
-    superstep loop, so the loop's materializing queries run with AQE off
-    and the session default stays on for everything else.
-
-    The flag is read per query execution, so toggling around the single
-    materializing action is safe; restored in a ``finally``."""
-    key = "spark.sql.adaptive.enabled"
-    prev = spark.conf.get(key, "true")
-    spark.conf.set(key, "false")
-    try:
-        yield
-    finally:
-        spark.conf.set(key, prev)
 
 
 class _SnapshotWriter:
@@ -146,22 +117,13 @@ class Pregel:
         checkpoint_dir: str | None = None,
         snapshot_interval: int = 1,
         extra_metrics: dict[str, Column] | None = None,
-        track_partition_rows: bool | None = None,
         manifest: dict | None = None,
-        truncation: str | None = None,
         fuse: int | None = None,
         table_format=None,
         metadata_dir: str | None = None,
     ):
         self.spark = spark
         self.max_iterations = max_iterations
-        # Run metadata (manifest.json, metrics.jsonl) is DRIVER-LOCAL
-        # filesystem by design — tiny json, written outside Spark. With the
-        # default path-based format it lives inside checkpoint_dir; a
-        # deployment whose checkpoint_dir is a catalog identifier (Iceberg)
-        # passes metadata_dir to give the metadata a real directory.
-        self.metadata_dir = metadata_dir if metadata_dir is not None \
-            else checkpoint_dir
         # Durable-snapshot format seam (sources/table_format.py): parquet
         # here (the sandbox default); a real deployment passes
         # IcebergFormat so every checkpoint snapshot is an Iceberg table
@@ -170,11 +132,19 @@ class Pregel:
         # Only DURABLE snapshots route through the seam; the per-superstep
         # scratch truncation is engine-internal perf machinery and stays
         # on raw parquet regardless of format.
-        if table_format is None:
-            from graph_data_science_spark.sources.table_format import (
-                DEFAULT_FORMAT)
-            table_format = DEFAULT_FORMAT
-        self.table_format = table_format
+        self.table_format = table_format or DEFAULT_FORMAT
+        # Run metadata (manifest.json, metrics.jsonl) is DRIVER-LOCAL
+        # filesystem by design — tiny json, written outside Spark. With the
+        # default path-based format it lives inside checkpoint_dir; a
+        # checkpoint_dir that is a catalog identifier (Iceberg) is no
+        # directory, so metadata_dir must name one.
+        if (checkpoint_dir is not None and metadata_dir is None
+                and isinstance(self.table_format, IcebergFormat)):
+            raise ValueError(
+                "IcebergFormat checkpoint_dir is a catalog identifier; "
+                "pass metadata_dir for the run's manifest and metrics")
+        self.metadata_dir = metadata_dir if metadata_dir is not None \
+            else checkpoint_dir
         # Superstep FUSION (module doc #4): run `fuse` supersteps as ONE lazy
         # Catalyst plan and materialize/truncate only at block ends. The
         # per-superstep job barrier + scratch round-trip is the engine's
@@ -214,125 +184,12 @@ class Pregel:
         #: resume validates it so a dir from a different algorithm/config is
         #: rejected instead of silently resuming incompatible state
         self.manifest = manifest or {}
-        # "parquet": scratch-dir round-trip — the columnar,
-        # vectorized-rescan truncation. MEASURED at the north-rule scale
-        # (57M edges, local[2], 6-superstep pagerank): parquet 342 s;
-        # localCheckpoint with the deserialized default storage >2× slower
-        # (suite timed out at 90 min); localCheckpoint with SERIALIZED
-        # storage 711 s — still 2× slower, because a row-wise checkpoint
-        # cache deserializes per row on rescan while the parquet scan is a
-        # vectorized columnar batch read inside whole-stage codegen.
-        # "memory": eager localCheckpoint + retire-previous — zero disk
-        # I/O, wins BELOW the size gate where the ~0.3 s/superstep write
-        # floor dominates (measured at sf0.1: pagerank ~2× faster).
-        # "auto" (default): the initial truncate is parquet (so step 0 is
-        # byte-identical to the big-scale path either way), then the loop
-        # picks memory below _AQE_OFF_MIN_ROWS state rows and parquet at or
-        # above it — the same gate that drives AQE/fusion, for the same
-        # reason: small state is floor-bound, large state is scan-bound.
-        # SPARK_GRAFT_TRUNCATION pins an explicit mode (the scale/probe
-        # scripts and the A/B harness set it deliberately).
-        if truncation is None:
-            truncation = os.environ.get("SPARK_GRAFT_TRUNCATION", "auto")
-        if truncation not in ("memory", "parquet", "auto"):
-            raise ValueError(f"unknown truncation {truncation!r}")
-        self.truncation = truncation
-        self._tmp_dir: str | None = None
-        self._slot = 0  # next scratch slot; alternates per truncation call
-        self._prev_ckpt_rdd = None  # JVM RDD handle of the previous superstep
         self._writer = None  # in-flight async snapshot writer thread
-        # per-partition lineage rows cost one extra tiny job per snapshot;
-        # default on only when checkpointing is on
-        self.track_partition_rows = (
-            checkpoint_dir is not None if track_partition_rows is None else track_partition_rows
-        )
-
-    def _scratch_truncate(self, df: DataFrame, superstep: int) -> DataFrame:
-        """Plan truncation via parquet round-trip into a temp scratch dir,
-        alternating two slots so only the last two materializations occupy
-        disk. Slots alternate by CALL, not by superstep parity: with fused
-        blocks (clipped at max_iterations / snapshot boundaries) consecutive
-        block-end supersteps can share parity, and superstep-parity slots
-        would then overwrite the very files the in-flight job is reading.
-        (truncation="parquet" path; see module doc #1.)"""
-        import tempfile
-        if self._tmp_dir is None:
-            self._tmp_dir = tempfile.mkdtemp(prefix="gds_pregel_")
-        path = os.path.join(self._tmp_dir, f"slot{self._slot}")
-        self._slot ^= 1
-        with self._aqe_ctx():
-            df.write.mode("overwrite").parquet(path)
-        return self.spark.read.parquet(path)
-
-    def _aqe_ctx(self):
-        """AQE toggle for the block-materializing action, SIZE-gated
-        (docs/SCALE_NOTES.md §11): fused chains over large state need AQE
-        off so static ReuseExchange dedups the repeated sub-plan references
-        (measured 2-3× at 2M+ nodes), but below ~1M state rows AQE's
-        partition coalescing wins outright — at sf0.1 every 32-task stage
-        is scheduling floor, and re-executed prefixes over 600k edges are
-        cheap. Defaults to OFF (the scale-safe side) until the first
-        aggregation of the run measures the state row count."""
-        from contextlib import nullcontext
-        if getattr(self, "_aqe_off", True):
-            return no_aqe(self.spark)
-        return nullcontext()
-
-    def _mem_truncate(self, df: DataFrame) -> DataFrame:
-        """Plan truncation via eager localCheckpoint: materializes the state
-        (running any attached Observation), yields a flat LogicalRDD plan with
-        zero disk I/O. The PREVIOUS superstep's checkpoint RDD is unpersisted
-        by :meth:`_retire_prev` once the new state (and any snapshot write
-        reading from the old one) is done — without that unpersist, chained
-        localCheckpoints pin every superstep's state in storage memory (the
-        measured round-2 0.5→7.4 s/superstep degradation; module doc #1).
-
-        Storage level is SERIALIZED memory-and-disk, not Spark's
-        deserialized localCheckpoint default: a multi-million-row vertex
-        state held as deserialized JVM row objects churns the old
-        generation every superstep (measured: the deserialized default
-        more than doubled the local[2] 57M-edge suite vs the round-2
-        parquet scratch); serialized blocks are compact Tungsten bytes the
-        GC scans in O(#blocks), not O(#rows).
-
-        The checkpoint's carried-forward origin statistics are STRIPPED
-        (plans/loop_state.py:strip_origin_stats): chained checkpoints
-        compound join-size estimates exponentially across supersteps,
-        overflowing BigInteger in nested loops and slowing planning long
-        before that."""
-        from pyspark.storagelevel import StorageLevel
-
-        from graph_data_science_spark.plans.loop_state import strip_origin_stats
-        with self._aqe_ctx():
-            new_df = df.localCheckpoint(
-                eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
-        analyzed = new_df._jdf.queryExecution().analyzed()
-        try:
-            rdd = analyzed.rdd()  # LogicalRDD's underlying checkpointed RDD
-        except Exception:  # pragma: no cover - plan shape changed
-            rdd = None
-        return strip_origin_stats(new_df), rdd
-
-    def _retire_prev(self, new_rdd) -> None:
-        """Unpersist the previous superstep's checkpoint RDD and remember the
-        new one. Called only when nothing references the old state anymore."""
-        if self._prev_ckpt_rdd is not None:
-            try:
-                self._prev_ckpt_rdd.unpersist(False)
-            except Exception:  # pragma: no cover
-                pass
-        self._prev_ckpt_rdd = new_rdd
 
     def _join_writer(self) -> None:
         if self._writer is not None:
             self._writer.join()
             self._writer = None
-
-    def _cleanup_scratch(self) -> None:
-        if self._tmp_dir is not None:
-            import shutil
-            shutil.rmtree(self._tmp_dir, ignore_errors=True)
-            self._tmp_dir = None
 
     # -- checkpoint layout ---------------------------------------------------
     # All state targets are composed through TableFormat.child — never by
@@ -392,17 +249,13 @@ class Pregel:
                                        self.table_format.child(root, d))
 
     def _reset_dir(self) -> None:
-        """Fresh (non-resume) run into an existing dir: clear prior state and
-        metrics so snapshots/metrics of different runs never interleave."""
-        root = self._state_root()
-        for d in self.table_format.list_children(
-                self.spark, root, complete_only=False):
-            self.table_format.drop(self.spark,
-                                   self.table_format.child(root, d))
-        self.table_format.drop(self.spark, root)
-        for f in (self._metrics_path(),):
-            if os.path.exists(f):
-                os.remove(f)
+        """Fresh (non-resume) run into an existing dir: clear prior snapshots
+        and metrics so those of different runs never interleave. Only
+        children that parse as snapshots are dropped — an identifier-based
+        format lists every ``<tbl>_…`` table under the root's prefix."""
+        self._prune_above(-1)
+        if os.path.exists(self._metrics_path()):
+            os.remove(self._metrics_path())
 
     def latest_snapshot(self) -> int | None:
         """Highest superstep with a complete/committed snapshot."""
@@ -475,140 +328,119 @@ class Pregel:
             if resumed is not None:
                 state, start_step = resumed
                 self._prune_above(start_step - 1)
-        # truncate the incoming plan too — step 0 should start from a flat
-        # scan. "auto" starts on scratch (byte-identical to the big-scale
-        # path) and picks the loop mode once rows0 is known below.
-        state_on_scratch = False
-        if self.truncation == "memory":
-            state, rdd0 = self._mem_truncate(state)
-            self._retire_prev(rdd0)
-        else:
-            state = self._scratch_truncate(state, -1)
-            state_on_scratch = True
-        first = state.agg(
-            F.sum(F.col(ACTIVE_COL).cast("long")).alias("a"),
-            F.count(F.lit(1)).alias("r")).first()
-        active = first["a"] or 0
-        # size gate for _aqe_ctx, fusion AND auto-truncation (state rows
-        # ride the agg we already run): below the threshold AQE stays on,
-        # fusion stays off, and truncation goes in-memory — as a package —
-        # see the __init__ fuse/truncation comments
-        rows0 = int(first["r"] or 0)
-        self._aqe_off = rows0 >= _AQE_OFF_MIN_ROWS
-        fuse_eff = self.fuse if (self._fuse_explicit
-                                 or rows0 >= _AQE_OFF_MIN_ROWS) else 1
-        if self.truncation == "auto":
-            trunc_eff = "parquet" if rows0 >= _AQE_OFF_MIN_ROWS else "memory"
-        else:
-            trunc_eff = self.truncation
-        converged = active == 0
+        # truncate the incoming plan too — step 0 starts from a flat scan.
+        # The stream is new, so Scratch writes it to parquet with AQE off
+        # (size still unknown — the scale-safe side); the same job observes
+        # the state's row count and activity.
+        scratch = Scratch(self.spark, aqe_off=True)
+        try:
+            obs0 = Observation()
+            state = scratch.truncate(state.observe(
+                obs0, F.sum(F.col(ACTIVE_COL).cast("long")).alias("a")),
+                "state")
+            active = obs0.get["a"] or 0
+            # size gate: below LARGE_STATE_ROWS AQE stays on, fusion stays
+            # off and blocks truncate in memory — as a package — see the
+            # __init__ fuse comment and module doc #1
+            large = scratch.rows("state") >= loop_state.LARGE_STATE_ROWS
+            scratch.aqe_off = large
+            fuse_eff = self.fuse if (self._fuse_explicit or large) else 1
+            converged = active == 0
 
-        from pyspark.sql import Observation
-
-        superstep = start_step
-        while not converged and superstep < self.max_iterations:
-            t0 = time.monotonic()
-            # block size: fuse, clipped to max_iterations and to the next
-            # snapshot boundary (snapshots must land at exactly the same
-            # supersteps as an unfused run, so resume points are identical)
-            block = min(fuse_eff, self.max_iterations - superstep)
-            if self.checkpoint_dir:
-                to_boundary = self.snapshot_interval - (
-                    superstep % self.snapshot_interval)
-                block = min(block, to_boundary)
-            new_state = state
-            for j in range(block):
-                new_state = step_fn(new_state, superstep + j)
-            block_end = superstep + block - 1
-            # fold the convergence/metrics aggregation INTO the materializing
-            # job (Observation API): one Spark job per block where
-            # round 1 ran two per superstep (materialize + separate agg)
-            obs = Observation(f"superstep_{block_end}")
-            aggs = [
-                F.sum(F.col(ACTIVE_COL).cast("long")).alias("active"),
-                F.count(F.lit(1)).alias("rows"),
-            ] + [expr.alias(name) for name, expr in self.extra_metrics.items()]
-            new_state = new_state.observe(obs, *aggs)
-            do_snapshot = self.checkpoint_dir and (block_end + 1) % self.snapshot_interval == 0
-            new_rdd = None
-            snap_id = None
-            if trunc_eff == "memory":
-                # critical path: in-memory materialization only; any snapshot
-                # write overlaps the NEXT superstep (module doc #2)
-                new_state, new_rdd = self._mem_truncate(new_state)
-                state_on_scratch = False
-            elif do_snapshot:
-                # sync durable snapshot (truncation="parquet" legacy path)
-                # via the table-format seam
-                with self._aqe_ctx():
-                    self.table_format.write(
-                        new_state, self._state_path(block_end))
-                new_state = self.table_format.read(
-                    self.spark, self._state_path(block_end))
-                state_on_scratch = True
-                # formats with table versioning (Iceberg) contribute their
-                # commit id to the lineage record — the north rule's
-                # "snapshots with per-partition lineage"; parquet says None
-                snap_id = self.table_format.snapshot_id(
-                    self.spark, self._state_path(block_end))
-            else:
-                new_state = self._scratch_truncate(new_state, block_end)
-                state_on_scratch = True
-            row = dict(obs.get)
-            wall_ms = (time.monotonic() - t0) * 1000.0
-            if trunc_eff == "memory":
-                # the in-flight writer (if any) reads the PREVIOUS state —
-                # wait for it before unpersisting that state
+            superstep = start_step
+            while not converged and superstep < self.max_iterations:
+                t0 = time.monotonic()
+                # block size: fuse, clipped to max_iterations and to the next
+                # snapshot boundary (snapshots must land at exactly the same
+                # supersteps as an unfused run, so resume points are identical)
+                block = min(fuse_eff, self.max_iterations - superstep)
+                if self.checkpoint_dir:
+                    to_boundary = self.snapshot_interval - (
+                        superstep % self.snapshot_interval)
+                    block = min(block, to_boundary)
+                new_state = state
+                for j in range(block):
+                    new_state = step_fn(new_state, superstep + j)
+                block_end = superstep + block - 1
+                # fold the convergence/metrics aggregation INTO the
+                # materializing job (Observation API): one Spark job per
+                # block where round 1 ran two per superstep
+                obs = Observation(f"superstep_{block_end}")
+                aggs = [
+                    F.sum(F.col(ACTIVE_COL).cast("long")).alias("active"),
+                    F.count(F.lit(1)).alias("rows"),
+                ] + [expr.alias(name) for name, expr in self.extra_metrics.items()]
+                new_state = new_state.observe(obs, *aggs)
+                do_snapshot = self.checkpoint_dir and (block_end + 1) % self.snapshot_interval == 0
+                sync_snapshot = do_snapshot and not scratch.in_memory("state")
+                snap_id = None
+                if sync_snapshot:
+                    # above the gate the durable snapshot IS the truncation:
+                    # write it through the table-format seam, continue from it
+                    with no_aqe(self.spark, scratch.aqe_off):
+                        self.table_format.write(
+                            new_state, self._state_path(block_end))
+                    new_state = self.table_format.read(
+                        self.spark, self._state_path(block_end))
+                    # formats with table versioning (Iceberg) contribute
+                    # their commit id to the lineage record — the north
+                    # rule's "snapshots with per-partition lineage"; parquet
+                    # says None
+                    snap_id = self.table_format.snapshot_id(
+                        self.spark, self._state_path(block_end))
+                else:
+                    new_state = scratch.truncate(new_state, "state")
+                row = dict(obs.get)
+                wall_ms = (time.monotonic() - t0) * 1000.0
+                # the in-flight writer (if any) reads the previous state,
+                # which the NEXT truncate retires — wait for it here
                 self._join_writer()
-                self._retire_prev(new_rdd)
-                if do_snapshot:
+                if do_snapshot and not sync_snapshot:
+                    # below the gate the snapshot write overlaps the next
+                    # block (module doc #2)
                     self._writer = _SnapshotWriter(
                         new_state, self._state_path(block_end),
                         fmt=self.table_format)
                     self._writer.start()
-            active = row.pop("active") or 0
-            rec = {
-                "superstep": block_end,
-                "fused": block,
-                "wall_ms": round(wall_ms, 3),
-                "active": int(active),
-                "rows": int(row.pop("rows")),
-                **{k: (float(v) if v is not None else None) for k, v in row.items()},
-            }
-            if self.checkpoint_dir:
-                # .rdd conversion is not free — only pay for it when the
-                # metrics are actually recorded as the lineage record
-                rec["num_partitions"] = new_state.rdd.getNumPartitions()
-            if snap_id is not None:
-                rec["snapshot_id"] = snap_id
-            if do_snapshot and self.track_partition_rows:
-                parts = (
-                    new_state.groupBy(F.spark_partition_id().alias("pid"))
-                    .count().orderBy("pid").collect()
-                )
-                rec["partition_rows"] = {int(r["pid"]): int(r["count"]) for r in parts}
-            state = new_state
-            converged = active == 0
-            if self.checkpoint_dir:
-                os.makedirs(self.metadata_dir, exist_ok=True)
-                with open(self._metrics_path(), "a") as fh:
-                    fh.write(json.dumps(rec) + "\n")
-            metrics.append(rec)
-            from graph_data_science_spark import progress as _progress
-            _progress.update(self._progress_task, block_end + 1)
-            superstep += block
+                active = row.pop("active") or 0
+                rec = {
+                    "superstep": block_end,
+                    "fused": block,
+                    "wall_ms": round(wall_ms, 3),
+                    "active": int(active),
+                    "rows": int(row.pop("rows")),
+                    **{k: (float(v) if v is not None else None) for k, v in row.items()},
+                }
+                if self.checkpoint_dir:
+                    # .rdd conversion is not free — only pay for it when the
+                    # metrics are actually recorded as the lineage record
+                    rec["num_partitions"] = new_state.rdd.getNumPartitions()
+                if snap_id is not None:
+                    rec["snapshot_id"] = snap_id
+                if do_snapshot:
+                    # per-partition lineage rows: one tiny job per snapshot
+                    parts = (
+                        new_state.groupBy(F.spark_partition_id().alias("pid"))
+                        .count().orderBy("pid").collect()
+                    )
+                    rec["partition_rows"] = {int(r["pid"]): int(r["count"]) for r in parts}
+                state = new_state
+                converged = active == 0
+                if self.checkpoint_dir:
+                    os.makedirs(self.metadata_dir, exist_ok=True)
+                    with open(self._metrics_path(), "a") as fh:
+                        fh.write(json.dumps(rec) + "\n")
+                metrics.append(rec)
+                from graph_data_science_spark import progress as _progress
+                _progress.update(self._progress_task, block_end + 1)
+                superstep += block
 
-        # drain the in-flight snapshot writer (memory mode) before returning
-        self._join_writer()
-        if self._tmp_dir is not None:
-            # detach the returned state from the scratch dir (one terminal
-            # localCheckpoint is fine — the pathology is CHAINED never-
-            # unpersisted ones), then reclaim the per-superstep snapshots.
-            # A memory-truncated final state is already detached — the
-            # scratch dir only backs auto mode's step-0 truncate then.
-            if state_on_scratch:
-                state = state.localCheckpoint(eager=True)
-            self._cleanup_scratch()
+            # drain the in-flight snapshot writer, then keep the returned
+            # state resident while the scratch goes
+            self._join_writer()
+            state = scratch.cleanup(keep=state)
+        finally:
+            scratch.cleanup()
         return PregelResult(
             state=state,
             ran_iterations=superstep - start_step,

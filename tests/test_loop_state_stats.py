@@ -7,14 +7,35 @@ rounds × min-label inner rounds, operators/spanning.py) overflowed
 BigInteger's 2^31-bit cap ("BigInteger would overflow supported range")
 and spent planning time on multi-million-bit BigInt arithmetic well before
 that. strip_origin_stats (plans/loop_state.py) re-wraps the checkpointed
-RDD without the origin stats; these tests pin the invariant for all three
-truncation mechanisms (LoopState, louvain._Scratch memory mode, Pregel
-memory mode).
+RDD without the origin stats; these tests pin the invariant for every
+in-memory truncation path (LoopState, the Scratch memory path, and the
+Pregel driver, which truncates through Scratch). The memory path is forced
+by raising the size gate, loop_state.LARGE_STATE_ROWS.
 """
+
+import pytest
 
 from pyspark.sql import functions as F
 
-from graph_data_science_spark.plans.loop_state import LoopState, strip_origin_stats
+from graph_data_science_spark.plans import loop_state
+from graph_data_science_spark.plans.loop_state import (
+    LoopState, Scratch, strip_origin_stats)
+
+
+@pytest.fixture
+def memory_gate(monkeypatch):
+    """Every known-size stream truncates in memory; returns the list the
+    memory checkpoints are counted in."""
+    monkeypatch.setattr(loop_state, "LARGE_STATE_ROWS", 10 ** 12)
+    calls = []
+    real = loop_state._checkpoint
+
+    def counting(df):
+        calls.append(df)
+        return real(df)
+
+    monkeypatch.setattr(loop_state, "_checkpoint", counting)
+    return calls
 
 
 def _stats_bits(df) -> int:
@@ -59,23 +80,22 @@ def test_loop_state_truncate_keeps_stats_flat(spark):
     loop.detach(state)
 
 
-def test_scratch_memory_mode_keeps_stats_flat(spark):
-    from graph_data_science_spark.operators.louvain import _Scratch
-
-    scratch = _Scratch(spark, mode="memory")
+def test_scratch_memory_mode_keeps_stats_flat(spark, memory_gate):
+    scratch = Scratch(spark)
     try:
         df = spark.range(150).select(
             F.col("id").alias("node_id"), F.col("id").alias("comp"))
-        state = scratch.truncate(df, "comp")
+        state = scratch.truncate(df, "comp")  # unknown size: parquet
         for _ in range(40):
             state = scratch.truncate(_self_join_step(state), "comp")
             assert _stats_bits(state) <= 64
         assert state.count() == 150
+        assert len(memory_gate) == 40
     finally:
         scratch.cleanup()
 
 
-def test_pregel_memory_mode_keeps_stats_flat(spark):
+def test_pregel_memory_mode_keeps_stats_flat(spark, memory_gate):
     from graph_data_science_spark.plans.pregel import Pregel
 
     df = spark.range(120).select(
@@ -95,6 +115,8 @@ def test_pregel_memory_mode_keeps_stats_flat(spark):
             )
         )
 
-    res = Pregel(spark, max_iterations=30, truncation="memory", fuse=1).run(df, step)
+    res = Pregel(spark, max_iterations=30, fuse=1).run(df, step)
     assert res.state.count() == 120
     assert _stats_bits(res.state) <= 64
+    # step 0 went to parquet; every block after it checkpointed in memory
+    assert len(memory_gate) == len(res.metrics) == 30

@@ -215,3 +215,17 @@ def test_bellman_ford_unreachable_cycle_not_reported(spark):
     assert res.negative_cycles.count() == 0
     d = {r["node_id"]: r["distance"] for r in res.distances.collect()}
     assert d[1] == 1.0 and d[5] == float("inf")
+
+
+def test_bellman_ford_iteration_cap_is_not_a_cycle(spark):
+    from graph_data_science_spark.operators.paths import bellman_ford
+
+    # cycle-free chain 0->1->2->3->4: after 2 rounds the frontier is still
+    # live only because the cap cut the loop short, not because of a cycle
+    edges = edges_from_tuples(
+        spark, [(i, i + 1, 1.0) for i in range(4)], weighted=True)
+    g = graph_from_edges(spark, edges)
+    with pytest.raises(ValueError, match="did not converge"):
+        bellman_ford(g, 0, max_iterations=2)
+    # the same graph with enough rounds converges without a cycle
+    assert bellman_ford(g, 0, max_iterations=5).contains_negative_cycle is False

@@ -167,3 +167,37 @@ def test_pregel_enumeration_is_format_pluggable(spark, tmp_path):
                    manifest={"algorithm": "enum_test"})
     fresh._reset_dir()
     assert Spy.dropped >= 1 and fresh.latest_snapshot() is None
+
+
+def test_pregel_reset_drops_only_snapshots(spark, tmp_path):
+    """An identifier-based format lists every ``<tbl>_…`` table under the
+    state root's prefix; a fresh run must drop only the snapshots."""
+    from graph_data_science_spark.plans.pregel import Pregel
+
+    class Listing(ParquetFormat):
+        def __init__(self):
+            self.dropped = []
+
+        def list_children(self, s, target, complete_only=True):
+            return ["superstep_00001", "backup"]
+
+        def drop(self, s, target):
+            self.dropped.append(target)
+
+    fmt = Listing()
+    driver = Pregel(spark, checkpoint_dir=str(tmp_path / "ck"),
+                    table_format=fmt)
+    driver._reset_dir()
+    assert fmt.dropped == [fmt.child(driver._state_root(), "superstep_00001")]
+
+
+def test_iceberg_checkpoint_requires_metadata_dir(spark, tmp_path):
+    """An Iceberg checkpoint_dir is a catalog identifier, not a directory:
+    run metadata needs an explicit metadata_dir (no runtime needed)."""
+    from graph_data_science_spark.plans.pregel import Pregel
+
+    with pytest.raises(ValueError, match="metadata_dir"):
+        Pregel(spark, checkpoint_dir="cat.db.run", table_format=IcebergFormat())
+    driver = Pregel(spark, checkpoint_dir="cat.db.run",
+                    table_format=IcebergFormat(), metadata_dir=str(tmp_path))
+    assert driver.metadata_dir == str(tmp_path)

@@ -1,4 +1,5 @@
-"""WCC against the reference's doc fixture goldens (FIXTURES.md F3)."""
+"""WCC against the reference's doc fixture goldens (FIXTURES.md F3), plus
+the Pregel size gate's fusion switch on a small chain."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -72,7 +73,7 @@ def test_fusion_gates_off_below_row_threshold(spark):
     restore fuse=3 blocks on the same input. Results identical either way."""
     from graph_data_science_spark.graph import edges_from_tuples, graph_from_edges
     from graph_data_science_spark.operators.wcc import wcc
-    from graph_data_science_spark.plans import pregel as pregel_mod
+    from graph_data_science_spark.plans import loop_state
 
     # chain of 12 nodes: WCC needs several supersteps
     edges = edges_from_tuples(spark, [(i, i + 1) for i in range(11)])
@@ -81,12 +82,12 @@ def test_fusion_gates_off_below_row_threshold(spark):
     small = wcc(g)
     assert all(m["fused"] == 1 for m in small.metrics), small.metrics
 
-    old = pregel_mod._AQE_OFF_MIN_ROWS
-    pregel_mod._AQE_OFF_MIN_ROWS = 1  # force "large" classification
+    old = loop_state.LARGE_STATE_ROWS
+    loop_state.LARGE_STATE_ROWS = 1  # force "large" classification
     try:
         forced = wcc(g)
     finally:
-        pregel_mod._AQE_OFF_MIN_ROWS = old
+        loop_state.LARGE_STATE_ROWS = old
     assert any(m["fused"] > 1 for m in forced.metrics), forced.metrics
 
     a = {r["node_id"]: r["component"] for r in small.components.collect()}
