@@ -46,6 +46,19 @@ def _agg_weight(agg: str):
     }[agg]
 
 
+def canonical_edges(edges: DataFrame) -> DataFrame:
+    """Raw ``(src, dst)`` rows → distinct simple undirected edges,
+    canonicalized to ``src < dst`` (self-loops dropped).
+
+    The triangle kernels' required input, batch and incremental alike —
+    mirrors the reference's A<B<C ordered emission
+    (algo/.../triangle/intersect/GraphIntersect.java:52-170).
+    """
+    return (edges.select(F.least("src", "dst").alias("src"),
+                         F.greatest("src", "dst").alias("dst"))
+            .where(F.col("src") != F.col("dst")).distinct())
+
+
 @dataclass
 class Graph:
     """Immutable algorithm-facing graph view (nodes + edges DataFrames)."""
@@ -141,15 +154,8 @@ class Graph:
                        _edge_count=None)
 
     def canonical_undirected_edges(self) -> DataFrame:
-        """Distinct edges canonicalized to ``src < dst`` (self-loops dropped).
-
-        The triangle kernel's required input — mirrors the reference's
-        A<B<C ordered emission (algo/.../triangle/intersect/GraphIntersect.java:52-170).
-        """
-        e = self.edges.select(
-            F.least("src", "dst").alias("src"), F.greatest("src", "dst").alias("dst")
-        ).where(F.col("src") != F.col("dst"))
-        return e.distinct()
+        """:func:`canonical_edges` of this graph's edges."""
+        return canonical_edges(self.edges)
 
     # -- degrees -----------------------------------------------------------
     def degrees(self, direction: str = "out", weighted: bool = False) -> DataFrame:

@@ -30,8 +30,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-import os
-
 from graph_data_science_spark.graph import Graph
 from graph_data_science_spark.plans.loop_state import Scratch
 from graph_data_science_spark.plans.partitioning import shuffle_hash
@@ -42,7 +40,7 @@ from graph_data_science_spark.plans.partitioning import shuffle_hash
 # shuffle); above it, the scale posture (SHUFFLE_HASH against the cached
 # edge partitioning) applies. Same spirit as AQE's runtime re-plan, but
 # driven by exact counts instead of size estimates.
-_BCAST_MAX_ROWS = int(os.environ.get("SPARK_GRAFT_BCAST_MAX_ROWS", "1000000"))
+_BCAST_MAX_ROWS = 1_000_000
 
 
 def _loop_edges(graph: Graph, scratch: Scratch) -> DataFrame:

@@ -66,7 +66,7 @@ from graph_data_science_spark.plans.partitioning import shuffle_hash
 # sub-round chains disable AQE during scratch writes — below it AQE's
 # partition coalescing is worth 3× at local scale (loop_state.Scratch
 # docstring); above it static ReuseExchange dedup wins (SCALE_NOTES §11)
-_AQE_OFF_MIN_M = float(os.environ.get("SPARK_GRAFT_AQE_OFF_MIN_M", "2000000"))
+_AQE_OFF_MIN_M = 2_000_000.0
 
 # adjacency ROW count (mirrored, ≈ 2× edges) at or below which the remaining
 # levels finish on the driver (_local_solve) instead of paying the per-job
@@ -76,8 +76,7 @@ _AQE_OFF_MIN_M = float(os.environ.get("SPARK_GRAFT_AQE_OFF_MIN_M", "2000000"))
 # supernode graph by orders of magnitude, and once it fits in driver memory
 # (~2M rows ≈ 50 MB Arrow) the fixed sub-round schedule is pure scheduling
 # floor — finish it locally, bit-identically. 0 disables.
-_LOCAL_FINISH_MAX_ROWS = int(
-    os.environ.get("SPARK_GRAFT_LOUVAIN_LOCAL_MAX", "2000000"))
+_LOCAL_FINISH_MAX_ROWS = 2_000_000
 
 
 @dataclass

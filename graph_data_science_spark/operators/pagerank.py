@@ -27,6 +27,14 @@ AQE skew-join splits hub sources) + one partial-aggregated shuffle sum on dst
 (optionally salted two-level via ``skew_salt``) + one join back onto state.
 State is persisted per superstep and lineage is broken periodically by the
 Pregel driver.
+
+One kernel: ``_delta_push`` runs that superstep from a prepared initial
+state. :func:`pagerank` and :func:`article_rank` seed it with α (the latter
+shifting degrees by the average degree); :func:`pagerank_incremental` seeds
+it with the warm-start residual, which can be negative — so activity and
+``delta_max`` test ``|delta|``, which equals the reference's
+``delta > tolerance`` on from-scratch runs, where deltas never go negative.
+:func:`eigenvector` keeps its own normalized recurrence.
 """
 
 from __future__ import annotations
@@ -88,9 +96,9 @@ def pagerank(
         if scaler:
             scores = apply_scaler(scores, "score", scaler)
         return PageRankResult(scores, ran, converged, metrics)
-    return _delta_push(
+    return _from_scratch(
         graph, damping_factor, tolerance, max_iterations, weighted, source_nodes,
-        scaler, checkpoint_dir, resume, skew_salt, degree_shift=0.0, mode=mode,
+        scaler, checkpoint_dir, resume, skew_salt, degree_shift=0.0,
     )
 
 
@@ -111,9 +119,50 @@ def article_rank(
     avg_degree = (
         deg.agg(F.avg("degree")).first()[0] or 0.0
     )
-    return _delta_push(
+    return _from_scratch(
         graph, damping_factor, tolerance, max_iterations, weighted, source_nodes,
-        scaler, checkpoint_dir, False, 0, degree_shift=float(avg_degree), mode="join",
+        scaler, checkpoint_dir, False, 0, degree_shift=float(avg_degree),
+    )
+
+
+def _from_scratch(
+    graph: Graph,
+    damping_factor: float,
+    tolerance: float,
+    max_iterations: int,
+    weighted: bool,
+    source_nodes: list[int] | None,
+    scaler: str | None,
+    checkpoint_dir: str | None,
+    resume: bool,
+    skew_salt: int,
+    degree_shift: float,
+) -> PageRankResult:
+    """The reference's α seed: ``rank = delta = α`` (or only on
+    ``source_nodes``), over degrees shifted by ``degree_shift``."""
+    alpha = 1.0 - damping_factor
+    if source_nodes is not None:
+        init_rank = F.when(F.col("node_id").isin([int(s) for s in source_nodes]),
+                           F.lit(alpha)).otherwise(F.lit(0.0))
+    else:
+        init_rank = F.lit(alpha)
+    state = graph.degrees("out", weighted=weighted).select(
+        "node_id",
+        (F.col("degree") + F.lit(degree_shift)).alias("degree"),
+        init_rank.alias("rank"),
+        init_rank.alias("delta"),
+        # initial superstep sends regardless of tolerance (PageRankComputation
+        # L90: `delta > tolerance || isInitialSuperstep`); zero-delta nodes
+        # would send zeros — skip them, which is message-equivalent.
+        (init_rank > 0.0).cast("int").alias(ACTIVE_COL),
+    )
+    return _delta_push(
+        _prep_edges(graph, weighted).persist(), state, damping_factor,
+        tolerance, max_iterations, weighted, scaler=scaler,
+        checkpoint_dir=checkpoint_dir, resume=resume, skew_salt=skew_salt,
+        manifest={"algorithm": "pagerank", "damping_factor": damping_factor,
+                  "tolerance": tolerance, "weighted": weighted,
+                  "source_nodes": source_nodes, "degree_shift": degree_shift},
     )
 
 
@@ -137,22 +186,18 @@ def pagerank_incremental(
 
         r_v = α + d · Σ_in prev_u / deg'_u − prev_v
 
-    restores that invariant exactly, so the unchanged superstep converges
+    restores that invariant exactly, so the shared superstep converges
     to the same fixpoint a from-scratch run reaches — but the initial
     frontier is only nodes whose residual exceeds the tolerance, i.e. the
     nodes actually touched by the edge delta (new nodes enter with
     prev = 0 → residual α + inflow). Edge DELETIONS make residuals
-    negative, so activity and convergence test ``|delta|`` — a strict
-    superset of the reference kernel's positive-delta condition
-    (PageRankComputation.java:90, which never sees negative deltas
-    because from-scratch pushes are monotone).
+    negative, which the kernel's ``|delta|`` activity test covers.
 
     At 100 TB this is the difference between re-running 20 supersteps of
     full message volume per ingest batch and pushing a frontier
     proportional to the batch's blast radius; the plan per superstep is
     identical to :func:`pagerank` (one shuffle join + one partial-agg sum
     + state join)."""
-    spark = graph.nodes.sparkSession
     alpha = 1.0 - damping_factor
     edges = _prep_edges(graph, weighted).persist()
 
@@ -190,77 +235,30 @@ def pagerank_incremental(
                  (F.col("rank") + F.col("delta")).alias("rank"), "delta",
                  (F.abs(F.col("delta")) > F.lit(tolerance))
                  .cast("int").alias(ACTIVE_COL)))
-
-    msg_val = F.col("delta") / F.col("degree")
-    if weighted:
-        msg_val = msg_val * F.col("weight")
-
-    def step(st: DataFrame, superstep: int) -> DataFrame:
-        senders = shuffle_hash(
-            st.where(F.col(ACTIVE_COL) == 1)
-            .select("node_id", "delta", "degree"))
-        raw = edges.join(senders, edges.src == senders.node_id,
-                         "inner").select(F.col("dst"), msg_val.alias("m"))
-        msgs = raw.groupBy("dst").agg(F.sum("m").alias("msg"))
-        joined = st.join(shuffle_hash(msgs), st.node_id == msgs.dst, "left")
-        new_delta = F.coalesce(
-            F.lit(damping_factor) * F.col("msg"), F.lit(0.0))
-        return joined.select(
-            st.node_id,
-            st.degree,
-            (F.col("rank") + new_delta).alias("rank"),
-            new_delta.alias("delta"),
-            (F.abs(new_delta) > F.lit(tolerance)).cast("int").alias(ACTIVE_COL),
-        )
-
-    driver = Pregel(
-        spark,
-        max_iterations=max(0, max_iterations - 1),
-        extra_metrics={"delta_max": F.max(F.abs(F.col("delta"))),
-                       "rank_sum": F.sum("rank")},
-    )
-    res = driver.run(state, step)
-    edges.unpersist()
-    return PageRankResult(
-        res.state.select("node_id", F.col("rank").alias("score")),
-        res.ran_iterations + 1, res.converged, res.metrics)
+    return _delta_push(edges, state, damping_factor, tolerance,
+                       max_iterations, weighted)
 
 
 def _delta_push(
-    graph: Graph,
+    edges: DataFrame,
+    state: DataFrame,
     damping_factor: float,
     tolerance: float,
     max_iterations: int,
     weighted: bool,
-    source_nodes: list[int] | None,
-    scaler: str | None,
-    checkpoint_dir: str | None,
-    resume: bool,
-    skew_salt: int,
-    degree_shift: float,
-    mode: str,
+    scaler: str | None = None,
+    checkpoint_dir: str | None = None,
+    resume: bool = False,
+    skew_salt: int = 0,
+    manifest: dict | None = None,
 ) -> PageRankResult:
-    spark = graph.nodes.sparkSession
-    alpha = 1.0 - damping_factor
-    edges = _prep_edges(graph, weighted).persist()
+    """The one delta-push superstep loop, from a prepared initial
+    ``state`` ``(node_id, degree, rank, delta, _active)`` over the
+    persisted ``edges`` (unpersisted here when the run ends).
 
-    deg = graph.degrees("out", weighted=weighted)
-    if source_nodes is not None:
-        init_rank = F.when(F.col("node_id").isin([int(s) for s in source_nodes]),
-                           F.lit(alpha)).otherwise(F.lit(0.0))
-    else:
-        init_rank = F.lit(alpha)
-    state = deg.select(
-        "node_id",
-        (F.col("degree") + F.lit(degree_shift)).alias("degree"),
-        init_rank.alias("rank"),
-        init_rank.alias("delta"),
-        # initial superstep sends regardless of tolerance (PageRankComputation
-        # L90: `delta > tolerance || isInitialSuperstep`); zero-delta nodes
-        # would send zeros — skip them, which is message-equivalent.
-        (init_rank > 0.0).cast("int").alias(ACTIVE_COL),
-    )
-
+    Activity and ``delta_max`` use ``|delta|``: from-scratch deltas are
+    never negative, so this is the reference's ``delta > tolerance`` there,
+    while warm starts can push negative residuals."""
     msg_val = F.col("delta") / F.col("degree")
     if weighted:
         msg_val = msg_val * F.col("weight")
@@ -282,20 +280,19 @@ def _delta_push(
             st.degree,
             (F.col("rank") + new_delta).alias("rank"),
             new_delta.alias("delta"),
-            (new_delta > F.lit(tolerance)).cast("int").alias(ACTIVE_COL),
+            (F.abs(new_delta) > F.lit(tolerance)).cast("int").alias(ACTIVE_COL),
         )
 
     # GDS counts the send-only initial superstep in maxIterations
     # (Pregel.java:172-210 runs maxIterations supersteps, the first of which
     # only sends) — so the number of message exchanges is maxIterations - 1.
     driver = Pregel(
-        spark,
+        edges.sparkSession,
         max_iterations=max(0, max_iterations - 1),
         checkpoint_dir=checkpoint_dir,
-        extra_metrics={"delta_max": F.max("delta"), "rank_sum": F.sum("rank")},
-        manifest={"algorithm": "pagerank", "damping_factor": damping_factor,
-                  "tolerance": tolerance, "weighted": weighted,
-                  "source_nodes": source_nodes, "degree_shift": degree_shift},
+        extra_metrics={"delta_max": F.max(F.abs(F.col("delta"))),
+                       "rank_sum": F.sum("rank")},
+        manifest=manifest,
     )
     res = driver.run(state, step, resume=resume)
     edges.unpersist()

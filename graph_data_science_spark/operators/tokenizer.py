@@ -94,16 +94,13 @@ def _word_table(docs: DataFrame, text_col: str) -> DataFrame:
     )
 
 
-import os
-
 #: word-table row gate for the driver-local merge loop (louvain's
 #: size-gated local-finish pattern): the merge loop's state is the
 #: DISTINCT-WORD frequency table — vocab-scale, not corpus-scale — so
 #: below this gate the whole sequential loop runs on the driver with
 #: ZERO Spark jobs per merge; above it, the distributed batched loop
-#: takes over. Override with SPARK_GRAFT_BPE_LOCAL_MAX_WORDS.
-_BPE_LOCAL_MAX_WORDS = int(os.environ.get(
-    "SPARK_GRAFT_BPE_LOCAL_MAX_WORDS", "2000000"))
+#: takes over.
+_BPE_LOCAL_MAX_WORDS = 2_000_000
 
 
 def _bpe_train_local(rows: list, n_merges: int) -> list[tuple[str, str]]:

@@ -16,7 +16,10 @@ Reference semantics (algo/src/main/java/org/neo4j/gds/triangle/):
 Spark plan (SURVEY §2.4 "ordered two-hop self-join", degree-oriented —
 the compact-forward algorithm):
 1. canonicalize undirected edges to ``src < dst``, distinct (dedup =
-   the reference's parallel-edge guard).
+   the reference's parallel-edge guard) — ``graph.canonical_edges``, the
+   one canonicalization the batch kernels, :func:`triangle_count_delta`
+   and the streaming maintainer share; degrees on that simple graph come
+   from ``_simple_degrees``.
 2. **degree orientation**: re-orient every edge to point from the
    lower-(degree, id) endpoint to the higher one. Wedge enumeration then
    happens only at each triangle's MIN-degree corner, so a hub of degree D
@@ -37,7 +40,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, functions as F
 
-from graph_data_science_spark.graph import Graph
+from graph_data_science_spark.graph import Graph, canonical_edges
 
 
 @dataclass
@@ -47,8 +50,12 @@ class TriangleCountResult:
     triangles: DataFrame  # (a, b, c) with a < b < c
 
 
-def _canonical_edges(graph: Graph) -> DataFrame:
-    return graph.canonical_undirected_edges()
+def _simple_degrees(edges: DataFrame) -> DataFrame:
+    """``(node_id, deg)`` — undirected degree over canonical simple edges
+    (nodes without edges are absent)."""
+    return (edges.select(F.col("src").alias("node_id"))
+            .unionByName(edges.select(F.col("dst").alias("node_id")))
+            .groupBy("node_id").agg(F.count(F.lit(1)).alias("deg")))
 
 
 def triangles(graph: Graph, max_degree: int | None = None) -> DataFrame:
@@ -69,26 +76,16 @@ def triangles(graph: Graph, max_degree: int | None = None) -> DataFrame:
 def _build_triangles(graph: Graph, max_degree: int | None = None):
     """(lazy triangle stream, [persisted handles to unpersist after
     materialization])."""
-    edges = _canonical_edges(graph)
-
-    # undirected degree on the deduped simple graph
-    deg = (
-        edges.select(F.col("src").alias("n"))
-        .unionByName(edges.select(F.col("dst").alias("n")))
-        .groupBy("n").agg(F.count(F.lit(1)).alias("deg"))
-    )
+    edges = graph.canonical_undirected_edges()
+    deg = _simple_degrees(edges)
     if max_degree is not None:
-        keep = deg.where(F.col("deg") <= int(max_degree)).select("n")
+        keep = deg.where(F.col("deg") <= int(max_degree)).select("node_id")
         edges = (
-            edges.join(keep.withColumnRenamed("n", "src"), "src", "left_semi")
-            .join(keep.withColumnRenamed("n", "dst"), "dst", "left_semi")
+            edges.join(keep.withColumnRenamed("node_id", "src"), "src", "left_semi")
+            .join(keep.withColumnRenamed("node_id", "dst"), "dst", "left_semi")
         )
         # degrees for orientation are recomputed on the surviving subgraph
-        deg = (
-            edges.select(F.col("src").alias("n"))
-            .unionByName(edges.select(F.col("dst").alias("n")))
-            .groupBy("n").agg(F.count(F.lit(1)).alias("deg"))
-        )
+        deg = _simple_degrees(edges)
 
     # lazy persist (materialized by the wedge join's first pass, reused by
     # the closing semi-join); the caller unpersists after checkpointing the
@@ -97,8 +94,8 @@ def _build_triangles(graph: Graph, max_degree: int | None = None):
     edges = edges.persist()
 
     # orientation key: (degree, id) — total order, hub-avoiding
-    dsrc = deg.select(F.col("n").alias("src"), F.col("deg").alias("_ds"))
-    ddst = deg.select(F.col("n").alias("dst"), F.col("deg").alias("_dd"))
+    dsrc = deg.select(F.col("node_id").alias("src"), F.col("deg").alias("_ds"))
+    ddst = deg.select(F.col("node_id").alias("dst"), F.col("deg").alias("_dd"))
     keyed = edges.join(dsrc, "src").join(ddst, "dst")
     lower_first = (F.col("_ds") < F.col("_dd")) | (
         (F.col("_ds") == F.col("_dd")) & (F.col("src") < F.col("dst"))
@@ -155,15 +152,10 @@ def triangle_count(graph: Graph, max_degree: int | None = None) -> TriangleCount
 
     base = graph.nodes.select("node_id")
     if max_degree is not None:
-        edges = _canonical_edges(graph)
-        deg = (
-            edges.select(F.col("src").alias("node_id"))
-            .unionByName(edges.select(F.col("dst").alias("node_id")))
-            .groupBy("node_id").agg(F.count(F.lit(1)).alias("_deg"))
-        )
+        deg = _simple_degrees(graph.canonical_undirected_edges())
         base = base.join(deg, "node_id", "left").select(
             "node_id",
-            (F.coalesce("_deg", F.lit(0)) > int(max_degree)).alias("_excluded"),
+            (F.coalesce("deg", F.lit(0)) > int(max_degree)).alias("_excluded"),
         )
     else:
         base = base.withColumn("_excluded", F.lit(False))
@@ -187,16 +179,11 @@ def local_clustering_coefficient(
     (LocalClusteringCoefficient.java:121-131).
     """
     tc = triangle_count(graph, max_degree=max_degree)
-    edges = _canonical_edges(graph)
-    deg = (
-        edges.select(F.col("src").alias("node_id"))
-        .unionByName(edges.select(F.col("dst").alias("node_id")))
-        .groupBy("node_id").agg(F.count(F.lit(1)).cast("double").alias("_deg"))
-    )
+    deg = _simple_degrees(graph.canonical_undirected_edges())
     joined = tc.per_node.join(deg, "node_id", "left").select(
         "node_id",
         F.col("triangles"),
-        F.coalesce("_deg", F.lit(0.0)).alias("_deg"),
+        F.coalesce("deg", F.lit(0)).cast("double").alias("_deg"),
     )
     return joined.select(
         "node_id",
@@ -207,13 +194,6 @@ def local_clustering_coefficient(
         )
         .alias("lcc"),
     )
-
-
-def canonicalize_batch(edges: DataFrame) -> DataFrame:
-    """Raw (src, dst) rows → distinct canonical ``src < dst`` simple edges."""
-    return (edges.select(F.least("src", "dst").alias("src"),
-                         F.greatest("src", "dst").alias("dst"))
-            .where(F.col("src") != F.col("dst")).distinct())
 
 
 def triangle_count_delta(old_edges: DataFrame, batch_edges: DataFrame) -> int:
@@ -240,7 +220,7 @@ def triangle_count_delta(old_edges: DataFrame, batch_edges: DataFrame) -> int:
     the batch's blast radius, never the graph. No driver-side iteration;
     the single scalar crosses to the driver.
     """
-    new_e = (canonicalize_batch(batch_edges)
+    new_e = (canonical_edges(batch_edges)
              .join(old_edges, ["src", "dst"], "left_anti")
              .localCheckpoint(eager=True))
 

@@ -28,11 +28,12 @@ Spark-specific disciplines the reference doesn't need (SURVEY §4):
 2. **Checkpoint / resume** (north-rule requirement; the reference has no
    mid-run checkpointing — nearest analog is its progress/task system,
    progress-tracking/.../TaskProgressTracker.java). With ``checkpoint_dir``
-   set, every ``snapshot_interval`` supersteps the vertex state is written to
-   ``{dir}/state/superstep=NNNNN/`` (atomic via Spark's _SUCCESS marker) and a
-   metrics record — superstep, wall_ms, active count, rows, partition count,
-   per-partition row counts (the lineage record), plus algorithm-supplied
-   aggregates like delta_max — is appended to ``{dir}/metrics.jsonl``.
+   set, every block is one superstep (no fusion) and every block snapshots:
+   the vertex state is written to ``{dir}/state/superstep=NNNNN/`` (atomic
+   via Spark's _SUCCESS marker) and a metrics record — superstep, wall_ms,
+   active count, rows, partition count, per-partition row counts (the
+   lineage record), plus algorithm-supplied aggregates like delta_max — is
+   appended to ``{dir}/metrics.jsonl``.
    Below the size gate the snapshot write is ASYNCHRONOUS — the state is
    materialized in memory first (the critical path), then a background
    thread writes the snapshot while the next block computes. At most one
@@ -115,7 +116,6 @@ class Pregel:
         spark: SparkSession,
         max_iterations: int = 20,
         checkpoint_dir: str | None = None,
-        snapshot_interval: int = 1,
         extra_metrics: dict[str, Column] | None = None,
         manifest: dict | None = None,
         fuse: int | None = None,
@@ -158,9 +158,10 @@ class Pregel:
         # makes step_fn the identity). Algorithms that STEER the next
         # superstep off the previous superstep's aggregates
         # (driver.metrics_so_far — A*, NN-descent) must pass fuse=1.
-        # Blocks never cross max_iterations or a snapshot boundary, so
-        # fixed-iteration runs execute exactly max_iterations supersteps and
-        # checkpoint cadence/resume points are unchanged.
+        # Blocks never cross max_iterations, so fixed-iteration runs execute
+        # exactly max_iterations supersteps; a checkpointed run snapshots
+        # every superstep, so its blocks are single supersteps and its
+        # resume points are those of an unfused run.
         # fuse is SIZE-gated like the AQE toggle (run(): _fuse_eff): fusion
         # amortizes the per-block job barrier, which pays only when state is
         # large enough that the barrier is small relative to a superstep's
@@ -178,7 +179,6 @@ class Pregel:
             self._fuse_explicit = True
         self.fuse = max(1, int(fuse))
         self.checkpoint_dir = checkpoint_dir
-        self.snapshot_interval = max(1, snapshot_interval)
         self.extra_metrics = extra_metrics or {}
         #: run identity (algorithm name + config) written into checkpoint_dir;
         #: resume validates it so a dir from a different algorithm/config is
@@ -350,14 +350,11 @@ class Pregel:
             superstep = start_step
             while not converged and superstep < self.max_iterations:
                 t0 = time.monotonic()
-                # block size: fuse, clipped to max_iterations and to the next
-                # snapshot boundary (snapshots must land at exactly the same
-                # supersteps as an unfused run, so resume points are identical)
-                block = min(fuse_eff, self.max_iterations - superstep)
-                if self.checkpoint_dir:
-                    to_boundary = self.snapshot_interval - (
-                        superstep % self.snapshot_interval)
-                    block = min(block, to_boundary)
+                # block size: fuse, clipped to max_iterations; a checkpointed
+                # run snapshots every superstep, so its blocks are one
+                # superstep (resume points identical to an unfused run)
+                block = 1 if self.checkpoint_dir else min(
+                    fuse_eff, self.max_iterations - superstep)
                 new_state = state
                 for j in range(block):
                     new_state = step_fn(new_state, superstep + j)
@@ -371,8 +368,8 @@ class Pregel:
                     F.count(F.lit(1)).alias("rows"),
                 ] + [expr.alias(name) for name, expr in self.extra_metrics.items()]
                 new_state = new_state.observe(obs, *aggs)
-                do_snapshot = self.checkpoint_dir and (block_end + 1) % self.snapshot_interval == 0
-                sync_snapshot = do_snapshot and not scratch.in_memory("state")
+                sync_snapshot = (self.checkpoint_dir
+                                 and not scratch.in_memory("state"))
                 snap_id = None
                 if sync_snapshot:
                     # above the gate the durable snapshot IS the truncation:
@@ -395,7 +392,7 @@ class Pregel:
                 # the in-flight writer (if any) reads the previous state,
                 # which the NEXT truncate retires — wait for it here
                 self._join_writer()
-                if do_snapshot and not sync_snapshot:
+                if self.checkpoint_dir and not sync_snapshot:
                     # below the gate the snapshot write overlaps the next
                     # block (module doc #2)
                     self._writer = _SnapshotWriter(
@@ -417,7 +414,7 @@ class Pregel:
                     rec["num_partitions"] = new_state.rdd.getNumPartitions()
                 if snap_id is not None:
                     rec["snapshot_id"] = snap_id
-                if do_snapshot:
+                if self.checkpoint_dir:
                     # per-partition lineage rows: one tiny job per snapshot
                     parts = (
                         new_state.groupBy(F.spark_partition_id().alias("pid"))

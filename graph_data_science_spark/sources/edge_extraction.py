@@ -9,9 +9,11 @@ regexes run via pandas ``str.extractall`` — no per-row Python loops, per the
 input_hint mandate).
 
 Pipeline: repos table → (src_key, ref_module) pairs → resolve module → file
-key via the definitions table (a join) → dense-id mapping (idmap) →
-``groupBy(src,dst)`` aggregation (the reference's parallel-edge Aggregation,
-core/.../loading/AdjacencyPreAggregation.java:26).
+key via the definitions table (``resolve_references``, a join) → dense-id
+mapping + ``groupBy(src,dst)`` count aggregation (``weighted_edges``; the
+reference's parallel-edge Aggregation,
+core/.../loading/AdjacencyPreAggregation.java:26). The incremental ingest
+(streaming/ingest.py) runs the same two functions per micro-batch.
 """
 
 from __future__ import annotations
@@ -81,6 +83,27 @@ def definitions_table(repos: DataFrame) -> DataFrame:
     ).distinct()
 
 
+def resolve_references(refs: DataFrame, defs: DataFrame) -> DataFrame:
+    """``(src_key, dst_key)`` — each parsed reference resolved to the file
+    that defines its module (inner join: unresolvable modules drop out).
+
+    No aggregation and no state, so the same call serves the batch
+    projection and, over a streaming ``refs``, an append-mode stream-static
+    join."""
+    return refs.join(defs, refs.ref_module == defs.module, "inner").select(
+        F.col("src_key"), F.col("def_key").alias("dst_key"))
+
+
+def weighted_edges(resolved: DataFrame, id_map: DataFrame) -> DataFrame:
+    """``(src, dst, weight)`` — resolved pairs mapped to dense ids and
+    weighted by reference COUNT (Aggregation.COUNT). Counts compose by
+    summation, which is what makes incremental deltas merge exactly to the
+    batch projection (streaming/ingest.merge_deltas)."""
+    return (map_edges_to_ids(resolved, id_map)
+            .groupBy("src", "dst")
+            .agg(F.count(F.lit(1)).cast("double").alias("weight")))
+
+
 def build_link_graph(repos: DataFrame, granularity: str = "file"):
     """Full projection: repos table → (id_map, nodes, edges) link graph.
 
@@ -90,11 +113,8 @@ def build_link_graph(repos: DataFrame, granularity: str = "file"):
 
     Returns ``(id_map, nodes, edges)`` where edges = (src, dst, weight).
     """
-    refs = extract_references(repos)
-    defs = definitions_table(repos)
-    resolved = refs.join(defs, refs.ref_module == defs.module, "inner").select(
-        F.col("src_key"), F.col("def_key").alias("dst_key")
-    )
+    resolved = resolve_references(extract_references(repos),
+                                  definitions_table(repos))
     if granularity == "repo":
         to_repo = lambda c: F.split(F.col(c), "::").getItem(0)
         resolved = resolved.select(
@@ -105,10 +125,5 @@ def build_link_graph(repos: DataFrame, granularity: str = "file"):
         keys = repos.select(F.concat_ws("::", "repo", "path").alias("orig_key"))
 
     id_map = assign_dense_ids(keys)
-    edges = (
-        map_edges_to_ids(resolved, id_map)
-        .groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).cast("double").alias("weight"))
-    )
     nodes = id_map.select("node_id", "orig_key")
-    return id_map, nodes, edges
+    return id_map, nodes, weighted_edges(resolved, id_map)

@@ -11,25 +11,32 @@ Spark-native capability a live corpus needs.
 
 Design (all append-safe — no streaming aggregation state):
 
-- ``stream_references``: ``readStream`` micro-batches flow through the SAME
-  vectorized ``mapInPandas`` parser as the batch path (one parser, two
-  execution modes — Structured Streaming supports mapInPandas natively).
-- resolution + id mapping are STREAM-STATIC inner joins against the
-  definitions table and dense id map built by the last full projection
-  (stream-static joins need no watermark). At 100 TB both sides are
-  broadcast-or-bucket joins against slowly-changing indexes.
-- per micro-batch, ``foreachBatch`` aggregates the batch's references into
-  ``(src, dst, weight)`` DELTAS and appends them to the delta directory.
-  Weights are reference COUNTS, which compose over batches by summation —
-  ``merged = deltas.groupBy(src, dst).sum(weight)`` equals the batch
-  projection exactly (verified by test). References to keys missing from
-  the static id map (files never seen by a full projection) are appended
-  to a ``pending/`` side channel instead of silently dropped; a periodic
-  full projection drains it.
+- one projection, two execution modes: ``readStream`` micro-batches flow
+  through the SAME vectorized ``mapInPandas`` parser
+  (``extract_references``) and the SAME ``resolve_references`` join as
+  the batch path (Structured Streaming supports mapInPandas natively).
+- resolution is a STREAM-STATIC inner join against the definitions table
+  built from the last full projection (stream-static joins need no
+  watermark). At 100 TB both sides are broadcast-or-bucket joins against
+  slowly-changing indexes.
+- per micro-batch, ``foreachBatch`` maps the batch's references onto the
+  static dense id map and aggregates them into ``(src, dst, weight)``
+  DELTAS with the batch projection's own ``weighted_edges``, appended to
+  the delta directory. Weights are reference COUNTS, which compose over
+  batches by summation — ``merged = deltas.groupBy(src, dst).sum(weight)``
+  equals the batch projection exactly (verified by test). References to
+  keys missing from the static id map (files never seen by a full
+  projection) are appended to a ``pending/`` side channel instead of
+  silently dropped; a periodic full projection drains it.
+
+Graph maintainers over an edge drop zone keep PageRank scores, WCC labels
+(``_run_slot_maintainer``: alternating parquet slots + a ``_latest``
+marker, replay-guarded) and the global triangle count fresh per batch.
 """
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -37,19 +44,9 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from graph_data_science_spark.sources.edge_extraction import (
     definitions_table,
     extract_references,
+    resolve_references,
+    weighted_edges,
 )
-
-
-def stream_references(repos_stream: DataFrame, defs: DataFrame) -> DataFrame:
-    """Streaming (src_key, dst_key) resolved reference pairs.
-
-    ``repos_stream`` is a streaming DataFrame with the input_hint schema
-    (repo, path, commit, lang, content); ``defs`` is the STATIC definitions
-    table from the last full projection. Pure map + stream-static inner
-    join — append-mode safe, no state store."""
-    refs = extract_references(repos_stream)
-    return refs.join(defs, refs.ref_module == defs.module, "inner").select(
-        F.col("src_key"), F.col("def_key").alias("dst_key"))
 
 
 def run_incremental_ingest(
@@ -69,12 +66,11 @@ def run_incremental_ingest(
 
     ``repos_static``/``id_map``: the definitions + dense-id indexes from
     the last full projection (static join sides)."""
-    defs = definitions_table(repos_static)
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    stream = reader.parquet(input_dir)
-    resolved = stream_references(stream, defs)
+    resolved = resolve_references(extract_references(reader.parquet(input_dir)),
+                                  definitions_table(repos_static))
 
     src_ids = id_map.select(F.col("orig_key").alias("src_key"),
                             F.col("node_id").alias("src"))
@@ -86,10 +82,7 @@ def run_incremental_ingest(
     def sink(batch: DataFrame, batch_id: int) -> None:
         b = batch.persist()
         try:
-            mapped = (b.join(src_ids, "src_key").join(dst_ids, "dst_key")
-                      .groupBy("src", "dst")
-                      .agg(F.count(F.lit(1)).cast("double").alias("weight")))
-            mapped.write.mode("append").parquet(deltas_dir)
+            weighted_edges(b, id_map).write.mode("append").parquet(deltas_dir)
             unresolved = (b.join(src_ids, "src_key", "left_anti")
                           .unionByName(b.join(dst_ids, "dst_key", "left_anti"))
                           .dropDuplicates(["src_key", "dst_key"]))
@@ -135,63 +128,33 @@ def run_streaming_pagerank(
 
     Duplicate (src, dst) arrivals collapse to one link (the unweighted
     projection's set semantics). Scores persist under
-    ``state_dir/scores-{0,1}`` (alternating slots, batch-parity —
-    reading the previous slot while writing the next is safe because the
-    slots never alias) with a ``_latest`` marker, so a later drain
-    resumes from the last converged state like the Pregel checkpoint
-    story. Returns the final ``(node_id, score)`` DataFrame.
+    ``state_dir/scores-{0,1}`` with a ``_latest`` marker
+    (``_run_slot_maintainer``), so a later drain resumes from the last
+    converged state like the Pregel checkpoint story. Returns the final
+    ``(node_id, score)`` DataFrame — empty for an empty drop zone.
 
     Batch-equivalence invariant (tested): after draining N batches the
     scores match a from-scratch :func:`pagerank` on the union of all
     batches to within the push tolerance."""
-    import json
-
-    from graph_data_science_spark.graph import Graph
+    from graph_data_science_spark.graph import graph_from_edges
     from graph_data_science_spark.operators.pagerank import (
         pagerank_incremental)
 
     edges_dir = os.path.join(state_dir, "edges")
-    marker = os.path.join(state_dir, "_latest")
 
-    def _slot(i: int) -> str:
-        return os.path.join(state_dir, f"scores-{i % 2}")
-
-    def sink(batch: DataFrame, batch_id: int) -> None:
+    def update(prev: DataFrame | None, batch: DataFrame) -> DataFrame:
+        # append-then-dedup is idempotent, so a replayed append is harmless
         batch.write.mode("append").parquet(edges_dir)
-        edges = (spark.read.parquet(edges_dir)
-                 .dropDuplicates(["src", "dst"]))
-        nodes = (edges.select(F.col("src").alias("node_id"))
-                 .unionByName(edges.select(F.col("dst").alias("node_id")))
-                 .distinct())
-        if os.path.exists(marker):
-            with open(marker) as fh:
-                prev_slot = json.load(fh)["slot"]
-            prev = spark.read.parquet(_slot(prev_slot))
-            next_slot = prev_slot + 1
-        else:
+        edges = spark.read.parquet(edges_dir).dropDuplicates(["src", "dst"])
+        if prev is None:
             prev = spark.createDataFrame([], "node_id long, score double")
-            next_slot = 0
-        res = pagerank_incremental(
-            Graph(nodes=nodes, edges=edges), prev,
+        return pagerank_incremental(
+            graph_from_edges(spark, edges), prev,
             damping_factor=damping_factor, tolerance=tolerance,
-            max_iterations=max_iterations)
-        res.scores.write.mode("overwrite").parquet(_slot(next_slot))
-        with open(marker, "w") as fh:
-            json.dump({"slot": next_slot, "batch_id": int(batch_id),
-                       "converged": bool(res.converged),
-                       "ran_iterations": int(res.ran_iterations)}, fh)
+            max_iterations=max_iterations).scores
 
-    q = (spark.readStream.schema(schema).parquet(edge_delta_dir)
-         .writeStream
-         .foreachBatch(sink)
-         .option("checkpointLocation", os.path.join(state_dir, "_checkpoint"))
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    import json as _json
-    with open(marker) as fh:
-        slot = _json.load(fh)["slot"]
-    return spark.read.parquet(_slot(slot))
+    return _run_slot_maintainer(spark, edge_delta_dir, state_dir, update,
+                                "scores", schema)
 
 
 def run_streaming_wcc(
@@ -210,49 +173,24 @@ def run_streaming_wcc(
     or re-reads the edge table at all — components only ever merge, so the
     converged ``(node_id, component)`` labels are a SUFFICIENT summary of
     every edge seen so far. Per batch it reads the label table once and the
-    batch once; state lives under ``state_dir/labels-{0,1}`` (alternating
-    slots + ``_latest`` marker, the same resume contract as the pagerank
-    maintainer). Returns the final ``(node_id, component)`` DataFrame.
+    batch once; state lives under ``state_dir/labels-{0,1}``
+    (``_run_slot_maintainer``, the same resume contract as the pagerank
+    maintainer). Returns the final ``(node_id, component)`` DataFrame —
+    empty for an empty drop zone.
 
     Batch-equivalence invariant (tested): after draining N batches the
     labels equal a from-scratch :func:`wcc` on the union of all batches,
     under ANY split of the edges into batches.
     """
-    import json
-
     from graph_data_science_spark.operators.wcc import wcc_incremental
 
-    marker = os.path.join(state_dir, "_latest")
-
-    def _slot(i: int) -> str:
-        return os.path.join(state_dir, f"labels-{i % 2}")
-
-    def sink(batch: DataFrame, batch_id: int) -> None:
-        if os.path.exists(marker):
-            with open(marker) as fh:
-                prev_slot = json.load(fh)["slot"]
-            prev = spark.read.parquet(_slot(prev_slot))
-            next_slot = prev_slot + 1
-        else:
+    def update(prev: DataFrame | None, batch: DataFrame) -> DataFrame:
+        if prev is None:
             prev = spark.createDataFrame([], "node_id long, component long")
-            next_slot = 0
-        res = wcc_incremental(prev, batch, threshold=threshold)
-        res.components.write.mode("overwrite").parquet(_slot(next_slot))
-        with open(marker, "w") as fh:
-            json.dump({"slot": next_slot, "batch_id": int(batch_id),
-                       "converged": bool(res.converged),
-                       "ran_iterations": int(res.ran_iterations)}, fh)
+        return wcc_incremental(prev, batch, threshold=threshold).components
 
-    q = (spark.readStream.schema(schema).parquet(edge_delta_dir)
-         .writeStream
-         .foreachBatch(sink)
-         .option("checkpointLocation", os.path.join(state_dir, "_checkpoint"))
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    with open(marker) as fh:
-        slot = json.load(fh)["slot"]
-    return spark.read.parquet(_slot(slot))
+    return _run_slot_maintainer(spark, edge_delta_dir, state_dir, update,
+                                "labels", schema)
 
 
 def run_streaming_triangle_count(
@@ -271,16 +209,15 @@ def run_streaming_triangle_count(
     State: ``state_dir/edges`` (canonical src<dst parquet, append-only —
     dedup is enforced by the per-batch anti-join before append) plus a
     ``_latest`` JSON marker carrying the running total and per-batch
-    deltas, the same resume contract as the pagerank/wcc maintainers.
-    Returns the final global triangle count.
+    deltas. Returns the final global triangle count — 0 for an empty drop
+    zone.
 
     Batch-equivalence invariant (tested): after draining N batches the
     total equals a from-scratch :func:`triangle_count` on the union of all
     batches, under ANY split of the edges into batches."""
-    import json
-
+    from graph_data_science_spark.graph import canonical_edges
     from graph_data_science_spark.operators.triangle import (
-        canonicalize_batch, triangle_count_delta)
+        triangle_count_delta)
 
     edges_dir = os.path.join(state_dir, "edges")
     marker = os.path.join(state_dir, "_latest")
@@ -294,8 +231,7 @@ def run_streaming_triangle_count(
             st = {"triangles": 0, "deltas": []}
             old = spark.createDataFrame([], "src long, dst long")
         delta = triangle_count_delta(old, batch)
-        new_e = (canonicalize_batch(batch)
-                 .join(old, ["src", "dst"], "left_anti"))
+        new_e = canonical_edges(batch).join(old, ["src", "dst"], "left_anti")
         new_e.write.mode("append").parquet(edges_dir)
         st["triangles"] += delta
         st["deltas"].append({"batch_id": int(batch_id), "delta": int(delta)})
@@ -309,24 +245,26 @@ def run_streaming_triangle_count(
          .trigger(availableNow=True)
          .start())
     q.awaitTermination()
-    import json as _json
+    if not os.path.exists(marker):
+        return 0
     with open(marker) as fh:
-        return int(_json.load(fh)["triangles"])
+        return int(json.load(fh)["triangles"])
 
 
 def _run_slot_maintainer(
     spark: SparkSession,
     delta_dir: str,
     state_dir: str,
-    fresh_fn,
-    merge_fn,
+    update,
     slot_prefix: str,
     schema: str,
 ) -> DataFrame:
     """Shared drop-zone maintainer: ``readStream`` → per micro-batch,
-    ``fresh_fn(batch)`` summarized and ``merge_fn(prev, fresh)``-merged
-    into alternating parquet slots + a ``_latest`` marker (the
-    pagerank/wcc maintainers' resume contract).
+    ``update(prev, batch)`` (``prev`` is the last slot's summary, or None
+    before the first batch) written to alternating parquet slots
+    ``state_dir/{slot_prefix}-{0,1}`` + a ``_latest`` marker carrying
+    ``slot`` and ``batch_id``. Reading the previous slot while writing the
+    next is safe because the slots never alias.
 
     Replay-safe for NON-idempotent merges: ``foreachBatch`` is
     at-least-once (a crash between the slot write and the stream
@@ -338,28 +276,23 @@ def _run_slot_maintainer(
     checkpoint, which lives beside the slots in ``state_dir``.
 
     An empty drop zone (zero micro-batches, no marker) returns
-    ``fresh_fn`` of an empty batch — the correctly-typed empty summary —
+    ``update(None, <empty batch>)`` — the correctly-typed empty summary —
     instead of crashing on the missing marker."""
-    import json
-
     marker = os.path.join(state_dir, "_latest")
 
     def _slot(i: int) -> str:
         return os.path.join(state_dir, f"{slot_prefix}-{i % 2}")
 
     def sink(batch: DataFrame, batch_id: int) -> None:
+        prev, next_slot = None, 0
         if os.path.exists(marker):
             with open(marker) as fh:
                 st = json.load(fh)
             if int(batch_id) <= int(st["batch_id"]):
                 return  # at-least-once replay of an already-merged batch
             prev = spark.read.parquet(_slot(st["slot"]))
-            merged = merge_fn(prev, fresh_fn(batch))
             next_slot = st["slot"] + 1
-        else:
-            merged = fresh_fn(batch)
-            next_slot = 0
-        merged.write.mode("overwrite").parquet(_slot(next_slot))
+        update(prev, batch).write.mode("overwrite").parquet(_slot(next_slot))
         with open(marker, "w") as fh:
             json.dump({"slot": next_slot, "batch_id": int(batch_id)}, fh)
 
@@ -371,7 +304,7 @@ def _run_slot_maintainer(
          .start())
     q.awaitTermination()
     if not os.path.exists(marker):
-        return fresh_fn(spark.createDataFrame([], schema))
+        return update(None, spark.createDataFrame([], schema))
     with open(marker) as fh:
         slot = json.load(fh)["slot"]
     return spark.read.parquet(_slot(slot))
@@ -404,10 +337,12 @@ def run_streaming_hll(
     from graph_data_science_spark.operators.sketches import (
         hll_merge, hll_registers)
 
-    return _run_slot_maintainer(
-        spark, doc_delta_dir, state_dir,
-        lambda b: hll_registers(b, group_col, value_col, p, seed),
-        hll_merge, "regs", schema)
+    def update(prev: DataFrame | None, batch: DataFrame) -> DataFrame:
+        regs = hll_registers(batch, group_col, value_col, p, seed)
+        return regs if prev is None else hll_merge(prev, regs)
+
+    return _run_slot_maintainer(spark, doc_delta_dir, state_dir, update,
+                                "regs", schema)
 
 
 def run_streaming_lm_counts(
@@ -438,7 +373,9 @@ def run_streaming_lm_counts(
     from graph_data_science_spark.operators.lm import (
         ngram_lm_counts, ngram_lm_merge)
 
-    return _run_slot_maintainer(
-        spark, doc_delta_dir, state_dir,
-        lambda b: ngram_lm_counts(b, n=n, text_col=text_col, id_col=id_col),
-        ngram_lm_merge, "counts", schema)
+    def update(prev: DataFrame | None, batch: DataFrame) -> DataFrame:
+        counts = ngram_lm_counts(batch, n=n, text_col=text_col, id_col=id_col)
+        return counts if prev is None else ngram_lm_merge(prev, counts)
+
+    return _run_slot_maintainer(spark, doc_delta_dir, state_dir, update,
+                                "counts", schema)

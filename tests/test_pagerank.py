@@ -153,6 +153,26 @@ def test_pagerank_incremental_matches_full_recompute(spark):
         assert abs(got[k] - full[k]) < 1e-6, (k, got[k], full[k])
 
 
+def test_pagerank_incremental_weighted_matches_full_recompute(spark):
+    from graph_data_science_spark.operators.pagerank import pagerank_incremental
+    kw = dict(damping_factor=0.5, tolerance=1e-9, max_iterations=60,
+              weighted=True)
+    g0 = build_graph(spark, F2_EDGES, F2_NODES, weighted=True)
+    prev = pagerank(g0, **kw).scores
+    # perturb: drop one edge, reweight one, add two (one to new node 99)
+    new_edges = F2_EDGES[1:] + [(0, 6, 0.5), (3, 99, 0.3)]
+    new_edges = [(a, b, 2.0 if (a, b) == (3, 0) else w)
+                 for a, b, w in new_edges]
+    g1 = build_graph(spark, new_edges, list(F2_NODES) + [99], weighted=True)
+    full = scores_dict(pagerank(g1, **kw))
+    inc = pagerank_incremental(g1, prev, **kw)
+    assert inc.converged
+    got = scores_dict(inc)
+    assert set(got) == set(full)
+    for k in full:
+        assert abs(got[k] - full[k]) < 1e-6, (k, got[k], full[k])
+
+
 def test_pagerank_incremental_cold_start_equals_reference_kernel(spark):
     from graph_data_science_spark.operators.pagerank import pagerank_incremental
     g = build_graph(spark, F1_EDGES, F1_NODES)

@@ -131,10 +131,10 @@ def _tri_graph(spark, edges):
 
 
 def test_triangle_delta_counts_each_new_triangle_once(spark):
-    from graph_data_science_spark.operators.triangle import (
-        canonicalize_batch, triangle_count_delta)
+    from graph_data_science_spark.graph import canonical_edges
+    from graph_data_science_spark.operators.triangle import triangle_count_delta
 
-    old = canonicalize_batch(
+    old = canonical_edges(
         spark.createDataFrame([(0, 1), (1, 2)], "src long, dst long")
     ).localCheckpoint(eager=True)
     # one new edge closes the old wedge → exactly 1
@@ -181,3 +181,26 @@ def test_streaming_triangle_count_matches_batch_recompute(spark, workdir):
     t3 = run_streaming_triangle_count(spark, drop, state)
     assert t3 == triangle_count(
         _tri_graph(spark, e1 + e2 + e3)).global_count == 10
+
+
+def test_graph_maintainers_on_empty_drop_zone(spark, workdir):
+    """No file has landed yet: every graph maintainer returns its empty
+    result instead of failing on the missing state marker."""
+    from graph_data_science_spark.streaming.ingest import (
+        run_streaming_pagerank, run_streaming_triangle_count,
+        run_streaming_wcc)
+
+    drop = os.path.join(workdir, "empty_drop")
+    os.makedirs(drop)
+    scores = run_streaming_pagerank(spark, drop,
+                                    os.path.join(workdir, "pr_state"))
+    labels = run_streaming_wcc(spark, drop, os.path.join(workdir, "wcc_state"))
+    assert scores.count() == 0 and labels.count() == 0
+    assert [(f.name, f.dataType.simpleString())
+            for f in scores.schema.fields] == [("node_id", "bigint"),
+                                               ("score", "double")]
+    assert [(f.name, f.dataType.simpleString())
+            for f in labels.schema.fields] == [("node_id", "bigint"),
+                                               ("component", "bigint")]
+    assert run_streaming_triangle_count(
+        spark, drop, os.path.join(workdir, "tc_state")) == 0

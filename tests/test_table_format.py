@@ -54,8 +54,7 @@ def test_pregel_snapshots_route_through_format(spark, tmp_path):
     fmt = Counting()
     ck = str(tmp_path / "ck")
     driver = Pregel(spark, max_iterations=3, checkpoint_dir=ck,
-                    snapshot_interval=1, table_format=fmt,
-                    manifest={"algorithm": "fmt_test"})
+                    table_format=fmt, manifest={"algorithm": "fmt_test"})
     state0 = spark.range(4).select(
         F.col("id").alias("node_id"), F.col("id").alias("x"),
         F.lit(1).cast("int").alias(ACTIVE_COL))
@@ -147,8 +146,7 @@ def test_pregel_enumeration_is_format_pluggable(spark, tmp_path):
     fmt = Spy()
     ck = str(tmp_path / "ck")
     driver = Pregel(spark, max_iterations=2, checkpoint_dir=ck,
-                    snapshot_interval=1, table_format=fmt,
-                    manifest={"algorithm": "enum_test"})
+                    table_format=fmt, manifest={"algorithm": "enum_test"})
     state0 = spark.range(3).select(
         F.col("id").alias("node_id"), F.col("id").alias("x"),
         F.lit(1).cast("int").alias(ACTIVE_COL))
@@ -163,8 +161,7 @@ def test_pregel_enumeration_is_format_pluggable(spark, tmp_path):
     assert driver.latest_snapshot() is not None
     assert Spy.listed >= 1
     fresh = Pregel(spark, max_iterations=2, checkpoint_dir=ck,
-                   snapshot_interval=1, table_format=fmt,
-                   manifest={"algorithm": "enum_test"})
+                   table_format=fmt, manifest={"algorithm": "enum_test"})
     fresh._reset_dir()
     assert Spy.dropped >= 1 and fresh.latest_snapshot() is None
 
