@@ -59,6 +59,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, functions as F
 
 from graph_data_science_spark.graph import Graph
+from graph_data_science_spark.operators.wcc import wcc
 from graph_data_science_spark.plans.loop_state import Scratch
 from graph_data_science_spark.plans.partitioning import shuffle_hash
 
@@ -291,51 +292,26 @@ def _modularity_value(adj: DataFrame, comm: DataFrame, m: float,
     return float(parts.agg(F.sum("q")).first()[0] or 0.0)
 
 
-def _refine_connectivity(adj: DataFrame, comm: DataFrame,
-                         scratch: Scratch | None = None,
-                         max_rounds: int = 50) -> DataFrame:
+def _refine_connectivity(adj: DataFrame, comm: DataFrame) -> DataFrame:
     """Leiden refinement, reduced to its deterministic core: split every
-    community into the connected components of its induced subgraph (min-id
-    label propagation restricted to intra-community edges). Guarantees the
-    property Leiden exists to restore — no disconnected communities
+    community into the connected components of its induced subgraph — the
+    engine's :func:`~graph_data_science_spark.operators.wcc.wcc` over the
+    intra-community edges, each community's split labelled by its minimum
+    member id (capped at 50 supersteps). Guarantees the property Leiden
+    exists to restore — no disconnected communities
     (Traag/Waltman/van Eck 2019 §2; leiden/Leiden.java refinement phase) —
     while staying deterministic (no random θ sampling)."""
     cu = comm.select(F.col("node_id").alias("src"), F.col("comm").alias("cs"))
     cv = comm.select(F.col("node_id").alias("dst"), F.col("comm").alias("cd"))
-    own_scratch = scratch is None
-    if scratch is None:
-        scratch = Scratch(adj.sparkSession)
-    intra = (adj.where(F.col("src") != F.col("dst"))
+    # adj is mirrored and wcc mirrors again: one direction suffices
+    intra = (adj.where(F.col("src") < F.col("dst"))
              .join(cu, "src").join(cv, "dst")
              .where(F.col("cs") == F.col("cd"))
              .select("src", "dst"))
-    intra = scratch.truncate(intra, "intra")
-    lab = comm.select("node_id", F.col("node_id").alias("lab"))
-    lab = scratch.truncate(lab, "lab")
-    for _ in range(max_rounds):
-        msgs = intra.join(
-            lab.select(F.col("node_id").alias("src"), F.col("lab").alias("_l")),
-            "src").groupBy(F.col("dst").alias("node_id")).agg(
-            F.min("_l").alias("_m"))
-        new = lab.join(msgs, "node_id", "left").select(
-            "node_id",
-            F.least(F.col("lab"), F.coalesce(F.col("_m"), F.col("lab"))).alias("lab"),
-            (F.least(F.col("lab"), F.coalesce(F.col("_m"), F.col("lab")))
-             < F.col("lab")).cast("int").alias("_ch"),
-        )
-        from pyspark.sql import Observation
-        obs = Observation()
-        new = new.observe(obs, F.sum("_ch").alias("ch"))
-        new = scratch.truncate(new, "lab")
-        changed = obs.get["ch"] or 0
-        lab = new.select("node_id", "lab")
-        if changed == 0:
-            break
-    out = lab.select("node_id", F.col("lab").alias("comm"))
-    if own_scratch:
-        out = out.localCheckpoint(eager=True)
-        scratch.cleanup()
-    return out
+    split = wcc(Graph(nodes=comm.select("node_id"), edges=intra),
+                max_iterations=50)
+    return split.components.select(
+        "node_id", F.col("component").alias("comm"))
 
 
 def _theta_refine(adj: DataFrame, orig: DataFrame, k: DataFrame, m: float,
@@ -726,7 +702,7 @@ def _multilevel(graph, max_levels, max_iterations, n_classes, weighted,
                     comm = _theta_refine(adj, comm, k, m, gamma, theta,
                                          seed, scratch)
                 else:
-                    comm = _refine_connectivity(adj, comm, scratch)
+                    comm = _refine_connectivity(adj, comm)
             comm = scratch.truncate(_relabel_min_member(comm), "rl")
             mapping = scratch.truncate(mapping.join(
                 comm.withColumnRenamed("node_id", "super"), "super"

@@ -23,9 +23,10 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, Observation, Window, functions as F
 
 from graph_data_science_spark.graph import Graph
+from graph_data_science_spark.operators.wcc import wcc
 from graph_data_science_spark.plans.loop_state import Scratch
 from graph_data_science_spark.plans.partitioning import shuffle_hash
 from graph_data_science_spark.plans.pregel import ACTIVE_COL, Pregel
@@ -127,7 +128,6 @@ def shortest_paths_delta(graph: Graph, source: int, delta: float = 2.0,
     d = float(delta)
     if not d > 0.0:
         raise ValueError("delta must be > 0")
-    from pyspark.sql import Observation
 
     spark = graph.nodes.sparkSession
     w = F.col("weight") if weighted else F.lit(1.0)
@@ -801,8 +801,9 @@ def bellman_ford(graph: Graph, source: int, weighted: bool = True,
       is a negative cycle);
     - pred-closure of the landed set completes each cycle (the pred of a
       cycle node is the previous cycle node);
-    - min-label propagation over the symmetrized intra-member pred edges
-      groups members; ``cycle_id`` = min member id.
+    - the engine's :func:`~graph_data_science_spark.operators.wcc.wcc`
+      over the intra-member pred edges groups members; ``cycle_id`` =
+      min member id.
 
     When a cycle is present, ``distances`` holds the (non-final) round-V
     tentative values — like the reference, routes are not meaningful in
@@ -846,8 +847,10 @@ def bellman_ford(graph: Graph, source: int, weighted: bool = True,
                 F.when(better, F.col("_c.p")).otherwise(F.col("pred"))
                 .alias("pred"),
                 F.coalesce(better.cast("int"), F.lit(0)).alias("_chg"))
-            state = scratch.truncate(state, "state")
-            live = int(state.agg(F.sum("_chg")).first()[0] or 0)
+            obs = Observation()
+            state = scratch.truncate(
+                state.observe(obs, F.sum("_chg").alias("live")), "state")
+            live = int(obs.get["live"] or 0)
             ran += 1
         distances = state.select(
             "node_id", F.col("dist").alias("distance"), "pred")
@@ -887,33 +890,14 @@ def bellman_ford(graph: Graph, source: int, weighted: bool = True,
         ce = (preds.join(members, "node_id", "left_semi")
               .join(members.select(F.col("node_id").alias("pred")),
                     "pred", "left_semi"))
-        sym = ce.select(F.col("node_id").alias("a"), F.col("pred").alias("b"))
-        sym = sym.unionByName(
-            sym.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        sym = scratch.truncate(sym, "sym")
-        lab = members.select("node_id", F.col("node_id").alias("lab"))
-        lab = scratch.truncate(lab, "lab")
-        for _ in range(n):
-            msg = (sym.join(lab.select(F.col("node_id").alias("a"), "lab"),
-                            "a")
-                   .groupBy(F.col("b").alias("node_id"))
-                   .agg(F.min("lab").alias("_m")))
-            nxt = (lab.select("node_id", F.col("lab").alias("_old"))
-                   .join(msg, "node_id", "left")
-                   .select("node_id", "_old",
-                           F.least(F.col("_old"),
-                                   F.coalesce("_m", F.col("_old")))
-                           .alias("lab")))
-            nxt = scratch.truncate(nxt, "nxt")
-            moved = int(nxt.agg(F.sum(
-                (F.col("lab") != F.col("_old")).cast("int"))).first()[0] or 0)
-            lab = scratch.truncate(nxt.select("node_id", "lab"), "lab")
-            if moved == 0:
-                break
-        cycles = lab.select(F.col("lab").alias("cycle_id"),
-                            "node_id").distinct()
+        # members form disjoint cycles of at most n nodes: n supersteps
+        # always converge
+        grouped = wcc(Graph(nodes=members, edges=ce.select(
+            F.col("node_id").alias("src"), F.col("pred").alias("dst"))),
+            max_iterations=n)
+        cycles = grouped.components.select(
+            F.col("component").alias("cycle_id"), "node_id")
         return BellmanFordResult(
-            distances.localCheckpoint(eager=True),
-            cycles.localCheckpoint(eager=True), True, ran)
+            distances.localCheckpoint(eager=True), cycles, True, ran)
     finally:
         scratch.cleanup()

@@ -31,37 +31,29 @@ truncated per round via parquet scratch snapshots (plans/pregel doc #1).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 from graph_data_science_spark.graph import Graph
 from graph_data_science_spark.plans.loop_state import Scratch
 from graph_data_science_spark.plans.partitioning import shuffle_hash
 
 
-def _fixpoint_label(edges: DataFrame, nodes: DataFrame, agg, scratch: Scratch,
-                    stream: str, max_rounds: int, reverse: bool = False,
-                    same_label: bool = False) -> DataFrame:
-    """Propagate min/max labels to fixpoint. ``agg`` ∈ {F.min, F.max}.
-    ``same_label``: only propagate across edges whose endpoints currently
-    share a label (the color-restricted backward sweep)."""
+def _fixpoint_label(edges: DataFrame, nodes: DataFrame, scratch: Scratch,
+                    stream: str, max_rounds: int) -> DataFrame:
+    """Forward max-colouring to fixpoint (phase 2 of the module doc): every
+    node's label becomes the largest id that reaches it along ``edges``, one
+    hop per round, at most ``max_rounds`` rounds. Returns (node_id, lab)."""
     lab = nodes.select("node_id", F.col("node_id").alias("lab"))
     lab = scratch.truncate(lab, stream)
-    a, b = ("dst", "src") if reverse else ("src", "dst")
     for _ in range(max_rounds):
-        sender = lab.select(F.col("node_id").alias(a), F.col("lab").alias("_l"))
-        msgs = edges.join(shuffle_hash(sender), a)
-        if same_label:
-            recv = lab.select(F.col("node_id").alias(b), F.col("lab").alias("_rl"))
-            msgs = msgs.join(shuffle_hash(recv), b).where(F.col("_l") == F.col("_rl"))
-        msgs = msgs.groupBy(F.col(b).alias("node_id")).agg(agg("_l").alias("_m"))
-        comb = (F.least if agg is F.min else F.greatest)
+        sender = lab.select(F.col("node_id").alias("src"), F.col("lab").alias("_l"))
+        msgs = (edges.join(shuffle_hash(sender), "src")
+                .groupBy(F.col("dst").alias("node_id")).agg(F.max("_l").alias("_m")))
+        new_lab = F.greatest(F.col("lab"), F.coalesce(F.col("_m"), F.col("lab")))
         new = lab.join(msgs, "node_id", "left").select(
-            "node_id",
-            comb(F.col("lab"), F.coalesce(F.col("_m"), F.col("lab"))).alias("lab"),
-            (comb(F.col("lab"), F.coalesce(F.col("_m"), F.col("lab")))
-             != F.col("lab")).cast("int").alias("_ch"),
+            "node_id", new_lab.alias("lab"),
+            (new_lab != F.col("lab")).cast("int").alias("_ch"),
         )
-        from pyspark.sql import Observation
         obs = Observation()
         new = new.observe(obs, F.sum("_ch").alias("ch"))
         new = scratch.truncate(new, stream)
@@ -144,7 +136,7 @@ def scc(graph: Graph, max_outer: int = 30, max_label_rounds: int = 60,
                   .join(alive.withColumnRenamed("node_id", "dst"), "dst", "left_semi"))
             ae = scratch.truncate(ae, "ae")
             # ---- color (forward max) + backward sweep -----------------------
-            colors = _fixpoint_label(ae, alive, F.max, scratch, "color",
+            colors = _fixpoint_label(ae, alive, scratch, "color",
                                      max_label_rounds)
             colored = colors.select("node_id", F.col("lab").alias("color"))
             reached = _sweep_reach(ae, colored, scratch, max_label_rounds)

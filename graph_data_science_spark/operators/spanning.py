@@ -60,6 +60,7 @@ def spanning_forest(graph: Graph, max_rounds: int = 30) -> DataFrame:
             mst = picked if mst is None else mst.unionByName(picked).distinct()
             mst = scratch.truncate(mst, "mst")
             # merge components: min-label propagation over picked edges
+            # pointer-jumping, not wcc: a picked path over n comps needs ~log n rounds, not n
             pe = picked.select("src", "dst").unionByName(
                 picked.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
             pe = scratch.truncate(pe, "pe")

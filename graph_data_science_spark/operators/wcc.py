@@ -17,6 +17,13 @@ Config surface mirrors WccBaseConfig.java:30-46:
   seeded DisjointSetStruct layout (HugeAtomicDisjointSetStruct.java:129-146).
 - ``consecutive_ids``: remap result ids to 0..k-1 ordered by component id.
 
+This is the package's one min-label connected-components kernel. Its
+in-package callers: :func:`wcc_incremental` (the contracted batch graph),
+``operators/pipeline_ops.py`` (fuzzy-dedup duplicate groups),
+``operators/louvain.py`` ``_refine_connectivity`` (Leiden's connectivity
+split) and ``operators/paths.py`` ``bellman_ford`` (negative-cycle
+grouping).
+
 Spark plan per superstep: one shuffle join (mirrored edges ⋈ changed nodes)
 + one partial-aggregated min per dst + one join back. Only nodes whose
 component improved stay active, so the frontier shrinks every superstep —
@@ -180,7 +187,9 @@ def wcc_incremental(
     # endpoints never seen before enter as their own singleton component
     fresh = ends.join(prev, "node_id", "left_anti").select(
         "node_id", F.col("node_id").alias("component"))
-    labels = prev.unionByName(fresh).persist()
+    # read three times below; a lazy local checkpoint (not a persist) so the
+    # ContextCleaner frees it once the caller drops the returned frame
+    labels = prev.unionByName(fresh).localCheckpoint(eager=False)
 
     # endpoint → current component (the batch side is small: broadcast it
     # into the label table's layout rather than shuffling the labels)
@@ -196,12 +205,16 @@ def wcc_incremental(
         .distinct()
         .persist()
     )
-    if contracted.limit(1).count() == 0:
+    n_edges = contracted.count()
+    if n_edges == 0:
         contracted.unpersist()
         return WccResult(labels, 0, True, [])
 
-    # min-label WCC over the touched-component graph: tiny by construction
-    inner = wcc(graph_from_edges(labels.sparkSession, contracted))
+    # min-label WCC over the touched-component graph: tiny by construction.
+    # Its diameter is at most its edge count, so this cap always converges
+    # (a batch may chain far more components than wcc's default cap)
+    inner = wcc(graph_from_edges(labels.sparkSession, contracted),
+                max_iterations=n_edges + 1)
     remap = inner.components.select(
         F.col("node_id").alias("_old"), F.col("component").alias("_new"))
     merged = (

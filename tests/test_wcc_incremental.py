@@ -41,6 +41,22 @@ def test_incremental_no_merge_batch_is_cheap_noop(spark):
     assert _labels(res.components) == _full(spark, base)
 
 
+def test_incremental_leaves_no_cached_frame(spark):
+    """Neither a merge nor a no-merge batch leaves a DataFrame cached: the
+    streaming maintainer calls wcc_incremental once per micro-batch."""
+    base = [(0, 1), (2, 3)]
+    prev = wcc(graph_from_edges(spark, edges_from_tuples(spark, base)))
+    spark.catalog.clearCache()
+    merged = wcc_incremental(prev.components,
+                             edges_from_tuples(spark, [(1, 2), (5, 6)]))
+    assert _labels(merged.components) == {0: 0, 1: 0, 2: 0, 3: 0, 5: 5, 6: 5}
+    noop = wcc_incremental(prev.components,
+                           edges_from_tuples(spark, [(0, 1)]))
+    assert noop.ran_iterations == 0
+    assert _labels(noop.components) == {0: 0, 1: 0, 2: 2, 3: 2}
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_incremental_transitive_chain_within_one_batch(spark):
     base = [(0, 1), (2, 3), (4, 5), (6, 7)]
     prev = wcc(graph_from_edges(spark, edges_from_tuples(spark, base)))
