@@ -73,21 +73,15 @@ def _run_query(name: str, spark, sf_dir: str):
         embs.persist().count()
 
     t0 = time.monotonic()
-    if name == "pagerank":
+    if name in ("pagerank", "pagerank_csr"):
+        # pagerank_csr is a legacy name kept for the CLI: the same join plan
         from graph_data_science_spark.operators.pagerank import pagerank
         pr = pagerank(graph)
         pr.scores.agg(F.sum("score")).first()
         sec = time.monotonic() - t0
-        extras["pagerank_supersteps"] = pr.ran_iterations
-        extras["pagerank_edges_per_sec_per_superstep"] = (
+        extras[f"{name}_supersteps"] = pr.ran_iterations
+        extras[f"{name}_edges_per_sec_per_superstep"] = (
             n_edges * pr.ran_iterations / sec)
-    elif name == "pagerank_csr":
-        from graph_data_science_spark.operators.pagerank import pagerank
-        prc = pagerank(graph, mode="csr")
-        prc.scores.agg(F.sum("score")).first()
-        sec = time.monotonic() - t0
-        extras["pagerank_csr_edges_per_sec_per_superstep"] = (
-            n_edges * prc.ran_iterations / sec)
     elif name == "wcc":
         from graph_data_science_spark.operators.wcc import wcc
         w = wcc(graph)

@@ -12,6 +12,5 @@ allShortestPaths), :mod:`spanning` (Borůvka MST, Steiner), :mod:`hits`,
 Embeddings/sampling/ML: :mod:`embeddings` (FastRP, HashGNN, node2vec,
 random walks), :mod:`walking` (collapsePath, RWR/CNARW), :mod:`influence`
 (CELF), :mod:`similarity`, :mod:`estimate`.
-Training-data ops: :mod:`dedup`, :mod:`text`, :mod:`multimodal`,
-:mod:`scale_properties`.
+Training-data ops: :mod:`dedup`, :mod:`text`, :mod:`scale_properties`.
 """

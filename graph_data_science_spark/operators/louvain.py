@@ -45,18 +45,17 @@ and each self-loop ONCE with doubled weight, so that
 Spark plan per sub-round: volumes = one partial-agg sum over the assignment;
 candidate tallies = adj ⋈ assignment (shuffle-hash on the state side) + one
 partial-agg sum; argmax per node = one more partial-agg max(struct) — no
-windows, no Python in the loop. Sub-rounds are FUSED per iteration into one
-lazy plan (see _local_move) and each block's output is truncated through
-the size-gated ``Scratch`` of plans/loop_state.py (the Pregel driver's
-truncation).
+windows, no Python in the loop. Truncation goes through the size-gated
+``Scratch`` of plans/loop_state.py (the Pregel driver's truncation): below
+its gate after every sub-round, above it once per iteration, the
+iteration's sub-rounds running as one lazy plan (see _local_move).
 """
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 from graph_data_science_spark.graph import Graph
 from graph_data_science_spark.operators.wcc import wcc
@@ -113,13 +112,13 @@ def _sub_round(adj: DataFrame, comm: DataFrame, k: DataFrame, m: float,
     Leiden resolution (LeidenBaseConfig.java:38; γ=1 = classic modularity):
     it scales the expected-edges term of the gain.
 
-    The caller chains sub-rounds and truncates/observes at block ends
-    (plans/pregel.py fusion discipline). Chaining is safe because each
-    reference to the previous sub-round's output re-executes only its
-    post-shuffle map work — the aggregations below it end in identical
-    exchanges that Spark's ReuseExchange dedupes — and the reference count
-    per level (~5) keeps Catalyst's tree-walk cost bounded for one-iteration
-    blocks (see _local_move)."""
+    Above the size gate the caller chains an iteration's sub-rounds and
+    truncates/observes at its end (plans/pregel.py fusion). Chaining is
+    safe because each reference to the previous sub-round's output
+    re-executes only its post-shuffle map work — the aggregations below it
+    end in identical exchanges that Spark's ReuseExchange dedupes — and the
+    reference count per level (~5) keeps Catalyst's tree-walk cost bounded
+    for one-iteration blocks (see _local_move)."""
     vol = (comm.join(k, "node_id")
            .groupBy("comm").agg(F.sum("k").alias("vol")))
     movers = comm.where(F.pmod(F.col("node_id"), F.lit(n_classes)) == p)
@@ -172,83 +171,49 @@ def _sub_round(adj: DataFrame, comm: DataFrame, k: DataFrame, m: float,
 
 
 def _local_move(adj, sup_nodes, k, m, max_iterations, n_classes, scratch,
-                gamma: float = 1.0, fuse: int | None = None):
+                gamma: float = 1.0):
     """Run class-restricted sync local moving to convergence on one level.
-    Returns (assignment, total_moves, iterations_ran).
+    Returns (assignment, total_moves, iterations_ran, converged).
 
-    Sub-round FUSION (plans/pregel.py module doc #4, docs/SCALE_NOTES.md
-    §10): whole iterations (``n_classes`` sub-rounds each) are chained as
-    one lazy plan and truncated/observed only at block ends, dividing the
-    per-sub-round job barrier + scratch round-trip — the non-scaling cost
-    component, and at correctness scale the ~1 s/job floor that dominates
-    the fixed 2×4×2 schedule — by the block size. Blocks are whole
-    iterations: one iteration per block by default (each sub-round
-    references its predecessor ~5×, so Catalyst's tree walk grows
-    ~5^depth; one iteration ≈ 25 instances is cheap, three ≈ 15k is not).
-    Convergence checks the block-accumulated per-node moved bit: a strict
-    improvement rule makes a converged assignment a fixpoint, so a block
-    straddling convergence runs identity sub-rounds and the result is
-    bit-identical to the unfused schedule.
+    One schedule: each iteration chains its ``n_classes`` sub-rounds, the
+    per-node moved bit ``_mvd`` accumulating through them, and observes
+    ``sum(_mvd)`` once, at the iteration's final truncate. A node moves only
+    in its own class's sub-round, so that sum is the iteration's move count;
+    a level converges when an iteration moves nobody (a strict improvement
+    rule makes that assignment a fixpoint).
 
-    Fusion is SIZE-gated with the AQE toggle as a package (``fuse=0`` =
-    truncate per sub-round): below the gate AQE stays on, AQE defeats the
-    ReuseExchange dedup that makes chained sub-rounds cheap, so a fused
-    block replays its predecessor's exchanges ~5× — at sf0.1 the unfused
-    schedule is what the per-sub-round convergence check wants anyway
-    (measured r2: 26.6 s unfused vs 31.8–35.7 s fused at 600k edges).
-    An explicit ``fuse`` argument or SPARK_GRAFT_FUSE env bypasses the
-    gate (the sweep/probe scripts set it deliberately)."""
-    if fuse is None:
-        env = os.environ.get("SPARK_GRAFT_FUSE")
-        if env is not None:
-            fuse = max(1, int(env) // max(1, n_classes))
-        elif not scratch.aqe_off:
-            fuse = 0  # below the size gate: per-sub-round truncation
-        else:
-            fuse = 1
+    Where the sub-rounds are truncated follows the ``Scratch`` size gate,
+    with the AQE toggle as a package (docs/SCALE_NOTES.md §10): below it
+    (AQE on) every sub-round is truncated, because AQE defeats the
+    ReuseExchange dedup that makes chained sub-rounds cheap and a chained
+    sub-round would replay its predecessor's exchanges ~5× (measured r2:
+    26.6 s per-sub-round vs 31.8–35.7 s chained at 600k edges); above it
+    the iteration's sub-rounds run as ONE lazy plan, truncated once,
+    dividing the per-sub-round job barrier + scratch round-trip by
+    ``n_classes``. Blocks stay one iteration: each sub-round references its
+    predecessor ~5×, so Catalyst's tree walk grows ~5^depth."""
     comm = sup_nodes.select("node_id", F.col("node_id").alias("comm"))
     comm = scratch.truncate(comm, "comm")
-    from pyspark.sql import Observation
     total = 0
     it = 0
     moves = 0
-    if int(fuse) == 0:
-        # unfused schedule: one truncate/Observation per sub-round;
-        # convergence = a whole iteration (all classes) with zero moves
-        while it < max_iterations:
-            iter_moves = 0
-            for p in range(n_classes):
-                new = comm.select("node_id", "comm",
-                                  F.lit(0).cast("int").alias("_mvd"))
-                new = _sub_round(adj, new, k, m, p, n_classes, gamma)
-                obs = Observation()
-                new = new.observe(obs, F.sum("_mvd").alias("moves"))
-                new = scratch.truncate(new, "comm")
-                iter_moves += int(obs.get["moves"] or 0)
-                comm = new.select("node_id", "comm")
-            moves = iter_moves
-            total += iter_moves
-            it += 1
-            if iter_moves == 0:
-                break
-        return comm, total, it, moves == 0
     while it < max_iterations:
-        blk = min(int(fuse), max_iterations - it)
         new = comm.select("node_id", "comm", F.lit(0).cast("int").alias("_mvd"))
-        for _ in range(blk):
-            for p in range(n_classes):
-                new = _sub_round(adj, new, k, m, p, n_classes, gamma)
+        for p in range(n_classes):
+            if p and not scratch.aqe_off:
+                new = scratch.truncate(new, "comm")
+            new = _sub_round(adj, new, k, m, p, n_classes, gamma)
         obs = Observation()
         new = new.observe(obs, F.sum("_mvd").alias("moves"))
         new = scratch.truncate(new, "comm")
         moves = int(obs.get["moves"] or 0)
         comm = new.select("node_id", "comm")
         total += moves
-        it += blk
+        it += 1
         if moves == 0:
             break
-    # converged = the LAST block moved nothing (fixpoint reached), whether
-    # the loop broke early or landed exactly on the iteration cap
+    # converged = the LAST iteration moved nothing (fixpoint reached),
+    # whether the loop broke early or landed exactly on the iteration cap
     return comm, total, it, moves == 0
 
 
@@ -381,7 +346,6 @@ def _theta_refine(adj: DataFrame, orig: DataFrame, k: DataFrame, m: float,
                 .agg(F.max(F.struct(F.col("pri"), (-F.col("r2")).alias("n2"),
                                     F.col("r2").alias("tgt"))).alias("b"))
                 .select(F.col("r").alias("comm"), F.col("b.tgt").alias("tgt")))
-        from pyspark.sql import Observation
         obs = Observation()
         merged = comm.join(pick, "comm", "left").select(
             "node_id", F.coalesce("tgt", "comm").alias("comm"),
@@ -479,7 +443,7 @@ def _round6_half_up(v):
 
 def _local_solve(src, dst, w, ids, m, max_levels, max_iterations,
                  n_classes, gamma):
-    """Driver-side replica of the distributed level loop (unfused
+    """Driver-side replica of the distributed level loop (the
     ``_local_move`` schedule + ``_relabel_min_member`` + ``_coarsen``),
     bit-identical on integer-weight graphs (module docstring: the 6dp
     rounding contract makes every score operand exact there, so the

@@ -76,26 +76,8 @@ def pagerank(
     checkpoint_dir: str | None = None,
     resume: bool = False,
     skew_salt: int = 0,
-    mode: str = "join",
 ) -> PageRankResult:
-    """GDS ``gds.pageRank`` analog. Returns (node_id, score) + run stats.
-
-    ``mode="join"`` (default): shuffle-join superstep — the 10^12-edge
-    cluster path. ``mode="csr"``: Arrow gather-scatter with NumPy vertex
-    state (plans/csr.py) — the single-node-class fast path, valid while
-    state fits in memory (same bound as the shared-memory reference);
-    checkpoint/resume is a join-mode feature.
-    """
-    if mode == "csr":
-        if checkpoint_dir or resume:
-            raise ValueError("checkpoint/resume requires mode='join'")
-        from graph_data_science_spark.plans.csr import pagerank_csr
-
-        scores, ran, converged, metrics = pagerank_csr(
-            graph, damping_factor, tolerance, max_iterations, weighted, source_nodes)
-        if scaler:
-            scores = apply_scaler(scores, "score", scaler)
-        return PageRankResult(scores, ran, converged, metrics)
+    """GDS ``gds.pageRank`` analog. Returns (node_id, score) + run stats."""
     return _from_scratch(
         graph, damping_factor, tolerance, max_iterations, weighted, source_nodes,
         scaler, checkpoint_dir, resume, skew_salt, degree_shift=0.0,

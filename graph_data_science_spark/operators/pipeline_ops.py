@@ -73,7 +73,9 @@ def near_duplicate_clusters(
     g = Graph(nodes=endpoints,
               edges=pairs.select(F.col("a").alias("src"), F.col("b").alias("dst")),
               directed=True, name="lsh-pairs")
-    comp = wcc(g).components
+    # a component's diameter is at most the pair count, so this cap always
+    # converges (a near-dup chain can be far longer than wcc's default cap)
+    comp = wcc(g, max_iterations=pairs.count() + 1).components
     return (docs.select(F.col(id_col).alias("doc_id"))
             .join(comp.select(F.col("node_id").alias("doc_id"),
                               F.col("component")), "doc_id", "left")

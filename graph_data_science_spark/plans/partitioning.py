@@ -61,14 +61,6 @@ def degree_stats(edges: DataFrame, key: str = "dst") -> dict:
     return {k: (float(v) if v is not None else 0.0) for k, v in row.asDict().items()}
 
 
-def repartition_edges(edges: DataFrame, num_partitions: int | None = None) -> DataFrame:
-    """Hash-partition the edge table by ``src`` — the engine's canonical
-    physical layout (SURVEY §4: persisted once, reused across supersteps)."""
-    if num_partitions is None:
-        num_partitions = edges.sparkSession.sparkContext.defaultParallelism
-    return edges.repartition(num_partitions, "src")
-
-
 def bucketed_exclusive_prefix(
     d: DataFrame,
     bucket_col: str,

@@ -118,7 +118,7 @@ class Pregel:
         checkpoint_dir: str | None = None,
         extra_metrics: dict[str, Column] | None = None,
         manifest: dict | None = None,
-        fuse: int | None = None,
+        fuse: int = 3,
         table_format=None,
         metadata_dir: str | None = None,
     ):
@@ -145,8 +145,8 @@ class Pregel:
                 "pass metadata_dir for the run's manifest and metrics")
         self.metadata_dir = metadata_dir if metadata_dir is not None \
             else checkpoint_dir
-        # Superstep FUSION (module doc #4): run `fuse` supersteps as ONE lazy
-        # Catalyst plan and materialize/truncate only at block ends. The
+        # Superstep FUSION: run `fuse` supersteps as ONE lazy Catalyst plan
+        # and materialize/truncate only at block ends. The
         # per-superstep job barrier + scratch round-trip is the engine's
         # non-scaling cost component (it is the same wall-clock at every
         # parallelism level), so dividing it by `fuse` is what moves the
@@ -162,21 +162,14 @@ class Pregel:
         # exactly max_iterations supersteps; a checkpointed run snapshots
         # every superstep, so its blocks are single supersteps and its
         # resume points are those of an unfused run.
-        # fuse is SIZE-gated like the AQE toggle (run(): _fuse_eff): fusion
+        # fuse is SIZE-gated like the AQE toggle (run(): fuse_eff): fusion
         # amortizes the per-block job barrier, which pays only when state is
         # large enough that the barrier is small relative to a superstep's
         # work; below the gate a fused chain costs replay amplification
         # (AQE stays on there, and AQE defeats ReuseExchange dedup of the
         # chained exchanges) plus up to fuse-1 overshoot supersteps past
         # convergence — measured at sf0.1: wcc 4→6 supersteps, lpa 2×.
-        # An explicit fuse argument or SPARK_GRAFT_FUSE env bypasses the
-        # gate (the sweep/probe scripts set it deliberately).
-        if fuse is None:
-            env = os.environ.get("SPARK_GRAFT_FUSE")
-            self._fuse_explicit = env is not None
-            fuse = int(env) if env is not None else 3
-        else:
-            self._fuse_explicit = True
+        # Below the gate every block is one superstep, whatever `fuse` is.
         self.fuse = max(1, int(fuse))
         self.checkpoint_dir = checkpoint_dir
         self.extra_metrics = extra_metrics or {}
@@ -344,7 +337,7 @@ class Pregel:
             # __init__ fuse comment and module doc #1
             large = scratch.rows("state") >= loop_state.LARGE_STATE_ROWS
             scratch.aqe_off = large
-            fuse_eff = self.fuse if (self._fuse_explicit or large) else 1
+            fuse_eff = self.fuse if large else 1
             converged = active == 0
 
             superstep = start_step

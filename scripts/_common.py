@@ -1,4 +1,4 @@
-"""Shared subprocess helpers for the scaling/probe scripts."""
+"""Shared subprocess helpers for the scaling scripts."""
 
 from __future__ import annotations
 
@@ -13,8 +13,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # export must never silently alter (or crash) a scripted protocol run, so
 # protocol scripts scrub these and pass only what they set explicitly
 PROTOCOL_ENV_KNOBS = ("SPARK_GRAFT_ALGOS", "SPARK_GRAFT_PR_ITERS",
-                      "SPARK_GRAFT_FUSE", "SPARK_GRAFT_PARTS",
-                      "SPARK_GRAFT_CPUS")
+                      "SPARK_GRAFT_PARTS", "SPARK_GRAFT_CPUS")
 
 
 def clean_env(**overrides: str) -> dict:

@@ -54,10 +54,11 @@ def main() -> None:
 
     out: dict = {"cpus": cpus, "parts": parts, "n_nodes": n_nodes,
                  "n_edges": n_edges}
-    # optional subset for quick probes (scripts/eff_probe.py); the headline
-    # scaling_bench run leaves this unset and measures the full suite
+    # optional subset for quick solo runs (e.g. SPARK_GRAFT_ALGOS=betweenness);
+    # the headline scaling_bench run leaves this unset and measures the full
+    # suite
     algos = set(os.environ.get(
-        "SPARK_GRAFT_ALGOS", "pagerank,pagerank_csr,wcc,lpa,tc").split(","))
+        "SPARK_GRAFT_ALGOS", "pagerank,wcc,lpa,tc").split(","))
 
     if "pagerank" in algos:
         t0 = time.monotonic()
@@ -67,16 +68,6 @@ def main() -> None:
         out["pagerank_supersteps"] = pr.ran_iterations
         out["pagerank_eps"] = round(n_edges * pr.ran_iterations / out["pagerank_s"], 1)
         out["pagerank_block_ms"] = [round(m["wall_ms"]) for m in pr.metrics]
-
-    if "pagerank_csr" in algos:
-        t0 = time.monotonic()
-        prc = pagerank(g, tolerance=0.0, max_iterations=pr_iters, mode="csr")
-        prc.scores.agg(F.sum("score")).first()
-        out["pagerank_csr_s"] = round(time.monotonic() - t0, 3)
-        out["pagerank_csr_eps"] = round(n_edges * prc.ran_iterations / out["pagerank_csr_s"], 1)
-        out["pagerank_csr_phase_ms"] = [
-            {k: m[k] for k in ("phase", "superstep", "wall_ms") if k in m}
-            for m in prc.metrics]
 
     if "wcc" in algos:
         t0 = time.monotonic()

@@ -43,7 +43,7 @@ def run_scale_job(cpus: int, parts: int = 32) -> dict:
     # fixed partition count at BOTH parallelism levels — the data layout is
     # a property of the dataset, not the cluster size; a real N → 4N
     # executor scale-up spreads the SAME partitioning over more slots.
-    # clean_env scrubs leftover SPARK_GRAFT_ALGOS/PR_ITERS/FUSE shell
+    # clean_env scrubs leftover SPARK_GRAFT_ALGOS/PR_ITERS shell
     # exports so the headline run always measures the documented protocol.
     env = clean_env(SPARK_GRAFT_CPUS=cpus, SPARK_GRAFT_PARTS=parts)
     env.setdefault("SPARK_DRIVER_MEMORY", "24g")
@@ -80,8 +80,7 @@ def main() -> None:
         [sys.executable, os.path.join(REPO, "bench.py")], env01))
 
     ratio = n_big / n_small
-    algos = [("pagerank", "pagerank_s"), ("pagerank_csr", "pagerank_csr_s"),
-             ("wcc", "wcc_s"),
+    algos = [("pagerank", "pagerank_s"), ("wcc", "wcc_s"),
              ("label_propagation", "lpa_s"), ("triangle_count", "tc_s")]
     md = [
         "# BENCH/BASELINE — measured scaling evidence",

@@ -13,6 +13,7 @@ import random
 import pytest
 
 from graph_data_science_spark.graph import edges_from_tuples, graph_from_edges
+from graph_data_science_spark.operators import louvain as louvain_mod
 from graph_data_science_spark.operators.louvain import (
     _local_solve,
     _round6_half_up,
@@ -54,16 +55,22 @@ def test_local_finish_parity_random(spark, seed, weighted):
     assert dist.modularity == pytest.approx(loc.modularity, abs=1e-9)
 
 
-def test_local_finish_parity_modularity_optimization(spark):
+def test_local_finish_parity_modularity_optimization(spark, monkeypatch):
     g = _random_graph(spark, 11, True)
     dist = modularity_optimization(g, max_iterations=4,
                                    local_finish_max_rows=0)
     loc = modularity_optimization(g, max_iterations=4,
                                   local_finish_max_rows=10**9)
-    assert (rows_to_dict(dist.communities, "node_id", "community")
-            == rows_to_dict(loc.communities, "node_id", "community"))
-    assert dist.converged == loc.converged
-    assert dist.modularity == pytest.approx(loc.modularity, abs=1e-9)
+    # the above-gate schedule: sub-rounds chained, one truncate per iteration
+    monkeypatch.setattr(louvain_mod, "_AQE_OFF_MIN_M", 0.0)
+    above = modularity_optimization(g, max_iterations=4,
+                                    local_finish_max_rows=0)
+    want = rows_to_dict(loc.communities, "node_id", "community")
+    for res in (dist, above):
+        assert rows_to_dict(res.communities, "node_id", "community") == want
+        assert res.converged == loc.converged
+        assert res.modularity == pytest.approx(loc.modularity, abs=1e-9)
+    assert above.ran_iterations == dist.ran_iterations
 
 
 def test_local_finish_engages_midway(spark):

@@ -86,6 +86,18 @@ def test_pagerank_personalized_source_nodes(spark):
         assert got[other] == pytest.approx(0.0)
 
 
+def test_pagerank_unknown_source_nodes_dropped(spark):
+    """Unknown personalized sources are dropped: 3 is missing from the middle
+    of the id range, 99 lies past its end."""
+    nodes = spark.createDataFrame([(0,), (2,), (4,)], "node_id long")
+    edges = spark.createDataFrame([(0, 2), (2, 4)], "src long, dst long")
+    g = Graph(nodes=nodes, edges=edges)
+    want = scores_dict(pagerank(g, source_nodes=[2]))
+    for srcs in ([2, 3], [2, 99]):
+        assert scores_dict(pagerank(g, source_nodes=srcs)) == pytest.approx(
+            want, abs=1e-12)
+
+
 def test_pagerank_salted_two_level_agg_matches(spark):
     g = build_graph(spark, F1_EDGES, F1_NODES)
     base = scores_dict(pagerank(g, tolerance=0.0, max_iterations=41))

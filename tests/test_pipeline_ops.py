@@ -56,6 +56,28 @@ def test_near_duplicate_clusters_keep_filter(docs):
     assert sorted(r["doc_id"] for r in kept) == [0, 3, 4, 40]
 
 
+def test_near_duplicate_clusters_wcc_cap_is_pair_count(spark, docs, monkeypatch):
+    """A near-dup chain can be longer than wcc's default cap: the call caps
+    WCC at the pair count + 1, a bound on any component's diameter + 1."""
+    from types import SimpleNamespace
+
+    from graph_data_science_spark.operators import pipeline_ops
+    from graph_data_science_spark.operators.dedup import minhash_lsh_pairs
+
+    caps = []
+
+    def fake_wcc(graph, max_iterations=100):
+        caps.append(max_iterations)
+        return SimpleNamespace(components=spark.createDataFrame(
+            [], "node_id long, component long"))
+
+    monkeypatch.setattr(pipeline_ops, "wcc", fake_wcc)
+    near_duplicate_clusters(docs)
+    n_pairs = minhash_lsh_pairs(docs, num_hashes=8, bands=4).count()
+    assert n_pairs > 0
+    assert caps == [n_pairs + 1]
+
+
 def test_corpus_vocabulary_counts(docs):
     vocab = {r["token"]: r for r in corpus_vocabulary(docs, min_df=1).collect()}
     assert vocab["alpha"]["doc_freq"] == 3 and vocab["alpha"]["term_freq"] == 3
