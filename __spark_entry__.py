@@ -1513,6 +1513,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     from graph_data_science_spark.operators.louvain import (
         leiden, louvain, modularity_optimization)
+    from graph_data_science_spark.plans.loop_state import pinned_tier
 
     # fixed schedule matching the _louvain_sql unroll (levels=2, iters=4,
     # classes=2); the engine converging earlier is fine — idempotence
@@ -1527,12 +1528,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["leiden_deterministic"] = lambda s, d: _leiden(
         build_graph(s, d), max_levels=2, max_iterations=4,
         theta=0.0).communities
-    # the distributed sub-round kernel, gate-pinned off the local finish —
-    # both paths are oracled against the same unrolled-SQL recurrence
-    # (tests/test_louvain_local_finish.py proves bit-parity directly)
-    q["louvain_distributed"] = lambda s, d: louvain(
-        build_graph(s, d), max_levels=2, max_iterations=4,
-        local_finish_max_rows=0).communities
+    # the distributed sub-round kernel, pinned off the local finish by the
+    # size policy's override — both paths are oracled against the same
+    # unrolled-SQL recurrence (tests/test_louvain_local_finish.py proves
+    # bit-parity directly)
+    def _louvain_distributed(s, d):
+        with pinned_tier("memory"):
+            return louvain(build_graph(s, d), max_levels=2,
+                           max_iterations=4).communities
+    q["louvain_distributed"] = _louvain_distributed
     q["modularity_optimization"] = lambda s, d: modularity_optimization(
         build_graph(s, d), max_iterations=4).communities
 

@@ -31,16 +31,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from graph_data_science_spark.graph import Graph
-from graph_data_science_spark.plans.loop_state import Scratch
+from graph_data_science_spark.plans.loop_state import Scratch, tier
 from graph_data_science_spark.plans.partitioning import shuffle_hash
 
-# Runtime-adaptive join strategy for the per-level MSBFS joins: the scratch
-# Observation gives the EXACT previous-level row count for free, so a level
-# whose frontier/delta slice is below this gate broadcasts it (no edge-table
-# shuffle); above it, the scale posture (SHUFFLE_HASH against the cached
-# edge partitioning) applies. Same spirit as AQE's runtime re-plan, but
-# driven by exact counts instead of size estimates.
-_BCAST_MAX_ROWS = 1_000_000
+
+def _small(rows: int | None) -> bool:
+    """Runtime-adaptive join strategy for the per-level MSBFS joins: the
+    scratch Observation gives the EXACT previous-level row count for free,
+    so a frontier/delta slice the size policy does not put in the
+    ``"parquet"`` tier is broadcast (no edge-table shuffle); in that tier,
+    or at an unknown size, the scale posture (SHUFFLE_HASH against the
+    cached edge partitioning) applies. Same spirit as AQE's runtime
+    re-plan, but driven by exact counts instead of size estimates."""
+    return tier(rows) != "parquet"
 
 
 def _loop_edges(graph: Graph, scratch: Scratch) -> DataFrame:
@@ -88,15 +91,14 @@ def msbfs(graph: Graph, sources: list[int] | None = None,
         prev_rows = n_src
         for r in range(1, max_iterations + 1):
             fr = frontier.select(F.col("v").alias("src"), "s", "sigma")
-            fr = F.broadcast(fr) if prev_rows < _BCAST_MAX_ROWS \
-                else shuffle_hash(fr)
+            fr = F.broadcast(fr) if _small(prev_rows) else shuffle_hash(fr)
             cand = (
                 edges.join(fr, "src")
                 .groupBy("s", F.col("dst").alias("v"))
                 .agg(F.sum("sigma").alias("sigma"))
             )
             visited = state.select("s", "v")
-            if state_rows < _BCAST_MAX_ROWS:
+            if _small(state_rows):
                 visited = F.broadcast(visited)
             new = cand.join(visited, ["s", "v"], "left_anti") \
                 .select("s", "v", F.lit(r).cast("long").alias("dist"), "sigma")
@@ -172,10 +174,9 @@ def betweenness(graph: Graph, sources: list[int] | None = None,
                 F.col("delta").alias("_dw")),
                 ["_ws", "_w"], "left").withColumn(
                 "_dw", F.coalesce("_dw", F.lit(0.0)))
-            if hist.get(d, _BCAST_MAX_ROWS) < _BCAST_MAX_ROWS:
+            if _small(hist.get(d)):
                 here = F.broadcast(here)
-            succ = F.broadcast(succ) \
-                if hist.get(d + 1, _BCAST_MAX_ROWS) < _BCAST_MAX_ROWS \
+            succ = F.broadcast(succ) if _small(hist.get(d + 1)) \
                 else shuffle_hash(succ)
             contrib = (
                 here.join(edges, here.v == edges.src)

@@ -111,10 +111,13 @@ def influence_maximization_celf(
             best = rows[0]
             new_cov = reach.where(F.col("cand") == int(best["cand"])) \
                 .select("sim", "node_id")
-            covered = new_cov if covered is None else \
-                covered.unionByName(new_cov).distinct()
-            covered = scratch.truncate(covered, "covered")
-            spread = (covered.count()) / n_sims
+            # a lane's reach rows are distinct, so only the new seed's rows
+            # not yet covered need deduplicating — never the whole union
+            if covered is not None:
+                new_cov = covered.unionByName(new_cov.join(
+                    covered, ["sim", "node_id"], "left_anti"))
+            covered = scratch.truncate(new_cov, "covered")
+            spread = scratch.rows("covered") / n_sims  # count rode truncate
             chosen.append((rank, int(best["cand"]), round(spread, 6)))
         return spark.createDataFrame(
             chosen, "rank long, node_id long, spread double"

@@ -46,37 +46,33 @@ Spark plan per sub-round: volumes = one partial-agg sum over the assignment;
 candidate tallies = adj ⋈ assignment (shuffle-hash on the state side) + one
 partial-agg sum; argmax per node = one more partial-agg max(struct) — no
 windows, no Python in the loop. Truncation goes through the size-gated
-``Scratch`` of plans/loop_state.py (the Pregel driver's truncation): below
-its gate after every sub-round, above it once per iteration, the
-iteration's sub-rounds running as one lazy plan (see _local_move).
+``Scratch`` of plans/loop_state.py (the Pregel driver's truncation): after
+every sub-round with AQE on, or — in the ``"parquet"`` tier, AQE off — once
+per iteration, the iteration's sub-rounds running as one lazy plan (see
+_local_move).
+
+Size policy: each level asks the engine's one policy,
+``loop_state.tier``, about its UNDIRECTED edge count (half the mirrored
+adjacency rows the scratch truncate observed) and its supernode count. Both
+``"local"`` → the remaining levels finish on the driver (``_local_solve``,
+bit-identical); the edge count's ``"parquet"`` tier turns AQE off for the
+level's chained sub-rounds. This is the standard two-phase design of every
+distributed Louvain (and what the single-node reference IS): level 0 on a
+100 TB graph stays fully distributed, but each coarsening shrinks the
+supernode graph by orders of magnitude, and once it fits the driver the
+fixed sub-round schedule is pure per-job scheduling floor.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 from pyspark.sql import DataFrame, Observation, functions as F
 
 from graph_data_science_spark.graph import Graph
 from graph_data_science_spark.operators.wcc import wcc
-from graph_data_science_spark.plans.loop_state import Scratch
+from graph_data_science_spark.plans.loop_state import Scratch, tier
 from graph_data_science_spark.plans.partitioning import shuffle_hash
-
-# edge-weight mass (m = Σw/2 ≈ edge count unweighted) above which fused
-# sub-round chains disable AQE during scratch writes — below it AQE's
-# partition coalescing is worth 3× at local scale (loop_state.Scratch
-# docstring); above it static ReuseExchange dedup wins (SCALE_NOTES §11)
-_AQE_OFF_MIN_M = 2_000_000.0
-
-# adjacency ROW count (mirrored, ≈ 2× edges) at or below which the remaining
-# levels finish on the driver (_local_solve) instead of paying the per-job
-# scheduling floor per sub-round. This is the standard two-phase design of
-# every distributed Louvain (and what the single-node reference IS): level 0
-# on a 100 TB graph stays fully distributed, but each coarsening shrinks the
-# supernode graph by orders of magnitude, and once it fits in driver memory
-# (~2M rows ≈ 50 MB Arrow) the fixed sub-round schedule is pure scheduling
-# floor — finish it locally, bit-identically. 0 disables.
-_LOCAL_FINISH_MAX_ROWS = 2_000_000
 
 
 @dataclass
@@ -112,7 +108,7 @@ def _sub_round(adj: DataFrame, comm: DataFrame, k: DataFrame, m: float,
     Leiden resolution (LeidenBaseConfig.java:38; γ=1 = classic modularity):
     it scales the expected-edges term of the gain.
 
-    Above the size gate the caller chains an iteration's sub-rounds and
+    In the ``"parquet"`` tier the caller chains an iteration's sub-rounds and
     truncates/observes at its end (plans/pregel.py fusion). Chaining is
     safe because each reference to the previous sub-round's output
     re-executes only its post-shuffle map work — the aggregations below it
@@ -182,13 +178,13 @@ def _local_move(adj, sup_nodes, k, m, max_iterations, n_classes, scratch,
     a level converges when an iteration moves nobody (a strict improvement
     rule makes that assignment a fixpoint).
 
-    Where the sub-rounds are truncated follows the ``Scratch`` size gate,
-    with the AQE toggle as a package (docs/SCALE_NOTES.md §10): below it
-    (AQE on) every sub-round is truncated, because AQE defeats the
+    Where the sub-rounds are truncated follows the AQE toggle, which the
+    caller sets from the level's size tier (docs/SCALE_NOTES.md §10): with
+    AQE on every sub-round is truncated, because AQE defeats the
     ReuseExchange dedup that makes chained sub-rounds cheap and a chained
     sub-round would replay its predecessor's exchanges ~5× (measured r2:
-    26.6 s per-sub-round vs 31.8–35.7 s chained at 600k edges); above it
-    the iteration's sub-rounds run as ONE lazy plan, truncated once,
+    26.6 s per-sub-round vs 31.8–35.7 s chained at 600k edges); with AQE
+    off the iteration's sub-rounds run as ONE lazy plan, truncated once,
     dividing the per-sub-round job barrier + scratch round-trip by
     ``n_classes``. Blocks stay one iteration: each sub-round references its
     predecessor ~5×, so Catalyst's tree walk grows ~5^depth."""
@@ -262,7 +258,10 @@ def _refine_connectivity(adj: DataFrame, comm: DataFrame) -> DataFrame:
     community into the connected components of its induced subgraph — the
     engine's :func:`~graph_data_science_spark.operators.wcc.wcc` over the
     intra-community edges, each community's split labelled by its minimum
-    member id (capped at 50 supersteps). Guarantees the property Leiden
+    member id. WCC is capped at the intra-community edge count + 1 (one
+    count job per level): a component's diameter is below its edge count,
+    so the cap provably converges and no long community is split by the
+    cap. Guarantees the property Leiden
     exists to restore — no disconnected communities
     (Traag/Waltman/van Eck 2019 §2; leiden/Leiden.java refinement phase) —
     while staying deterministic (no random θ sampling)."""
@@ -274,7 +273,7 @@ def _refine_connectivity(adj: DataFrame, comm: DataFrame) -> DataFrame:
              .where(F.col("cs") == F.col("cd"))
              .select("src", "dst"))
     split = wcc(Graph(nodes=comm.select("node_id"), edges=intra),
-                max_iterations=50)
+                max_iterations=intra.count() + 1)
     return split.components.select(
         "node_id", F.col("component").alias("comm"))
 
@@ -364,58 +363,14 @@ def modularity_optimization(
     max_iterations: int = 10,
     n_classes: int = 2,
     weighted: bool = True,
-    local_finish_max_rows: int | None = None,
 ) -> CommunityResult:
     """``gds.beta.modularityOptimization`` analog: ONE level of local moving
-    (no coarsening) → (node_id, community), community = min member id."""
-    spark = graph.nodes.sparkSession
-    scratch = Scratch(spark)
-    try:
-        adj = scratch.truncate(_adjacency(graph, weighted), "adj")
-        nodes = graph.nodes.select("node_id")
-        m = float(adj.agg(F.sum("w")).first()[0] or 0.0) / 2.0
-        # size gate for the fused-chain AQE toggle (class docstring): only
-        # graphs big enough that exchange re-execution outweighs AQE's
-        # partition coalescing turn it off
-        scratch.aqe_off = m >= _AQE_OFF_MIN_M
-        if m == 0.0:
-            return CommunityResult(
-                nodes.select("node_id", F.col("node_id").alias("community")),
-                0.0, 1, 0, True)
-        # same size-gated local finish as _multilevel (one level here)
-        lf_max = (_LOCAL_FINISH_MAX_ROWS if local_finish_max_rows is None
-                  else local_finish_max_rows)
-        adj_rows = scratch.rows("adj")
-        if (0 < lf_max and adj_rows is not None
-                and adj_rows <= lf_max
-                and nodes.count() <= lf_max):
-            import numpy as np
-            import pandas as pd
-            pa = adj.select("src", "dst", "w").toPandas()
-            ids = np.sort(nodes.toPandas()["node_id"]
-                          .to_numpy(dtype=np.int64))
-            labels, _, lf_iters, lf_conv = _local_solve(
-                pa["src"].to_numpy(), pa["dst"].to_numpy(),
-                pa["w"].to_numpy(), ids, m, 1, max_iterations,
-                n_classes, 1.0)
-            q = _modularity_local(
-                pa["src"].to_numpy(), pa["dst"].to_numpy(),
-                pa["w"].to_numpy(), labels, ids, m, 1.0)
-            out = spark.createDataFrame(pd.DataFrame(
-                {"node_id": ids, "community": labels.astype("int64")}))
-            out = out.localCheckpoint(eager=True)
-            return CommunityResult(out, q, 1, lf_iters, lf_conv)
-        k = scratch.truncate(_degrees(adj, nodes), "k")
-        comm, moves, iters, lm_conv = _local_move(adj, nodes, k, m,
-                                                  max_iterations,
-                                                  n_classes, scratch)
-        comm = _relabel_min_member(comm)
-        q = _modularity_value(adj, comm, m)
-        out = comm.select("node_id", F.col("comm").alias("community")) \
-            .localCheckpoint(eager=True)
-        return CommunityResult(out, q, 1, iters, lm_conv)
-    finally:
-        scratch.cleanup()
+    (no coarsening) → (node_id, community), community = min member id —
+    the Louvain level loop capped at one level. One level is reported even
+    on an edgeless graph, where Louvain reports none."""
+    res = _multilevel(graph, 1, max_iterations, n_classes, weighted,
+                      refine=False)
+    return replace(res, ran_levels=1)
 
 
 def _round6_half_up(v):
@@ -582,16 +537,13 @@ def _modularity_local(src, dst, w, labels_by_pos, ids, m, gamma):
 
 def _multilevel(graph, max_levels, max_iterations, n_classes, weighted,
                 refine: bool, gamma: float = 1.0, theta: float = 0.0,
-                seed: int = 42, local_finish_max_rows: int | None = None):
-    lf_max = (_LOCAL_FINISH_MAX_ROWS if local_finish_max_rows is None
-              else local_finish_max_rows)
+                seed: int = 42):
     spark = graph.nodes.sparkSession
     scratch = Scratch(spark)
     try:
         adj0 = scratch.truncate(_adjacency(graph, weighted), "adj0")
         nodes = graph.nodes.select("node_id")
         m = float(adj0.agg(F.sum("w")).first()[0] or 0.0) / 2.0
-        scratch.aqe_off = m >= _AQE_OFF_MIN_M  # see Scratch docstring
         identity = nodes.select("node_id", F.col("node_id").alias("community"))
         if m == 0.0:
             return CommunityResult(identity, 0.0, 0, 0, True)
@@ -605,50 +557,44 @@ def _multilevel(graph, max_levels, max_iterations, n_classes, weighted,
         moves = 0
         adj_stream = "adj0"
         for _ in range(max_levels):
-            # local finish (module constant doc): once the current level's
-            # graph fits under the gate, the remaining levels are pure
-            # per-job scheduling floor distributed — run them bit-identically
-            # on the driver instead. Level 0 of a 100 TB graph never takes
-            # this path; coarsened levels usually do.
-            adj_rows = scratch.rows(adj_stream)
-            if (not refine and 0 < lf_max
-                    and adj_rows is not None
-                    and adj_rows <= lf_max):
-                sup_rows = (scratch.rows("sup") if levels > 0
-                            else sup.count())
-                if (sup_rows is not None
-                        and sup_rows <= lf_max):
-                    import numpy as np
-                    import pandas as pd
-                    pa = adj.select("src", "dst", "w").toPandas()
-                    ids = np.sort(sup.select("node_id").toPandas()
-                                  ["node_id"].to_numpy(dtype=np.int64))
-                    labels, lf_levels, lf_iters, lf_conv = _local_solve(
+            # size policy (module doc): the level's undirected edge count
+            # sets the AQE toggle; with its supernode count it picks the
+            # local finish. Level 0 of a 100 TB graph never takes the
+            # local finish; coarsened levels usually do.
+            edges_tier = tier(scratch.rows(adj_stream) // 2)
+            scratch.aqe_off = edges_tier == "parquet"
+            if not refine and edges_tier == "local" and tier(
+                    scratch.rows("sup") if levels else sup.count()) == "local":
+                import numpy as np
+                import pandas as pd
+                pa = adj.select("src", "dst", "w").toPandas()
+                ids = np.sort(sup.select("node_id").toPandas()
+                              ["node_id"].to_numpy(dtype=np.int64))
+                labels, lf_levels, lf_iters, lf_conv = _local_solve(
+                    pa["src"].to_numpy(), pa["dst"].to_numpy(),
+                    pa["w"].to_numpy(), ids, m,
+                    max_levels - levels, max_iterations, n_classes, gamma)
+                lab_pdf = pd.DataFrame(
+                    {"super": ids, "community": labels.astype("int64")})
+                if levels == 0:
+                    # mapping is still the identity: emit directly
+                    final = spark.createDataFrame(
+                        lab_pdf.rename(columns={"super": "node_id"}))
+                    q = _modularity_local(
                         pa["src"].to_numpy(), pa["dst"].to_numpy(),
-                        pa["w"].to_numpy(), ids, m,
-                        max_levels - levels, max_iterations, n_classes,
-                        gamma)
-                    lab_pdf = pd.DataFrame(
-                        {"super": ids, "community": labels.astype("int64")})
-                    if levels == 0:
-                        # mapping is still the identity: emit directly
-                        final = spark.createDataFrame(
-                            lab_pdf.rename(columns={"super": "node_id"}))
-                        q = _modularity_local(
-                            pa["src"].to_numpy(), pa["dst"].to_numpy(),
-                            pa["w"].to_numpy(), labels, ids, m, gamma)
-                    else:
-                        final = mapping.join(
-                            F.broadcast(spark.createDataFrame(lab_pdf)),
-                            "super").select("node_id", "community")
-                        q = _modularity_value(
-                            adj0,
-                            final.select("node_id",
-                                         F.col("community").alias("comm")),
-                            m, gamma)
-                    final = final.localCheckpoint(eager=True)
-                    return CommunityResult(final, q, levels + lf_levels,
-                                           total_iters + lf_iters, lf_conv)
+                        pa["w"].to_numpy(), labels, ids, m, gamma)
+                else:
+                    final = mapping.join(
+                        F.broadcast(spark.createDataFrame(lab_pdf)),
+                        "super").select("node_id", "community")
+                    q = _modularity_value(
+                        adj0,
+                        final.select("node_id",
+                                     F.col("community").alias("comm")),
+                        m, gamma)
+                final = final.localCheckpoint(eager=True)
+                return CommunityResult(final, q, levels + lf_levels,
+                                       total_iters + lf_iters, lf_conv)
             k = scratch.truncate(_degrees(adj, sup), "k")
             comm, moves, iters, level_conv = _local_move(
                 adj, sup, k, m, max_iterations, n_classes, scratch, gamma)
@@ -667,12 +613,24 @@ def _multilevel(graph, max_levels, max_iterations, n_classes, weighted,
                                          seed, scratch)
                 else:
                     comm = _refine_connectivity(adj, comm)
-            comm = scratch.truncate(_relabel_min_member(comm), "rl")
-            mapping = scratch.truncate(mapping.join(
-                comm.withColumnRenamed("node_id", "super"), "super"
-            ).select("node_id", F.col("comm").alias("super")), "map")
+            comm = _relabel_min_member(comm)
             levels += 1
-            if moves == 0:
+            # the last level's assignment is read only by the final
+            # modularity and checkpoint: it stays lazy, and no coarse graph
+            # is built for a level that will not run
+            last = moves == 0 or levels == max_levels
+            if not last:
+                comm = scratch.truncate(comm, "rl")
+            if levels == 1:
+                # composing with the identity: the relabel IS the mapping
+                mapping = comm.select("node_id", F.col("comm").alias("super"))
+            else:
+                mapping = mapping.join(
+                    comm.withColumnRenamed("node_id", "super"), "super"
+                ).select("node_id", F.col("comm").alias("super"))
+                if not last:
+                    mapping = scratch.truncate(mapping, "map")
+            if last:
                 break
             adj = scratch.truncate(_coarsen(adj, comm), "cadj")
             adj_stream = "cadj"
@@ -699,13 +657,11 @@ def louvain(
     max_iterations: int = 10,
     n_classes: int = 2,
     weighted: bool = True,
-    local_finish_max_rows: int | None = None,
 ) -> CommunityResult:
     """``gds.louvain`` analog (Louvain.java:49). Deterministic schedule —
     see module docstring; community ids = min original member node id."""
     return _multilevel(graph, max_levels, max_iterations, n_classes, weighted,
-                       refine=False,
-                       local_finish_max_rows=local_finish_max_rows)
+                       refine=False)
 
 
 def leiden(

@@ -20,7 +20,10 @@ Shape per merge round (the whole loop is ``n_merges`` rounds):
 State (one row per DISTINCT word, not per occurrence) is truncated per
 round with ``LoopState`` (serialized checkpoint + retire-previous,
 plans/loop_state.py). At 100 TB the distinct-word table is ~10⁷ rows — tiny
-against the corpus — so each round is a shuffle over megabytes.
+against the corpus — so each round is a shuffle over megabytes. When the
+engine's size policy puts the word table in the ``"local"`` tier
+(``loop_state.tier``), the whole merge loop finishes on the driver instead
+(:func:`bpe_train`).
 
 Encoding applies the learned merge list as ``len(merges)`` chained folds in
 ONE projection (expression tree depth = #merges, no shuffle, no UDF) — a
@@ -41,7 +44,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from graph_data_science_spark.operators.dedup import _norm
-from graph_data_science_spark.plans.loop_state import LoopState
+from graph_data_science_spark.plans.loop_state import LoopState, tier
 
 #: end-of-word marker (keeps merges from crossing word boundaries when the
 #: learned vocab is applied to running text — the Sennrich convention)
@@ -94,15 +97,6 @@ def _word_table(docs: DataFrame, text_col: str) -> DataFrame:
     )
 
 
-#: word-table row gate for the driver-local merge loop (louvain's
-#: size-gated local-finish pattern): the merge loop's state is the
-#: DISTINCT-WORD frequency table — vocab-scale, not corpus-scale — so
-#: below this gate the whole sequential loop runs on the driver with
-#: ZERO Spark jobs per merge; above it, the distributed batched loop
-#: takes over.
-_BPE_LOCAL_MAX_WORDS = 2_000_000
-
-
 def _bpe_train_local(rows: list, n_merges: int) -> list[tuple[str, str]]:
     """Classic sequential BPE over collected (freq, syms) rows — the
     bit-exact local finish of :func:`bpe_train` (same greedy fold, same
@@ -137,9 +131,7 @@ def _bpe_train_local(rows: list, n_merges: int) -> list[tuple[str, str]]:
 
 
 def bpe_train(docs: DataFrame, n_merges: int = 20, text_col: str = "text",
-              batch_candidates: int = 256,
-              local_finish_max_words: int | None = None
-              ) -> list[tuple[str, str]]:
+              batch_candidates: int = 256) -> list[tuple[str, str]]:
     """Learn ``n_merges`` BPE merges from the corpus → ordered merge list.
 
     Stops early when no adjacent pair occurs at least twice (merging a
@@ -148,19 +140,20 @@ def bpe_train(docs: DataFrame, n_merges: int = 20, text_col: str = "text",
 
     TWO paths, identical results (pinned by a pytest equality case):
 
-    LOCAL FINISH (word table ≤ ``local_finish_max_words``, default 2M —
-    the louvain size-gated local-finish pattern): the merge loop's state
-    is the distinct-word frequency table, which is VOCAB-scale, so the
-    whole sequential loop runs driver-side in one collect — 2 Spark jobs
-    total regardless of n_merges (the corpus-scale work, word counting,
-    already happened distributed). This is also the honest production
-    architecture: distributed word count, then an in-memory classic
-    trainer over the bounded word table.
+    LOCAL FINISH (the size policy ``loop_state.tier`` of the distinct-word
+    row count answers ``"local"`` — the louvain local-finish pattern): the
+    merge loop's state is the distinct-word frequency table, which is
+    VOCAB-scale, so the whole sequential loop runs driver-side in one
+    collect with ZERO Spark jobs per merge — 2 Spark jobs total regardless
+    of n_merges (the corpus-scale work, word counting, already happened
+    distributed). This is also the honest production architecture:
+    distributed word count, then an in-memory classic trainer over the
+    bounded word table.
 
-    DISTRIBUTED path (above the gate): BATCHED rounds, sequentially
-    EXACT — one Spark round no longer buys just one merge (a production
-    32k-merge vocab = 32k sequential jobs — the round-4 review's scale
-    hazard); each round collects the top ``batch_candidates`` pairs and
+    DISTRIBUTED path (``"memory"`` or ``"parquet"``): BATCHED rounds,
+    sequentially EXACT — one Spark round no longer buys just one merge (a
+    production 32k-merge vocab = 32k sequential jobs — the round-4
+    review's scale hazard); each round collects the top ``batch_candidates`` pairs and
     applies the longest prefix of the classic pick order that is
     PROVABLY what sequential BPE would have picked, so the merge list is
     bit-identical to one-merge-at-a-time training:
@@ -184,15 +177,12 @@ def bpe_train(docs: DataFrame, n_merges: int = 20, text_col: str = "text",
 
     Batch sizes on character-level early rounds are small (single-letter
     symbols interact densely) — the local finish is the big lever; the
-    batching bounds the above-gate path. Measured round counts:
+    batching bounds the distributed path. Measured round counts:
     scripts/bpe_train_rounds.py.
     """
-    gate = (_BPE_LOCAL_MAX_WORDS if local_finish_max_words is None
-            else int(local_finish_max_words))
     loop = LoopState()
     state = loop.truncate(_word_table(docs, text_col))
-    n_words = state.count()
-    if n_words <= gate:
+    if tier(state.count()) == "local":
         rows = [(r["freq"], r["syms"])
                 for r in state.select("freq", "syms")
                 .orderBy("word").collect()]

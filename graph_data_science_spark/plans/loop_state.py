@@ -1,20 +1,34 @@
-"""Loop-state truncation: the one implementation every iterative loop uses.
+"""The engine's one size policy, and the loop-state truncation every
+iterative loop uses.
 
-An iterative DataFrame loop grows its logical plan every step and Catalyst
-re-analysis cost explodes in plan depth, so each iteration's state is
-materialized and re-read from a flat plan. Two ways to do that, chosen by
-state size at :data:`LARGE_STATE_ROWS`:
+**Size policy.** Every size-gated choice asks :func:`tier`;
+:data:`LARGE_STATE_ROWS` is the package's only size threshold:
 
-- **memory** (below the gate): an eager SERIALIZED ``localCheckpoint`` with
-  its origin statistics stripped (:func:`strip_origin_stats`) and the state
-  two truncations back unpersisted. Without the unpersist, chained
+- ``"local"`` — a known count below it: a loop with a driver-local kernel
+  (Louvain's local finish, BPE's merge loop) finishes on the driver; any
+  other loop runs it as ``"memory"``.
+- ``"parquet"`` — at or above it, or unknown (the scale-safe side):
+  parquet truncation, AQE off, superstep fusion, shuffled joins.
+- ``"memory"`` — only through the override :func:`pinned_tier`: the
+  distributed kernel on small input (memory truncation, AQE on, broadcast
+  joins).
+
+**Truncation.** An iterative DataFrame loop grows its logical plan every
+step and Catalyst re-analysis cost explodes in plan depth, so each
+iteration's state is materialized and re-read from a flat plan. Two ways to
+do that, chosen by :func:`tier` of the state's row count:
+
+- **memory** (``"local"``, ``"memory"``): an eager SERIALIZED
+  ``localCheckpoint`` with its origin statistics stripped
+  (:func:`strip_origin_stats`) and the state two truncations back
+  unpersisted. Without the unpersist, chained
   localCheckpoints pin every iteration's state in storage memory forever —
   the measured 0.5 → 7.4 s/superstep degradation (docs/SCALE_NOTES.md §2).
   Serialized storage keeps the blocks as compact Tungsten bytes the GC scans
   in O(#blocks), not O(#rows): the deserialized default more than doubled a
   local[2] 57M-edge suite. Zero disk I/O — at small states this removes the
   ~0.3 s/truncate write+read floor (measured at sf0.1: pagerank ~2×).
-- **parquet** (at or above the gate): a round-trip through two alternating
+- **parquet** (``"parquet"``): a round-trip through two alternating
   scratch slots per stream. Rescans are vectorized columnar batch reads
   inside whole-stage codegen — measured 2× faster than serialized-checkpoint
   rescans at the 57M-edge, 8M-row scale, where a row-wise checkpoint cache
@@ -32,14 +46,41 @@ import os
 import shutil
 import tempfile
 from contextlib import contextmanager
+from contextvars import ContextVar
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.storagelevel import StorageLevel
 
-#: state rows at or above which a loop is scan-bound rather than
-#: job-floor-bound: truncation goes to parquet, and the Pregel driver turns
-#: AQE off and superstep fusion on (docs/SCALE_NOTES.md §11, §20)
+#: rows at or above which a loop is scan-bound rather than job-floor-bound:
+#: the one size threshold :func:`tier` applies (docs/SCALE_NOTES.md §11, §20)
 LARGE_STATE_ROWS = 1_000_000
+
+_pinned: ContextVar[str | None] = ContextVar("pinned_tier", default=None)
+
+
+def tier(rows: int | None) -> str:
+    """The size policy (module doc): ``"local"`` for a known ``rows`` below
+    :data:`LARGE_STATE_ROWS`, ``"parquet"`` at or above it or when unknown
+    — unless :func:`pinned_tier` fixes the answer."""
+    pinned = _pinned.get()
+    if pinned is not None:
+        return pinned
+    if rows is None or rows >= LARGE_STATE_ROWS:
+        return "parquet"
+    return "local"
+
+
+@contextmanager
+def pinned_tier(t: str):
+    """Make every :func:`tier` call inside the block return ``t``. Nests;
+    the outer answer is restored on exit, also when the block raises."""
+    if t not in ("local", "memory", "parquet"):
+        raise ValueError(f"unknown tier {t!r}")
+    token = _pinned.set(t)
+    try:
+        yield
+    finally:
+        _pinned.reset(token)
 
 
 @contextmanager
@@ -54,7 +95,7 @@ def no_aqe(spark: SparkSession, active: bool = True):
     runtime query-stage reuse stops matching beyond depth ~2 and the chain
     re-executes its prefix per reference: depth 6 measured ~5× the work
     (docs/SCALE_NOTES.md §11). Below the size gate AQE's partition
-    coalescing wins outright, so callers pass ``active`` from their gate.
+    coalescing wins outright, so callers pass ``active`` from :func:`tier`.
 
     The flag is read per query execution, so toggling around the single
     materializing action is safe; restored in a ``finally``."""
@@ -133,13 +174,14 @@ class Scratch:
     The gate is per stream: the first truncate of a stream is parquet (row
     count unknown — the scale-safe side) unless ``rows_hint`` seeds it;
     from then on the stream's own row count, observed in the materializing
-    job via ``Observation`` (no extra action), picks memory below
-    :data:`LARGE_STATE_ROWS` and parquet at or above it. :meth:`rows`
+    job via ``Observation`` (no extra action), picks the path through
+    :func:`tier` — parquet on ``"parquet"``, memory otherwise. :meth:`rows`
     returns that count, so loops test for an empty frontier for free.
 
-    ``aqe_off`` is SIZE-gated by the caller and applies to parquet writes:
-    disabling AQE protects static ReuseExchange dedup inside fused chains
-    (:func:`no_aqe`), which pays only when re-executed exchanges dominate.
+    ``aqe_off`` is set by the caller from :func:`tier` and applies to
+    parquet writes: disabling AQE protects static ReuseExchange dedup
+    inside fused chains (:func:`no_aqe`), which pays only when re-executed
+    exchanges dominate.
     Below that, AQE's partition coalescing wins outright — measured at
     sf0.1 (600k edges, local[32]) a 2-level Louvain is 97.6 s with AQE off
     vs 31.8 s with AQE on, while a depth-2 chain at 14M edges runs ~1.5×
@@ -160,8 +202,7 @@ class Scratch:
 
     def in_memory(self, stream: str, rows_hint: int | None = None) -> bool:
         """Whether the next truncate of ``stream`` checkpoints in memory."""
-        known = self._rows.get(stream, rows_hint)
-        return known is not None and known < LARGE_STATE_ROWS
+        return tier(self._rows.get(stream, rows_hint)) != "parquet"
 
     def truncate(self, df: DataFrame, stream: str,
                  rows_hint: int | None = None) -> DataFrame:

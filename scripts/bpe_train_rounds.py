@@ -37,14 +37,14 @@ def main() -> None:
     try:
         spark = get_spark(app_name="bpe-rounds", shuffle_partitions=8)
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        # default path: word table is below the gate -> driver-local
-        # finish, 2 Spark jobs total regardless of n_merges
+        # default path: the word table is in the "local" tier ->
+        # driver-local finish, 2 Spark jobs total regardless of n_merges
         merges = tokenizer.bpe_train(docs, n_merges=n_merges)
         local_rounds = rounds - 1   # only the word-table truncation
         rounds = 0
-        # forced distributed path (gate=0): batched rounds
-        dist = tokenizer.bpe_train(docs, n_merges=n_merges,
-                                   local_finish_max_words=0)
+        # distributed path pinned on the same input: batched rounds
+        with ls.pinned_tier("memory"):
+            dist = tokenizer.bpe_train(docs, n_merges=n_merges)
         dist_rounds = rounds - 1
         assert merges == dist, "local finish diverged from distributed"
         print({"n_merges_requested": n_merges, "n_merges": len(merges),

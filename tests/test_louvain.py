@@ -74,6 +74,34 @@ def test_refine_splits_disconnected_community(spark):
     assert refined[0] != refined[2]
 
 
+def test_refine_connectivity_wcc_cap_is_intra_edge_count(spark, monkeypatch):
+    """A community can be a chain longer than any fixed cap: refinement caps
+    WCC at the intra-community edge count + 1, a bound on any component's
+    diameter + 1."""
+    from graph_data_science_spark.operators import louvain as louvain_mod
+
+    caps = []
+    real = louvain_mod.wcc
+
+    def recording_wcc(graph, max_iterations=100):
+        caps.append(max_iterations)
+        return real(graph, max_iterations=max_iterations)
+
+    monkeypatch.setattr(louvain_mod, "wcc", recording_wcc)
+    # community 0: a 5-edge chain and a separate edge; community 1: one
+    # edge; the 4-6 edge crosses communities and does not count
+    g = graph_from_edges(spark, edges_from_tuples(
+        spark, [(0, 1), (1, 2), (2, 3), (3, 4), (4, 5), (8, 9), (6, 7),
+                (4, 6)]))
+    comm = g.nodes.select("node_id", F.when(F.col("node_id").isin(6, 7), 1)
+                          .otherwise(0).cast("long").alias("comm"))
+    refined = rows_to_dict(_refine_connectivity(_adjacency(g), comm),
+                           "node_id", "comm")
+    assert caps == [7 + 1]
+    assert {refined[v] for v in range(6)} == {0}
+    assert refined[8] == refined[9] == 8 and refined[6] == refined[7] == 6
+
+
 def test_leiden_matches_louvain_on_clean_structure(spark):
     g = _two_triangles(spark)
     lo = rows_to_dict(louvain(g).communities, "node_id", "community")

@@ -2,10 +2,10 @@
 bit-identical to the distributed sub-round schedule (same assignments,
 levels, iterations, convergence flag; modularity to 1e-9).
 
-The gate (``_LOCAL_FINISH_MAX_ROWS``) is forced per call through the
-``local_finish_max_rows`` argument so both paths run on the same input:
-``0`` pins the pure distributed kernel, a huge value pins the local path
-from level 0.
+The engine's size policy is pinned per call with ``loop_state.pinned_tier``
+so both paths run on the same input: ``"memory"`` pins the pure distributed
+kernel (memory truncation, AQE on), ``"parquet"`` the above-gate chained
+schedule, ``"local"`` the local path from level 0.
 """
 
 import random
@@ -20,6 +20,8 @@ from graph_data_science_spark.operators.louvain import (
     louvain,
     modularity_optimization,
 )
+from graph_data_science_spark.plans import loop_state
+from graph_data_science_spark.plans.loop_state import pinned_tier
 from tests.conftest import rows_to_dict
 
 
@@ -43,10 +45,10 @@ def _random_graph(spark, seed, weighted):
 @pytest.mark.parametrize("seed,weighted", [(7, False), (8, True), (9, False)])
 def test_local_finish_parity_random(spark, seed, weighted):
     g = _random_graph(spark, seed, weighted)
-    dist = louvain(g, max_levels=3, max_iterations=4,
-                   local_finish_max_rows=0)
-    loc = louvain(g, max_levels=3, max_iterations=4,
-                  local_finish_max_rows=10**9)
+    with pinned_tier("memory"):
+        dist = louvain(g, max_levels=3, max_iterations=4)
+    with pinned_tier("local"):
+        loc = louvain(g, max_levels=3, max_iterations=4)
     assert (rows_to_dict(dist.communities, "node_id", "community")
             == rows_to_dict(loc.communities, "node_id", "community"))
     assert dist.ran_levels == loc.ran_levels
@@ -55,16 +57,15 @@ def test_local_finish_parity_random(spark, seed, weighted):
     assert dist.modularity == pytest.approx(loc.modularity, abs=1e-9)
 
 
-def test_local_finish_parity_modularity_optimization(spark, monkeypatch):
+def test_local_finish_parity_modularity_optimization(spark):
     g = _random_graph(spark, 11, True)
-    dist = modularity_optimization(g, max_iterations=4,
-                                   local_finish_max_rows=0)
-    loc = modularity_optimization(g, max_iterations=4,
-                                  local_finish_max_rows=10**9)
+    with pinned_tier("memory"):
+        dist = modularity_optimization(g, max_iterations=4)
+    with pinned_tier("local"):
+        loc = modularity_optimization(g, max_iterations=4)
     # the above-gate schedule: sub-rounds chained, one truncate per iteration
-    monkeypatch.setattr(louvain_mod, "_AQE_OFF_MIN_M", 0.0)
-    above = modularity_optimization(g, max_iterations=4,
-                                    local_finish_max_rows=0)
+    with pinned_tier("parquet"):
+        above = modularity_optimization(g, max_iterations=4)
     want = rows_to_dict(loc.communities, "node_id", "community")
     for res in (dist, above):
         assert rows_to_dict(res.communities, "node_id", "community") == want
@@ -73,18 +74,29 @@ def test_local_finish_parity_modularity_optimization(spark, monkeypatch):
     assert above.ran_iterations == dist.ran_iterations
 
 
-def test_local_finish_engages_midway(spark):
-    # gate sized between level-0 adjacency (2·13=26 rows) and the coarse
-    # level-1 graph: level 0 runs distributed, level 1 finishes locally,
-    # exercising the mapping-composition join branch
+def test_local_finish_engages_midway(spark, monkeypatch):
+    # size threshold between level 0 (16 undirected edges, 12 nodes) and
+    # the coarse level-1 graph: level 0 runs distributed, level 1 finishes
+    # locally, exercising the mapping-composition join branch
     tris = []
     for t in range(4):
         b = 3 * t
         tris += [(b, b + 1), (b + 1, b + 2), (b, b + 2)]
     ring = [(2, 3), (5, 6), (8, 9), (11, 0)]
     g = graph_from_edges(spark, edges_from_tuples(spark, tris + ring))
-    dist = louvain(g, local_finish_max_rows=0)
-    mid = louvain(g, local_finish_max_rows=20)  # < 32 adj rows at level 0
+    with pinned_tier("memory"):
+        dist = louvain(g)
+    solved = []  # supernode count of each local finish
+    real = louvain_mod._local_solve
+
+    def spy(src, dst, w, ids, *args):
+        solved.append(len(ids))
+        return real(src, dst, w, ids, *args)
+
+    monkeypatch.setattr(louvain_mod, "_local_solve", spy)
+    monkeypatch.setattr(loop_state, "LARGE_STATE_ROWS", 12)
+    mid = louvain(g)
+    assert len(solved) == 1 and solved[0] < 12, solved
     assert (rows_to_dict(dist.communities, "node_id", "community")
             == rows_to_dict(mid.communities, "node_id", "community"))
     assert dist.ran_levels == mid.ran_levels

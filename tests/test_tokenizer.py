@@ -180,6 +180,7 @@ def test_bpe_train_local_equals_distributed(spark):
     learn the IDENTICAL merge list (same greedy fold, same tie-break) —
     the louvain local-finish discipline, pinned here."""
     from graph_data_science_spark.operators.tokenizer import bpe_train
+    from graph_data_science_spark.plans.loop_state import pinned_tier
 
     docs = spark.createDataFrame(
         [(i, t) for i, t in enumerate(
@@ -188,5 +189,6 @@ def test_bpe_train_local_equals_distributed(spark):
              "the the the cat cat"] * 3)],
         ["doc_id", "text"])
     local = bpe_train(docs, n_merges=15)
-    dist = bpe_train(docs, n_merges=15, local_finish_max_words=0)
+    with pinned_tier("memory"):
+        dist = bpe_train(docs, n_merges=15)
     assert local == dist and len(local) == 15

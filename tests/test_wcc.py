@@ -81,6 +81,7 @@ def test_fusion_gates_off_below_row_threshold(spark):
 
     small = wcc(g)
     assert all(m["fused"] == 1 for m in small.metrics), small.metrics
+    assert all(m["tier"] == "memory" for m in small.metrics), small.metrics
 
     old = loop_state.LARGE_STATE_ROWS
     loop_state.LARGE_STATE_ROWS = 1  # force "large" classification
@@ -89,6 +90,7 @@ def test_fusion_gates_off_below_row_threshold(spark):
     finally:
         loop_state.LARGE_STATE_ROWS = old
     assert any(m["fused"] > 1 for m in forced.metrics), forced.metrics
+    assert all(m["tier"] == "parquet" for m in forced.metrics), forced.metrics
 
     a = {r["node_id"]: r["component"] for r in small.components.collect()}
     b = {r["node_id"]: r["component"] for r in forced.components.collect()}
