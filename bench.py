@@ -16,10 +16,9 @@ that no clean run reproduced). Setup (graph/table load, edge persist) is
 per-child and excluded from the timed region, as before. Set
 SPARK_GRAFT_INPROC=1 to force the old single-session mode (used by tests).
 
-Scaling protocol (north rule, sandbox proxy): run this file twice —
-SPARK_GRAFT_CPUS=8 and SPARK_GRAFT_CPUS=32 — on the same SF dir; efficiency
-= (T8/T32)/4. ``scripts/scaling_bench.py`` automates that and writes
-BENCH/BASELINE.md.
+Scaling protocol (sandbox proxy): run this file twice — SPARK_GRAFT_CPUS=8
+and SPARK_GRAFT_CPUS=32 — on the same SF dir; efficiency = (T8/T32)/4.
+BENCH/BASELINE.md records the measured pairs.
 """
 
 from __future__ import annotations

@@ -189,7 +189,7 @@ def _local_move(adj, sup_nodes, k, m, max_iterations, n_classes, scratch,
     ``n_classes``. Blocks stay one iteration: each sub-round references its
     predecessor ~5×, so Catalyst's tree walk grows ~5^depth."""
     comm = sup_nodes.select("node_id", F.col("node_id").alias("comm"))
-    comm = scratch.truncate(comm, "comm")
+    comm = scratch.truncate(comm, "comm", rows_hint=scratch.rows("k"))
     total = 0
     it = 0
     moves = 0
@@ -596,6 +596,8 @@ def _multilevel(graph, max_levels, max_iterations, n_classes, weighted,
                 return CommunityResult(final, q, levels + lf_levels,
                                        total_iters + lf_iters, lf_conv)
             k = scratch.truncate(_degrees(adj, sup), "k")
+            if levels == 0:
+                n_nodes = scratch.rows("k")
             comm, moves, iters, level_conv = _local_move(
                 adj, sup, k, m, max_iterations, n_classes, scratch, gamma)
             total_iters += iters
@@ -619,8 +621,13 @@ def _multilevel(graph, max_levels, max_iterations, n_classes, weighted,
             # modularity and checkpoint: it stays lazy, and no coarse graph
             # is built for a level that will not run
             last = moves == 0 or levels == max_levels
+            # first-truncate size hints (Scratch.truncate) from counts the
+            # run holds: a level's assignment has one row per supernode
+            # (= its k rows), the mapping one per node, and a coarse level
+            # at most the supernodes and adjacency rows of the one below
             if not last:
-                comm = scratch.truncate(comm, "rl")
+                comm = scratch.truncate(comm, "rl",
+                                        rows_hint=scratch.rows("k"))
             if levels == 1:
                 # composing with the identity: the relabel IS the mapping
                 mapping = comm.select("node_id", F.col("comm").alias("super"))
@@ -629,13 +636,16 @@ def _multilevel(graph, max_levels, max_iterations, n_classes, weighted,
                     comm.withColumnRenamed("node_id", "super"), "super"
                 ).select("node_id", F.col("comm").alias("super"))
                 if not last:
-                    mapping = scratch.truncate(mapping, "map")
+                    mapping = scratch.truncate(mapping, "map",
+                                               rows_hint=n_nodes)
             if last:
                 break
-            adj = scratch.truncate(_coarsen(adj, comm), "cadj")
+            adj = scratch.truncate(_coarsen(adj, comm), "cadj",
+                                   rows_hint=scratch.rows(adj_stream))
             adj_stream = "cadj"
             sup = scratch.truncate(
-                comm.select(F.col("comm").alias("node_id")).distinct(), "sup")
+                comm.select(F.col("comm").alias("node_id")).distinct(), "sup",
+                rows_hint=scratch.rows("k"))
         final = mapping.select("node_id", F.col("super").alias("community"))
         q = _modularity_value(
             adj0, final.select("node_id", F.col("community").alias("comm")),

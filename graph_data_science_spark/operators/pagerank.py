@@ -277,8 +277,10 @@ def _delta_push(
                        "rank_sum": F.sum("rank")},
         manifest=manifest,
     )
-    res = driver.run(state, step, resume=resume)
-    edges.unpersist()
+    try:
+        res = driver.run(state, step, resume=resume)
+    finally:
+        edges.unpersist()
     scores = res.state.select("node_id", F.col("rank").alias("score"))
     if scaler:
         scores = apply_scaler(scores, "score", scaler)
@@ -333,8 +335,10 @@ def eigenvector(
         )
 
     driver = Pregel(spark, max_iterations=max_iterations, checkpoint_dir=checkpoint_dir)
-    res = driver.run(state, step)
-    edges.unpersist()
+    try:
+        res = driver.run(state, step)
+    finally:
+        edges.unpersist()
     return PageRankResult(
         res.state.select("node_id", F.col("rank").alias("score")),
         res.ran_iterations, res.converged, res.metrics,

@@ -177,8 +177,7 @@ def bpe_train(docs: DataFrame, n_merges: int = 20, text_col: str = "text",
 
     Batch sizes on character-level early rounds are small (single-letter
     symbols interact densely) — the local finish is the big lever; the
-    batching bounds the distributed path. Measured round counts:
-    scripts/bpe_train_rounds.py.
+    batching bounds the distributed path (docs/SCALE_NOTES.md §33).
     """
     loop = LoopState()
     state = loop.truncate(_word_table(docs, text_col))

@@ -131,7 +131,10 @@ def run_streaming_pagerank(
     ``state_dir/scores-{0,1}`` with a ``_latest`` marker
     (``_run_slot_maintainer``), so a later drain resumes from the last
     converged state like the Pregel checkpoint story. Returns the final
-    ``(node_id, score)`` DataFrame — empty for an empty drop zone.
+    ``(node_id, score)`` DataFrame — empty for an empty drop zone. A batch
+    that stops at ``max_iterations`` unconverged raises ``ValueError``
+    (wrapped by Spark's streaming query error) and leaves the marker on
+    the previous batch.
 
     Batch-equivalence invariant (tested): after draining N batches the
     scores match a from-scratch :func:`pagerank` on the union of all
@@ -148,10 +151,17 @@ def run_streaming_pagerank(
         edges = spark.read.parquet(edges_dir).dropDuplicates(["src", "dst"])
         if prev is None:
             prev = spark.createDataFrame([], "node_id long, score double")
-        return pagerank_incremental(
+        res = pagerank_incremental(
             graph_from_edges(spark, edges), prev,
             damping_factor=damping_factor, tolerance=tolerance,
-            max_iterations=max_iterations).scores
+            max_iterations=max_iterations)
+        if not res.converged:
+            # raised before the slot write: the marker stays on the last
+            # converged batch
+            raise ValueError(
+                f"run_streaming_pagerank: batch did not converge in "
+                f"{max_iterations} iterations at tolerance {tolerance}")
+        return res.scores
 
     return _run_slot_maintainer(spark, edge_delta_dir, state_dir, update,
                                 "scores", schema)

@@ -42,6 +42,19 @@ def test_pagerank_resume_equals_uninterrupted(f1_graph, tmp_path):
     assert resumed.ran_iterations < 15
 
 
+def test_mismatched_resume_raises_and_leaves_no_cached_frame(
+        spark, f1_graph, tmp_path):
+    """A resume into snapshots written with another damping factor raises
+    the manifest error and still releases the persisted edge frame."""
+    ckpt = str(tmp_path / "pr")
+    pagerank(f1_graph, tolerance=0.0, max_iterations=3, checkpoint_dir=ckpt)
+    spark.catalog.clearCache()
+    with pytest.raises(ValueError, match="manifest"):
+        pagerank(f1_graph, damping_factor=0.5, tolerance=0.0,
+                 max_iterations=5, checkpoint_dir=ckpt, resume=True)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_metrics_lineage_records(f1_graph, tmp_path):
     ckpt = str(tmp_path / "m")
     res = pagerank(f1_graph, tolerance=0.0, max_iterations=4, checkpoint_dir=ckpt)

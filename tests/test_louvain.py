@@ -31,14 +31,19 @@ def test_modularity_optimization_two_triangles(spark):
     assert res.converged
 
 
-def test_louvain_coarsens_cliques(spark):
-    # four triangles in a ring: level 1 groups triangles, level 2 may merge
+def _triangle_ring(spark):
+    # four triangles in a ring
     tris = []
     for t in range(4):
         b = 3 * t
         tris += [(b, b + 1), (b + 1, b + 2), (b, b + 2)]
     ring = [(2, 3), (5, 6), (8, 9), (11, 0)]
-    g = graph_from_edges(spark, edges_from_tuples(spark, tris + ring))
+    return graph_from_edges(spark, edges_from_tuples(spark, tris + ring))
+
+
+def test_louvain_coarsens_cliques(spark):
+    # level 1 groups triangles, level 2 may merge
+    g = _triangle_ring(spark)
     res = louvain(g)
     got = rows_to_dict(res.communities, "node_id", "community")
     # every triangle stays together
@@ -47,6 +52,31 @@ def test_louvain_coarsens_cliques(spark):
         assert got[b] == got[b + 1] == got[b + 2]
     assert res.modularity > 0.4
     assert res.ran_levels >= 1
+
+
+def test_multilevel_streams_with_held_counts_stay_in_memory(
+        spark, monkeypatch):
+    """The level assignment, relabel, mapping, supernode and coarse
+    adjacency streams seed their first truncate with a count the run
+    already holds, so a tiny graph never round-trips them through
+    parquet."""
+    from graph_data_science_spark.plans import loop_state
+
+    seen = []
+    real = loop_state.Scratch.in_memory
+
+    def spy(self, stream, rows_hint=None):
+        got = real(self, stream, rows_hint)
+        seen.append((stream, got))
+        return got
+
+    monkeypatch.setattr(loop_state.Scratch, "in_memory", spy)
+    res = leiden(_triangle_ring(spark), theta=0.0)
+    assert res.ran_levels >= 2
+    hinted = {"comm", "rl", "map", "sup", "cadj"}
+    # "map" is first truncated from a third level on; two levels here
+    assert hinted - {"map"} <= {s for s, _ in seen}
+    assert [s for s, mem in seen if s in hinted and not mem] == []
 
 
 def test_louvain_weighted_pulls_node_across(spark):

@@ -120,6 +120,24 @@ def test_streaming_pagerank_matches_batch_recompute(spark, workdir):
     assert all(abs(s2[k] - ref2[k]) < 1e-6 for k in ref2)
 
 
+def test_streaming_pagerank_unconverged_batch_raises(spark, workdir):
+    """A batch capped before convergence raises instead of publishing
+    capped scores, and the slot marker does not advance."""
+    from pyspark.errors import StreamingQueryException
+
+    from graph_data_science_spark.streaming.ingest import run_streaming_pagerank
+
+    drop = os.path.join(workdir, "pr_drop")
+    state = os.path.join(workdir, "pr_state")
+    spark.createDataFrame([(0, 1), (1, 2), (2, 0), (2, 3)],
+                          "src long, dst long").write.parquet(drop)
+    with pytest.raises((ValueError, StreamingQueryException),
+                       match="did not converge"):
+        run_streaming_pagerank(spark, drop, state, max_iterations=2,
+                               tolerance=1e-12)
+    assert not os.path.exists(os.path.join(state, "_latest"))
+
+
 # -- incremental triangle count ------------------------------------------------
 
 def _tri_graph(spark, edges):
