@@ -59,6 +59,18 @@ def canonical_edges(edges: DataFrame) -> DataFrame:
             .where(F.col("src") != F.col("dst")).distinct())
 
 
+def id_positions(ids, values):
+    """``(positions, present)`` of ``values`` in the sorted id array
+    ``ids`` — how the driver-local kernels map node ids to array slots.
+    Where ``present`` is False the position is a placeholder."""
+    import numpy as np
+    if not len(ids):
+        return (np.zeros(len(values), dtype=np.int64),
+                np.zeros(len(values), dtype=bool))
+    pos = np.minimum(np.searchsorted(ids, values), len(ids) - 1)
+    return pos, ids[pos] == values
+
+
 @dataclass
 class Graph:
     """Immutable algorithm-facing graph view (nodes + edges DataFrames)."""

@@ -13,8 +13,19 @@ Reference semantics (algo/src/main/java/org/neo4j/gds/triangle/):
   ``C(v) = 2*T(v) / (deg(v) * (deg(v)-1))``; 0 when deg < 2; NaN for
   nodes excluded by maxDegree.
 
-Spark plan (SURVEY §2.4 "ordered two-hop self-join", degree-oriented —
-the compact-forward algorithm):
+Two plans, chosen by the engine's size policy (``loop_state.tier`` of the
+graph's edge and node counts):
+
+- ``"local"`` (both below ``LARGE_STATE_ROWS``): the edges cross to the
+  driver once through Arrow and are canonicalized there by
+  ``graph.canonical_edges``'s rule (self-loops dropped, each unordered
+  pair once), which saves that function's distinct shuffle; the same
+  degree-ordered wedge closing then runs in NumPy, in passes of at most
+  as many wedges as edges (:func:`_local_triangles`). The triangle
+  stream and the per-node counts return through ``createDataFrame``.
+- otherwise, the Spark plan (SURVEY §2.4 "ordered two-hop self-join",
+  degree-oriented — the compact-forward algorithm):
+
 1. canonicalize undirected edges to ``src < dst``, distinct (dedup =
    the reference's parallel-edge guard) — ``graph.canonical_edges``, the
    one canonicalization the batch kernels, :func:`triangle_count_delta`
@@ -38,9 +49,12 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
-from graph_data_science_spark.graph import Graph, canonical_edges
+from graph_data_science_spark.graph import Graph, canonical_edges, id_positions
+from graph_data_science_spark.plans.loop_state import tier
 
 
 @dataclass
@@ -62,15 +76,91 @@ def triangles(graph: Graph, max_degree: int | None = None) -> DataFrame:
     """Stream of distinct triangles ``(a, b, c)``, a < b < c — the
     ``gds.triangles`` analog (algo/.../triangle/TriangleStream.java:52).
 
-    The returned DataFrame is materialized (single localCheckpoint) and the
-    intermediate caches are unpersisted before returning — no block leaks
-    across repeated calls, and consumers reuse the materialized triangle
-    stream instead of recomputing the wedge join."""
+    The returned DataFrame is materialized — by the driver-local plan's
+    ``createDataFrame``, or the join plan's single localCheckpoint, whose
+    intermediate caches are unpersisted before returning — so no block
+    leaks across repeated calls, and consumers reuse the materialized
+    triangle stream instead of recomputing the wedge join."""
+    if _local_tier(graph):
+        ids, _, tri = _local_triangles(graph, max_degree)
+        return _local_frame(graph, ids[tri], ("a", "b", "c"))
     tri, handles = _build_triangles(graph, max_degree)
     out = tri.localCheckpoint(eager=True)
     for h in handles:
         h.unpersist()
     return out
+
+
+def _local_tier(graph: Graph) -> bool:
+    return (tier(graph.edge_count()) == "local"
+            and tier(graph.node_count()) == "local")
+
+
+def _local_frame(graph: Graph, data, names) -> DataFrame:
+    """Driver arrays → a DataFrame of ``long`` columns, whose rows the JVM
+    holds from creation on."""
+    cols = np.asarray(data, dtype=np.int64).reshape(-1, len(names))
+    table = pa.table({c: cols[:, i] for i, c in enumerate(names)})
+    return graph.edges.sparkSession.createDataFrame(table)
+
+
+def _local_triangles(graph: Graph, max_degree: int | None):
+    """The driver-local plan (module doc) → ``(ids, deg, tri)``: the
+    sorted endpoint ids of the graph's edges, their degree on the simple
+    undirected graph, and a ``(k, 3)`` array of triangles as positions into
+    ``ids``, ascending within a row (so ``ids[tri]`` is the stream
+    ``a < b < c``).
+
+    The same compact-forward steps as the Spark plan: drop nodes above
+    ``max_degree``, orient each surviving edge from its lower (degree, id)
+    end, pair the out-neighbours of each node in that order, and keep a
+    wedge when its closing edge is an oriented edge. A pass over the
+    wedges generates at most as many as there are edges, so the driver
+    holds O(edges) at a time whatever the wedge count."""
+    e = graph.edges.select("src", "dst").toArrow()
+    src, dst = e.column("src").to_numpy(), e.column("dst").to_numpy()
+    ids = np.unique(np.concatenate([src, dst]))
+    n = len(ids)
+    a, b = np.searchsorted(ids, src), np.searchsorted(ids, dst)
+    # the simple undirected graph: self-loops dropped, each pair once
+    simple = np.unique((np.minimum(a, b) * n + np.maximum(a, b))[a != b])
+    s, d = simple // n, simple % n
+    deg = np.bincount(s, minlength=n) + np.bincount(d, minlength=n)
+    sub_deg = deg
+    if max_degree is not None:
+        keep = deg <= int(max_degree)
+        kept = keep[s] & keep[d]
+        s, d = s[kept], d[kept]
+        # degrees for orientation are recomputed on the surviving subgraph
+        sub_deg = np.bincount(s, minlength=n) + np.bincount(d, minlength=n)
+    # orientation rank of each node in (degree, id) order — ids are sorted,
+    # so position order is id order
+    by_rank = np.lexsort((np.arange(n), sub_deg))
+    rk = np.empty(n, dtype=np.int64)
+    rk[by_rank] = np.arange(n)
+    key = np.sort(np.minimum(rk[s], rk[d]) * n + np.maximum(rk[s], rk[d]))
+    lo, hi = key // n, key % n
+    # oriented edge i pairs with the later edges of its low corner's run:
+    # hi ascends within a run, so each triangle is one wedge
+    # (lo, hi[i], hi[j]), i < j, at its lowest-ranked corner
+    wedges = np.searchsorted(lo, lo, side="right") - np.arange(len(key)) - 1
+    before = np.concatenate([[0], np.cumsum(wedges)])
+    found = [np.empty((0, 3), dtype=np.int64)]
+    i0 = 0
+    while i0 < len(key):
+        i1 = max(i0 + 1, int(np.searchsorted(
+            before, before[i0] + len(key), side="right")) - 1)
+        c = wedges[i0:i1]
+        first = np.repeat(np.arange(i0, i1), c)
+        second = (first + 1 + np.arange(len(first))
+                  - np.repeat(np.cumsum(c) - c, c))
+        close = hi[first] * n + hi[second]
+        at = np.minimum(np.searchsorted(key, close), len(key) - 1)
+        hit = key[at] == close
+        found.append(np.stack([lo[first[hit]], hi[first[hit]],
+                               hi[second[hit]]], axis=1))
+        i0 = i1
+    return ids, deg, np.sort(by_rank[np.concatenate(found)], axis=1)
 
 
 def _build_triangles(graph: Graph, max_degree: int | None = None):
@@ -141,6 +231,23 @@ def triangle_count(graph: Graph, max_degree: int | None = None) -> TriangleCount
 
     Excluded (degree > max_degree) nodes report -1, like the reference.
     """
+    if _local_tier(graph):
+        ids, deg, tri = _local_triangles(graph, max_degree)
+        node_ids = graph.nodes.select("node_id").toArrow().column(
+            "node_id").to_numpy()
+        pos, present = id_positions(ids, node_ids)
+        pos = pos[present]
+        counts = np.bincount(tri.ravel(), minlength=len(ids))
+        per_node = np.zeros(len(node_ids), dtype=np.int64)
+        per_node[present] = counts[pos]
+        if max_degree is not None:
+            node_deg = np.zeros(len(node_ids), dtype=np.int64)
+            node_deg[present] = deg[pos]
+            per_node[node_deg > int(max_degree)] = -1
+        return TriangleCountResult(
+            _local_frame(graph, np.stack([node_ids, per_node], axis=1),
+                         ("node_id", "triangles")),
+            len(tri), _local_frame(graph, ids[tri], ("a", "b", "c")))
     tri = triangles(graph, max_degree=max_degree)  # checkpointed, leak-free
     corners = (
         tri.select(F.col("a").alias("node_id"))

@@ -5,8 +5,9 @@ iterative loop uses.
 :data:`LARGE_STATE_ROWS` is the package's only size threshold:
 
 - ``"local"`` — a known count below it: a loop with a driver-local kernel
-  (Louvain's local finish, BPE's merge loop) finishes on the driver; any
-  other loop runs it as ``"memory"``.
+  (Louvain's local finish, BPE's merge loop, the PageRank superstep loop
+  of ``operators/pagerank.py``, triangle counting) runs on the driver;
+  any other loop runs it as ``"memory"``.
 - ``"parquet"`` — at or above it, or unknown (the scale-safe side):
   parquet truncation, AQE off, superstep fusion, shuffled joins.
 - ``"memory"`` — only through the override :func:`pinned_tier`: the

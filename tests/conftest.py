@@ -1,3 +1,4 @@
+import functools
 import os
 import sys
 
@@ -27,3 +28,22 @@ def spark():
 
 def rows_to_dict(df, key, value):
     return {r[key]: r[value] for r in df.collect()}
+
+
+def both_tiers(test):
+    """Run ``test`` once per size tier of the kernels with a driver-local
+    plan: ``"local"`` (that plan) and ``"memory"`` (the distributed join
+    plan on small input). The test keeps its name; a failure names the
+    tier."""
+    from graph_data_science_spark.plans.loop_state import pinned_tier
+
+    @functools.wraps(test)
+    def run(*args, **kwargs):
+        for t in ("local", "memory"):
+            with pinned_tier(t):
+                try:
+                    test(*args, **kwargs)
+                except AssertionError as e:
+                    e.add_note(f"tier: {t}")
+                    raise
+    return run

@@ -1,0 +1,152 @@
+"""The driver-local plan of PageRank and triangle counting: which plan the
+size policy picks, what a run leaves cached, and what it reports.
+
+The gate is moved by monkeypatching ``loop_state.LARGE_STATE_ROWS`` (the
+one size threshold ``loop_state.tier`` applies); the plan that ran shows in
+PageRank's metrics records (``"tier"``) and in a spy on the triangle
+kernels."""
+
+import itertools
+import os
+
+import pytest
+
+from graph_data_science_spark import progress
+from graph_data_science_spark.graph import Graph, edges_from_tuples
+from graph_data_science_spark.operators import pagerank as pagerank_module
+from graph_data_science_spark.operators import triangle as triangle_module
+from graph_data_science_spark.operators.pagerank import (
+    pagerank, pagerank_incremental)
+from graph_data_science_spark.operators.triangle import triangle_count
+from graph_data_science_spark.plans import loop_state
+from graph_data_science_spark.plans.loop_state import pinned_tier
+from tests.fixtures import F1_EDGES, F1_NODES
+
+
+def _graph(spark, edges, node_count):
+    return Graph(
+        nodes=spark.createDataFrame([(i,) for i in range(node_count)],
+                                    "node_id long"),
+        edges=edges_from_tuples(spark, edges))
+
+
+def _cache_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+# 4 edges on 10 nodes, and 6 edges on 4 nodes (two triangles)
+_FEW_EDGES = ([(0, 1), (1, 2), (2, 0), (2, 3)], 10)
+_FEW_NODES = ([(0, 1), (1, 2), (2, 0), (2, 3), (3, 0), (1, 3)], 4)
+
+
+@pytest.mark.parametrize("case", [_FEW_EDGES, _FEW_NODES],
+                         ids=["nodes_reach_gate", "edges_reach_gate"])
+def test_pagerank_join_plan_when_either_count_reaches_gate(
+        spark, monkeypatch, case):
+    edges, n = case
+    g = _graph(spark, edges, n)
+    monkeypatch.setattr(loop_state, "LARGE_STATE_ROWS", 5)
+    res = pagerank(g, tolerance=0.0, max_iterations=2)
+    assert res.metrics and "local" not in {m["tier"] for m in res.metrics}
+    monkeypatch.setattr(loop_state, "LARGE_STATE_ROWS", 11)
+    res = pagerank(g, tolerance=0.0, max_iterations=2)
+    assert {m["tier"] for m in res.metrics} == {"local"}
+
+
+@pytest.mark.parametrize("case", [_FEW_EDGES, _FEW_NODES],
+                         ids=["nodes_reach_gate", "edges_reach_gate"])
+def test_triangle_join_plan_when_either_count_reaches_gate(
+        spark, monkeypatch, case):
+    edges, n = case
+    calls = []
+    real = triangle_module._local_triangles
+
+    def spy(*a):
+        calls.append(a)
+        return real(*a)
+
+    monkeypatch.setattr(triangle_module, "_local_triangles", spy)
+    monkeypatch.setattr(loop_state, "LARGE_STATE_ROWS", 5)
+    joined = triangle_count(_graph(spark, edges, n))
+    assert not calls
+    monkeypatch.setattr(loop_state, "LARGE_STATE_ROWS", 11)
+    local = triangle_count(_graph(spark, edges, n))
+    assert len(calls) == 1
+    assert local.global_count == joined.global_count
+    assert sorted(local.per_node.collect()) == sorted(joined.per_node.collect())
+
+
+def test_local_tier_leaves_nothing_cached(spark):
+    g = _graph(spark, F1_EDGES, len(F1_NODES))
+    spark.catalog.clearCache()
+    with pinned_tier("local"):
+        prev = pagerank(g).scores
+        pagerank_incremental(g, prev).scores.collect()
+        assert _cache_empty(spark)
+        triangle_count(g).per_node.collect()
+    assert _cache_empty(spark)
+
+
+def test_failed_local_run_leaves_nothing_cached_and_is_marked(
+        spark, monkeypatch):
+    g = _graph(spark, F1_EDGES, len(F1_NODES))
+    spark.catalog.clearCache()
+    progress.clear()
+
+    def fail(*a, **k):
+        raise RuntimeError("superstep failed")
+
+    monkeypatch.setattr(pagerank_module.progress, "update", fail)
+    with pinned_tier("local"), pytest.raises(RuntimeError, match="superstep"):
+        pagerank(g, tolerance=0.0, max_iterations=3)
+    assert _cache_empty(spark)
+    rows = [r for r in progress.list_progress() if r["task_name"] == "pagerank"]
+    assert [r["status"] for r in rows] == ["FAILED"]
+
+
+def test_local_pagerank_reports_progress(spark):
+    g = _graph(spark, F1_EDGES, len(F1_NODES))
+    progress.clear()
+    with pinned_tier("local"):
+        res = pagerank(g, tolerance=0.0, max_iterations=6)
+    rows = [r for r in progress.list_progress() if r["task_name"] == "pagerank"]
+    assert len(rows) == 1
+    assert rows[0]["status"] == "FINISHED"
+    assert rows[0]["volume_total"] == 5 == rows[0]["volume_done"]
+    assert len(res.metrics) == 5
+
+
+def test_checkpointed_run_keeps_the_join_plan(spark, tmp_path):
+    g = _graph(spark, F1_EDGES, len(F1_NODES))
+    ckpt = str(tmp_path / "pr")
+    with pinned_tier("local"):
+        res = pagerank(g, tolerance=0.0, max_iterations=4, checkpoint_dir=ckpt)
+    assert {m["tier"] for m in res.metrics} <= {"memory", "parquet"}
+    snaps = os.listdir(os.path.join(ckpt, "state"))
+    assert {"superstep=00000", "superstep=00001", "superstep=00002"} <= set(snaps)
+
+
+def test_local_triangles_over_several_wedge_passes(spark):
+    """A clique has C(n,3) wedges, all closed, against C(n,2) edges, so the
+    driver-local plan takes several passes over its wedges."""
+    n = 12
+    g = _graph(spark, list(itertools.combinations(range(n), 2)), n)
+    with pinned_tier("local"):
+        res = triangle_count(g)
+    assert res.global_count == 220
+    assert sorted(map(tuple, res.triangles.collect())) == list(
+        itertools.combinations(range(n), 3))
+    assert {r["triangles"] for r in res.per_node.collect()} == {55}
+
+
+def test_pagerank_drops_edges_to_unknown_nodes_on_both_plans(spark):
+    """Edges whose endpoint is not a node carry no message, on either
+    plan: the join plan's inner and left joins drop them."""
+    g = _graph(spark, [(0, 1), (1, 2), (2, 0), (2, 5), (7, 0)], 3)
+    runs = {}
+    for t in ("local", "memory"):
+        with pinned_tier(t):
+            runs[t] = {r["node_id"]: r["score"] for r in pagerank(
+                g, tolerance=0.0, max_iterations=3).scores.collect()}
+    assert set(runs["local"]) == {0, 1, 2}
+    assert runs["local"] == pytest.approx(runs["memory"], abs=1e-12)

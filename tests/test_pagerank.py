@@ -11,7 +11,9 @@ from pyspark.sql import functions as F
 
 from graph_data_science_spark.graph import Graph, edges_from_tuples, graph_from_edges
 from graph_data_science_spark.operators.pagerank import pagerank
+from graph_data_science_spark.plans.loop_state import pinned_tier
 
+from tests.conftest import both_tiers
 from tests.fixtures import (
     F1_EDGES, F1_EXPECTED, F1_NODES,
     F2_EDGES, F2_EXPECTED_TOL01, F2_EXPECTED_UNWEIGHTED, F2_EXPECTED_WEIGHTED, F2_NODES,
@@ -28,6 +30,7 @@ def scores_dict(result):
     return {r["node_id"]: r["score"] for r in result.scores.collect()}
 
 
+@both_tiers
 def test_pagerank_f1_fixpoint(spark):
     g = build_graph(spark, F1_EDGES, F1_NODES)
     res = pagerank(g, damping_factor=0.85, tolerance=0.0, max_iterations=41)
@@ -54,6 +57,7 @@ def test_pagerank_f2_unweighted_defaults(spark):
     assert res.ran_iterations == 20  # doc golden: ranIterations = 20
 
 
+@both_tiers
 def test_pagerank_f2_weighted(spark):
     g = build_graph(spark, F2_EDGES, F2_NODES, weighted=True)
     res = pagerank(g, weighted=True)
@@ -62,6 +66,7 @@ def test_pagerank_f2_weighted(spark):
         assert got[node] == pytest.approx(want, abs=1e-6), f"node {node}"
 
 
+@both_tiers
 def test_pagerank_f2_tolerance_early_stop(spark):
     g = build_graph(spark, F2_EDGES, F2_NODES, weighted=True)
     res = pagerank(g, tolerance=0.1)
@@ -72,6 +77,7 @@ def test_pagerank_f2_tolerance_early_stop(spark):
     assert res.ran_iterations < 20
 
 
+@both_tiers
 def test_pagerank_personalized_source_nodes(spark):
     # personalized: non-source nodes start at 0; sources at alpha
     g = build_graph(spark, F2_EDGES, F2_NODES, weighted=True)
@@ -99,13 +105,17 @@ def test_pagerank_unknown_source_nodes_dropped(spark):
 
 
 def test_pagerank_salted_two_level_agg_matches(spark):
+    # the salt exists only in the join plan: compare it with that plan
     g = build_graph(spark, F1_EDGES, F1_NODES)
-    base = scores_dict(pagerank(g, tolerance=0.0, max_iterations=41))
-    salted = scores_dict(pagerank(g, tolerance=0.0, max_iterations=41, skew_salt=4))
+    with pinned_tier("memory"):
+        base = scores_dict(pagerank(g, tolerance=0.0, max_iterations=41))
+        salted = scores_dict(pagerank(g, tolerance=0.0, max_iterations=41,
+                                      skew_salt=4))
     for node in F1_NODES:
         assert salted[node] == pytest.approx(base[node], abs=1e-12)
 
 
+@both_tiers
 def test_pagerank_vs_numpy_power_iteration(spark):
     """F6 cross-check: same delta-push recurrence in dense NumPy."""
     import numpy as np
@@ -143,6 +153,7 @@ def test_pagerank_vs_numpy_power_iteration(spark):
 
 # ---- incremental (warm-start push-residual) ---------------------------------
 
+@both_tiers
 def test_pagerank_incremental_matches_full_recompute(spark):
     from graph_data_science_spark.operators.pagerank import pagerank_incremental
     base_edges = [(a, b) for (a, b, *_r) in F2_EDGES]
@@ -165,6 +176,7 @@ def test_pagerank_incremental_matches_full_recompute(spark):
         assert abs(got[k] - full[k]) < 1e-6, (k, got[k], full[k])
 
 
+@both_tiers
 def test_pagerank_incremental_weighted_matches_full_recompute(spark):
     from graph_data_science_spark.operators.pagerank import pagerank_incremental
     kw = dict(damping_factor=0.5, tolerance=1e-9, max_iterations=60,
@@ -185,6 +197,7 @@ def test_pagerank_incremental_weighted_matches_full_recompute(spark):
         assert abs(got[k] - full[k]) < 1e-6, (k, got[k], full[k])
 
 
+@both_tiers
 def test_pagerank_incremental_cold_start_equals_reference_kernel(spark):
     from graph_data_science_spark.operators.pagerank import pagerank_incremental
     g = build_graph(spark, F1_EDGES, F1_NODES)
@@ -196,6 +209,7 @@ def test_pagerank_incremental_cold_start_equals_reference_kernel(spark):
         assert abs(got[k] - ref[k]) < 1e-9
 
 
+@both_tiers
 def test_pagerank_incremental_frontier_is_local(spark):
     from graph_data_science_spark.operators.pagerank import pagerank_incremental
     # long chain; a leaf edge appended at the TAIL perturbs only its
@@ -214,3 +228,27 @@ def test_pagerank_incremental_frontier_is_local(spark):
     # upstream of the change has zero residual, so well under half of n
     first_active = inc.metrics[0]["active"] if inc.metrics else None
     assert first_active is not None and first_active < (n + 1) // 2
+
+
+@pytest.mark.parametrize("fixture", ["F1", "F2"])
+def test_pagerank_tiers_agree_on_run_records(spark, fixture):
+    """The driver-local plan and the join plan stop at the same superstep
+    and leave the same per-superstep activity and row counts."""
+    if fixture == "F1":
+        g = build_graph(spark, F1_EDGES, F1_NODES)
+    else:
+        g = build_graph(spark, F2_EDGES, F2_NODES, weighted=True)
+    runs = {}
+    for t in ("local", "memory"):
+        with pinned_tier(t):
+            res = pagerank(g, tolerance=1e-4)
+        runs[t] = res
+        assert {m["tier"] for m in res.metrics} == {t}
+    local, memory = runs["local"], runs["memory"]
+    assert local.ran_iterations == memory.ran_iterations
+    assert local.converged == memory.converged
+    assert [(m["superstep"], m["active"], m["rows"]) for m in local.metrics] \
+        == [(m["superstep"], m["active"], m["rows"]) for m in memory.metrics]
+    for a, b in zip(local.metrics, memory.metrics):
+        assert a["delta_max"] == pytest.approx(b["delta_max"], abs=1e-12)
+        assert a["rank_sum"] == pytest.approx(b["rank_sum"], abs=1e-12)

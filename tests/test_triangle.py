@@ -10,7 +10,7 @@ from graph_data_science_spark.operators.triangle import (
     triangle_count,
     triangles,
 )
-from tests.conftest import rows_to_dict
+from tests.conftest import both_tiers, rows_to_dict
 from tests.fixtures import (
     F5_EDGES,
     F5_EXPECTED_LCC,
@@ -27,6 +27,7 @@ def f5_graph(spark):
     return graph_from_edges(spark, edges, nodes)
 
 
+@both_tiers
 def test_triangle_doc_fixture(f5_graph):
     res = triangle_count(f5_graph)
     assert res.global_count == F5_GLOBAL_TRIANGLES
@@ -39,6 +40,7 @@ def test_lcc_doc_fixture(f5_graph):
         assert got[n] == pytest.approx(want, abs=1e-12)
 
 
+@both_tiers
 def test_triangle_stream_ordered(f5_graph):
     tri = {tuple(r) for r in triangles(f5_graph).collect()}
     # doc fixture: Michael(1)-Karin(2)-Chris(3), Michael-Chris-Will(4),
@@ -47,6 +49,7 @@ def test_triangle_stream_ordered(f5_graph):
     assert all(a < b < c for a, b, c in tri)
 
 
+@both_tiers
 def test_five_clique(spark):
     # 5-clique: global 10, each node 6 (IntersectingTriangleCountTest)
     edges = edges_from_tuples(
@@ -57,6 +60,7 @@ def test_five_clique(spark):
     assert set(rows_to_dict(res.per_node, "node_id", "triangles").values()) == {6}
 
 
+@both_tiers
 def test_parallel_and_reverse_edges_deduped(spark):
     # triangle present twice + reversed + self-loop: still exactly 1
     edges = edges_from_tuples(
@@ -75,6 +79,7 @@ def test_no_triangles_line(spark):
     assert set(rows_to_dict(res.per_node, "node_id", "triangles").values()) == {0}
 
 
+@both_tiers
 def test_max_degree_exclusion(spark):
     # hub node 0 in a 4-clique; cap degree at 2 → 0 excluded (-1), and the
     # remaining triangle among 1,2,3 still counted
@@ -101,6 +106,7 @@ def test_max_degree_exclusion(spark):
     assert math.isnan(lcc[0])
 
 
+@both_tiers
 def test_brute_force_random(spark):
     # F6: seeded random graph vs O(n^3) brute force
     import itertools
