@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from graph_data_science_spark.operators.embeddings import _u01
 from graph_data_science_spark.operators.graphsage import _py_u01
-from graph_data_science_spark.plans.loop_state import LoopState
+from graph_data_science_spark.plans.loop_state import Scratch
 
 
 @dataclass
@@ -95,7 +95,8 @@ def random_forest_fit(
     stats = ex.select(*[F.min(F.element_at("x", i + 1)).alias(f"lo{i}")
                         for i in range(d)],
                       *[F.max(F.element_at("x", i + 1)).alias(f"hi{i}")
-                        for i in range(d)]).first()
+                        for i in range(d)],
+                      F.count(F.lit(1)).alias("_n")).first()
     mins = [float(stats[f"lo{i}"]) for i in range(d)]
     steps = [(float(stats[f"hi{i}"]) - mins[i]) / n_bins for i in range(d)]
 
@@ -109,90 +110,94 @@ def random_forest_fit(
              .where(_u01(F.col("id"), F.col("tree"), F.lit("bag"),
                          F.lit(int(seed))) < float(subsample))
              .select("tree", F.lit(1).alias("node"), "bins", "y"))
-    loop = LoopState()
-    state = loop.truncate(state)
+    scratch = Scratch(spark)
+    try:
+        # bagging keeps at most every (row, tree) pair: a free size bound
+        state = scratch.truncate(state, "state",
+                                 rows_hint=int(stats["_n"]) * n_trees)
 
-    open_nodes = {(t, 1) for t in range(n_trees)}
-    for depth in range(max_depth + 1):
-        if not open_nodes:
-            break
-        hist_rows = (
-            state
-            .select("tree", "node", "y",
-                    F.posexplode("bins").alias("feature", "bin"))
-            .groupBy("tree", "node", "feature", "bin", "y")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .collect())
-        # (tree, node) → feature → bin → class counts
-        hists: dict = {}
-        for r in hist_rows:
-            key = (r["tree"], r["node"])
-            if key not in open_nodes:
-                continue
-            hists.setdefault(key, {}).setdefault(
-                r["feature"], {}).setdefault(r["bin"],
-                                             [0.0] * n_classes)[r["y"]] += r["c"]
-        new_splits = {}
-        next_open = set()
-        for key in sorted(hists):
-            t, node = key
-            feat_hists = hists[key]
-            # total class counts at this node (feature 0 covers every row)
-            totals = [0.0] * n_classes
-            for bins in feat_hists.get(0, {}).values():
-                for c in range(n_classes):
-                    totals[c] += bins[c]
-            n_node = sum(totals)
-            majority = max(range(n_classes), key=lambda c: (totals[c], -c))
-            parent_gini = _gini(totals)
-            best = None  # (gain, feature, thr_bin)
-            if depth < max_depth and n_node >= min_split_size \
-                    and parent_gini > 0:
-                allowed = sorted(
-                    range(d),
-                    key=lambda f: (_py_u01("rf-feat", t, node, f, seed), f)
-                )[:k_feats]
-                for f in sorted(allowed):
-                    per_bin = feat_hists.get(f, {})
-                    left = [0.0] * n_classes
-                    n_left = 0.0
-                    for b in range(n_bins - 1):
-                        for c in range(n_classes):
-                            left[c] += per_bin.get(b, [0.0] * n_classes)[c]
-                        n_left = sum(left)
-                        n_right = n_node - n_left
-                        if n_left == 0 or n_right == 0:
-                            continue
-                        right = [totals[c] - left[c] for c in range(n_classes)]
-                        gain = parent_gini - (
-                            n_left / n_node * _gini(left)
-                            + n_right / n_node * _gini(right))
-                        cand = (round(gain, 12), -f, -b)
-                        if gain > 1e-12 and (best is None or cand > best[0]):
-                            best = (cand, f, b)
-            if best is None:
-                model.splits[key] = ("leaf", majority)
+        open_nodes = {(t, 1) for t in range(n_trees)}
+        for depth in range(max_depth + 1):
+            if not open_nodes:
+                break
+            hist_rows = (
+                state
+                .select("tree", "node", "y",
+                        F.posexplode("bins").alias("feature", "bin"))
+                .groupBy("tree", "node", "feature", "bin", "y")
+                .agg(F.count(F.lit(1)).alias("c"))
+                .collect())
+            # (tree, node) → feature → bin → class counts
+            hists: dict = {}
+            for r in hist_rows:
+                key = (r["tree"], r["node"])
+                if key not in open_nodes:
+                    continue
+                hists.setdefault(key, {}).setdefault(
+                    r["feature"], {}).setdefault(r["bin"],
+                                                 [0.0] * n_classes)[r["y"]] += r["c"]
+            new_splits = {}
+            next_open = set()
+            for key in sorted(hists):
+                t, node = key
+                feat_hists = hists[key]
+                # total class counts at this node (feature 0 covers every row)
+                totals = [0.0] * n_classes
+                for bins in feat_hists.get(0, {}).values():
+                    for c in range(n_classes):
+                        totals[c] += bins[c]
+                n_node = sum(totals)
+                majority = max(range(n_classes), key=lambda c: (totals[c], -c))
+                parent_gini = _gini(totals)
+                best = None  # (gain, feature, thr_bin)
+                if depth < max_depth and n_node >= min_split_size \
+                        and parent_gini > 0:
+                    allowed = sorted(
+                        range(d),
+                        key=lambda f: (_py_u01("rf-feat", t, node, f, seed), f)
+                    )[:k_feats]
+                    for f in sorted(allowed):
+                        per_bin = feat_hists.get(f, {})
+                        left = [0.0] * n_classes
+                        n_left = 0.0
+                        for b in range(n_bins - 1):
+                            for c in range(n_classes):
+                                left[c] += per_bin.get(b, [0.0] * n_classes)[c]
+                            n_left = sum(left)
+                            n_right = n_node - n_left
+                            if n_left == 0 or n_right == 0:
+                                continue
+                            right = [totals[c] - left[c] for c in range(n_classes)]
+                            gain = parent_gini - (
+                                n_left / n_node * _gini(left)
+                                + n_right / n_node * _gini(right))
+                            cand = (round(gain, 12), -f, -b)
+                            if gain > 1e-12 and (best is None or cand > best[0]):
+                                best = (cand, f, b)
+                if best is None:
+                    model.splits[key] = ("leaf", majority)
+                else:
+                    _, f, b = best
+                    model.splits[key] = ("split", f, b)
+                    new_splits[key] = (f, b)
+                    next_open.add((t, 2 * node))
+                    next_open.add((t, 2 * node + 1))
+            open_nodes = next_open
+            if new_splits:
+                sp = spark.createDataFrame(
+                    [(t, n, f, b) for (t, n), (f, b) in new_splits.items()],
+                    "tree int, node int, _f int, _b int")
+                state = (state.join(F.broadcast(sp), ["tree", "node"], "inner")
+                         .select("tree",
+                                 (F.col("node") * 2
+                                  + (F.element_at("bins", F.col("_f") + 1)
+                                     > F.col("_b")).cast("int")).alias("node"),
+                                 "bins", "y"))
+                state = scratch.truncate(state, "state")
             else:
-                _, f, b = best
-                model.splits[key] = ("split", f, b)
-                new_splits[key] = (f, b)
-                next_open.add((t, 2 * node))
-                next_open.add((t, 2 * node + 1))
-        open_nodes = next_open
-        if new_splits:
-            sp = spark.createDataFrame(
-                [(t, n, f, b) for (t, n), (f, b) in new_splits.items()],
-                "tree int, node int, _f int, _b int")
-            state = (state.join(F.broadcast(sp), ["tree", "node"], "inner")
-                     .select("tree",
-                             (F.col("node") * 2
-                              + (F.element_at("bins", F.col("_f") + 1)
-                                 > F.col("_b")).cast("int")).alias("node"),
-                             "bins", "y"))
-            state = loop.truncate(state)
-        else:
-            break
-    loop.release()  # model is driver-side; no level's blocks need to stay
+                break
+    finally:
+        scratch.cleanup()  # the model is driver-side; no level's state stays
     return model
 
 

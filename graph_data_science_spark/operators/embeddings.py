@@ -127,7 +127,6 @@ def node2vec(
     epochs: int = 1,
     learning_rate: float = 0.025,
     seed: int = 42,
-    mode: str = "distributed",
     num_partitions: int | None = None,
 ) -> DataFrame:
     """``gds.node2vec`` analog → (node_id, embedding array<double>).
@@ -140,30 +139,17 @@ def node2vec(
        nodes × walks_per_node × walk_length).
     2. SGNS TRAINING — the reference trains with multi-threaded
        asynchronous SGD whose result is concurrency-dependent (its docs say
-       so). Two deterministic modes here:
-
-       ``mode="distributed"`` (default): synchronous full-batch gradient
-       descent with a fully EXECUTOR-RESIDENT model — long-format state
+       so). Here: synchronous full-batch gradient descent with a fully
+       EXECUTOR-RESIDENT model — long-format state
        ``(node_id, dim, win, wout)``, join gathers, micro-unit integer
-       reductions (see :func:`_node2vec_distributed`). Nothing n-sized
+       reductions (see :func:`_train_sgns`). Nothing n-sized
        touches the driver; per-epoch driver traffic is one loss scalar.
        Bit-identical at any partition count; full-batch GD descends a
        fixed objective, so the loss history is monotone-ish and testable.
 
-       ``mode="parity"``: the round-2 single-group sequential-SGD mode —
-       (center, context) pairs stream through ONE ``applyInPandas`` group
-       in a fixed sort order, matching the reference's sequential
-       trajectory shape. Valid while pairs fit one worker.
-
        When training cost itself is the constraint, :func:`fastrp` /
        :func:`hashgnn` give training-free distributed embeddings.
     """
-    import numpy as np
-    import pandas as pd
-
-    spark = graph.nodes.sparkSession
-    if mode not in ("distributed", "parity"):
-        raise ValueError(f"unknown mode {mode!r}")
     walks = random_walks(graph, walk_length=walk_length,
                          walks_per_node=walks_per_node, seed=seed)
     # (center, context) skip-gram pairs within the window — distributed
@@ -175,68 +161,15 @@ def node2vec(
              .where((F.col("s1") != F.col("s2"))
                     & (F.abs(F.col("s1") - F.col("s2")) <= int(window_size)))
              .select("walk_id", "s1", "s2", "center", "context"))
-    ep, ns, lr0 = int(epochs), int(negative_samples), float(learning_rate)
-    sd = int(seed)
-
-    if mode == "distributed":
-        return _node2vec_distributed(
-            graph, pairs, int(embedding_dim), ep, ns, lr0, sd,
-            num_partitions)
-
-    # parity mode only: the full id list + model live in one worker group
-    # by design (documented size-gated sequential-trajectory mode)
-    node_ids = [r[0] for r in graph.nodes.select("node_id")
-                .orderBy("node_id").collect()]
-    n, d = len(node_ids), int(embedding_dim)
-    id_pos = {v: i for i, v in enumerate(node_ids)}
-
-    def train(pdf: pd.DataFrame) -> pd.DataFrame:
-        import hashlib
-        rows = pdf.sort_values(["walk_id", "s1", "s2"]).reset_index(drop=True)
-        # hash-seeded init, same very-sparse-free philosophy: uniform small
-        rng_init = np.array([
-            [int(hashlib.md5(f"{v}:{j}:{sd}".encode()).hexdigest()[:15], 16)
-             / float(1 << 60) - 0.5 for j in range(d)] for v in node_ids
-        ]) / d
-        w_in = rng_init.copy()
-        w_out = np.zeros((n, d))
-
-        def u01(*args):
-            s = ":".join(str(x) for x in args)
-            return int(hashlib.md5(s.encode()).hexdigest()[:15], 16) / float(1 << 60)
-
-        for e in range(ep):
-            lr = lr0 * (1.0 - e / max(1, ep))
-            for i, (wid, s1, s2, c, ctx) in enumerate(zip(
-                    rows["walk_id"], rows["s1"], rows["s2"],
-                    rows["center"], rows["context"])):
-                ci, oi = id_pos[int(c)], id_pos[int(ctx)]
-                targets = [(oi, 1.0)] + [
-                    (id_pos[node_ids[int(u01("neg", e, i, k, sd) * n)]], 0.0)
-                    for k in range(ns)]
-                g_acc = np.zeros(d)
-                for ti, label in targets:
-                    z = float(w_in[ci] @ w_out[ti])
-                    p = 1.0 / (1.0 + np.exp(-np.clip(z, -30, 30)))
-                    g = lr * (label - p)
-                    g_acc += g * w_out[ti]
-                    w_out[ti] += g * w_in[ci]
-                w_in[ci] += g_acc
-        return pd.DataFrame({
-            "node_id": node_ids,
-            "embedding": [np.round(w_in[i], 6).tolist() for i in range(n)],
-        })
-
-    tagged = pairs.withColumn("_g", F.lit(0))
-    return tagged.groupBy("_g").applyInPandas(
-        train, schema="node_id long, embedding array<double>")
+    return _train_sgns(
+        graph, pairs, int(embedding_dim), int(epochs), int(negative_samples),
+        float(learning_rate), int(seed), num_partitions)
 
 
-def _node2vec_distributed(graph, pairs, d, ep, ns, lr0, sd,
-                          num_partitions):
-    """Executor-resident synchronous full-batch SGNS — the graphsage
-    round-4 trainer discipline applied to node2vec (the round-4 review's
-    remaining driver-resident trainer):
+def _train_sgns(graph, pairs, d, ep, ns, lr0, sd, num_partitions):
+    """node2vec's SGNS training phase: executor-resident synchronous
+    full-batch gradient descent — the graphsage trainer discipline applied
+    to node2vec:
 
     - MODEL STATE is a long-format DataFrame ``(node_id, dim, win, wout)``
       truncated per epoch through ``Scratch`` — nothing n-sized lives on
@@ -289,7 +222,7 @@ def _node2vec_distributed(graph, pairs, d, ep, ns, lr0, sd,
         ranks = scratch.truncate(ranks, "ranks")
 
         dims = spark.range(int(d)).select(F.col("id").cast("int").alias("dim"))
-        # hash-seeded init — same md5 stream and scaling as parity mode
+        # hash-seeded init: md5 of (node, dim, seed), uniform ±0.5/d
         init = ((F.conv(F.substring(F.md5(F.concat_ws(
             ":", F.col("node_id"), F.col("dim"), F.lit(int(sd)))), 1, 15),
             16, 10).cast("long") / float(1 << 60) - 0.5) / float(d))

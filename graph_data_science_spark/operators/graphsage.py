@@ -27,15 +27,15 @@ a sample, infer everywhere — the inductive property is the whole point):
    for mean aggregation); this engine fixes RELU + the paper's per-layer L2
    normalization.
 
-2. :func:`graphsage_train` — deterministic parity-mode trainer (same
-   discipline as node2vec's single-group SGNS and label_propagation's
-   ``batch_sequential``): the reference trains with multi-threaded Adam on
-   sampled batches, whose result is concurrency-dependent; here the
+2. :func:`graphsage_train` — full-batch gradient descent on the
    unsupervised GraphSAGE loss (σ(z_u·z_v) for 1-hop positives, hash-drawn
-   negatives) is optimized with full-batch numpy gradient descent inside ONE
-   ``applyInPandas`` group — bit-reproducible, valid while (n·d floats +
-   edge list) fit one worker. Trained weights feed graphsage_predict for
-   distributed inference over the full graph.
+   negatives) with the node state, activations and gradients executor-
+   resident in the same long format; only the weight matrices — the model
+   — reach the driver. The reference trains with multi-threaded Adam on
+   sampled batches, whose result is concurrency-dependent; here every
+   cross-row sum is an integer micro-unit reduction, so training is
+   bit-identical at any parallelism (docs/SCALE_NOTES.md §29). Trained
+   weights feed graphsage_predict for inference over the full graph.
 
 Determinism/portability: weight init is hash-seeded in PYTHON
 (:func:`init_weights`, hashlib md5 — the same u01 discipline as
@@ -200,7 +200,7 @@ def _ml(col):
     return F.round(col * _Q).cast("long")
 
 
-def graphsage_train_distributed(
+def graphsage_train(
     graph: Graph,
     features: DataFrame,
     layer_dims: list[int],
@@ -210,9 +210,11 @@ def graphsage_train_distributed(
     seed: int = 42,
     return_history: bool = False,
 ):
-    """Distributed full-batch trainer — the default (GraphSageModelTrainer
-    .java's unsupervised loss; deterministic where the reference's
-    multi-threaded Adam is concurrency-dependent).
+    """``gds.beta.graphSage.train`` analog → trained weights for
+    :func:`graphsage_predict` (with ``return_history``, also the per-epoch
+    loss). Full-batch gradient descent on GraphSageModelTrainer.java's
+    unsupervised loss; deterministic where the reference's multi-threaded
+    Adam is concurrency-dependent.
 
     Spark-first shape, the node2vec-distributed / ml.mlp discipline taken
     one step further: the MODEL (two tiny weight matrices per layer) is
@@ -221,8 +223,9 @@ def graphsage_train_distributed(
     and never leave the executors. Per epoch:
 
     - FORWARD: per layer, one edges ⋈ state shuffle agg (full in-neighbor
-      mean — training uses the full neighborhood, no sampling, exactly
-      like the parity trainer), one broadcast-weight matvec agg, a relu +
+      mean — training uses the full neighborhood, no sampling, which
+      removes the nondeterminism of the reference's sampled batches), one
+      broadcast-weight matvec agg, a relu +
       L2-normalize projection; per-layer caches (input, neighbor mean,
       pre-activation, norm, output) truncate into scratch for backward.
     - LOSS/dZ: σ(z_u·z_v) positives over the edge table plus
@@ -242,8 +245,7 @@ def graphsage_train_distributed(
     and unlike per-partition-partial schemes the property holds for the
     in-plan shuffle aggs themselves. The ≤1e-6 quantization per term is
     deterministic and immaterial to GD (tests pin loss descent and
-    partition-count invariance). Not bit-equal to ``mode="parity"`` (a
-    different, unquantized summation order); both descend the same loss.
+    partition-count invariance).
     """
     import numpy as np
 
@@ -497,169 +499,3 @@ def graphsage_train_distributed(
     finally:
         scratch.cleanup()
 
-
-def graphsage_train(
-    graph: Graph,
-    features: DataFrame,
-    layer_dims: list[int],
-    epochs: int = 5,
-    learning_rate: float = 0.05,
-    negative_samples: int = 2,
-    seed: int = 42,
-    return_history: bool = False,
-    mode: str = "distributed",
-) -> list[dict]:
-    """``gds.beta.graphSage.train`` analog. Two deterministic modes:
-
-    ``mode="distributed"`` (default): :func:`graphsage_train_distributed`
-    — full-batch GD with executor-resident state and integer-fixed-point
-    reductions; the scale path (state never visits the driver).
-    ``mode="parity"``: the single-process numpy trainer below —
-    bit-reproducible against the original round-2/3 goldens, valid while
-    (n·d floats + edge list) fit one worker. Both descend the same
-    unsupervised GraphSAGE loss (σ(z_u·z_v) positives, hash-drawn
-    negatives); they are not bit-equal to each other (different summation
-    orders and negative-draw keys — both documented, both deterministic).
-    """
-    if mode == "distributed":
-        return graphsage_train_distributed(
-            graph, features, layer_dims, epochs=epochs,
-            learning_rate=learning_rate, negative_samples=negative_samples,
-            seed=seed, return_history=return_history)
-    if mode != "parity":
-        raise ValueError(f"unknown mode {mode!r}")
-    return _graphsage_train_parity(
-        graph, features, layer_dims, epochs=epochs,
-        learning_rate=learning_rate, negative_samples=negative_samples,
-        seed=seed, return_history=return_history)
-
-
-def _graphsage_train_parity(
-    graph: Graph,
-    features: DataFrame,
-    layer_dims: list[int],
-    epochs: int = 5,
-    learning_rate: float = 0.05,
-    negative_samples: int = 2,
-    seed: int = 42,
-    return_history: bool = False,
-) -> list[dict]:
-    """Deterministic parity-mode trainer (see module docstring): full-batch
-    GD on the unsupervised GraphSAGE loss over the FULL neighborhood mean
-    (no sampling during training — removes the one nondeterminism the
-    reference's sampled batches introduce). Returns weights for
-    :func:`graphsage_predict`.
-    """
-    import numpy as np
-
-    rows = features.select("node_id", "features").orderBy("node_id").collect()
-    node_ids = [int(r["node_id"]) for r in rows]
-    X = np.array([list(r["features"]) for r in rows], dtype=np.float64)
-    pos = {v: i for i, v in enumerate(node_ids)}
-    e_rows = (graph.edges.select("src", "dst").distinct()
-              .orderBy("src", "dst").collect())
-    pairs = [(pos[int(r["src"])], pos[int(r["dst"])]) for r in e_rows
-             if int(r["src"]) in pos and int(r["dst"]) in pos]
-    n = len(node_ids)
-    if layer_dims[0] != X.shape[1]:
-        raise ValueError("layer_dims[0] must equal the feature width")
-    # sparse adjacency as edge-index arrays: O(E) memory, never an n×n
-    # matrix (a 100k-node graph would need 80 GB dense). The neighbor-mean
-    # operator A and its transpose are applied as vectorized gather +
-    # np.add.at scatter over these arrays.
-    e_src = np.array([s for s, _ in pairs], dtype=np.int64)
-    e_dst = np.array([d for _, d in pairs], dtype=np.int64)
-    m_edges = len(pairs)
-    indeg = np.bincount(e_dst, minlength=n).astype(np.float64)[:, None]
-    indeg_safe = np.where(indeg == 0, 1.0, indeg)
-
-    def neigh_mean(h):
-        """A @ h: per-dst mean of in-neighbor rows (gather + scatter-add)."""
-        acc = np.zeros_like(h)
-        np.add.at(acc, e_dst, h[e_src])
-        return acc / indeg_safe
-
-    def neigh_mean_t(m):
-        """A.T @ m: scatter m[d]/indeg[d] back to each in-neighbor s."""
-        out = np.zeros_like(m)
-        np.add.at(out, e_src, m[e_dst] / indeg_safe[e_dst])
-        return out
-
-    init = init_weights(layer_dims, seed=seed)
-    Ws = [np.array(l["w_self"]) for l in init]
-    Wn = [np.array(l["w_neigh"]) for l in init]
-    L = len(Ws)
-    ns, lr = int(negative_samples), float(learning_rate)
-
-    def forward(Ws, Wn):
-        h = X
-        cache = []
-        for k in range(L):
-            hn = neigh_mean(h)
-            pre = h @ Ws[k].T + hn @ Wn[k].T
-            act = np.maximum(pre, 0.0)
-            nrm = np.linalg.norm(act, axis=1, keepdims=True)
-            out = np.divide(act, np.where(nrm == 0, 1.0, nrm))
-            cache.append((h, hn, pre, act, nrm, out))
-            h = out
-        return h, cache
-
-    def backward(cache, dZ, Ws, Wn):
-        gWs = [np.zeros_like(w) for w in Ws]
-        gWn = [np.zeros_like(w) for w in Wn]
-        for k in reversed(range(L)):
-            h, hn, pre, act, nrm, out = cache[k]
-            safe = np.where(nrm == 0, 1.0, nrm)
-            # d l2-normalize: (dZ - out·(dZ·out per-row)) / nrm
-            dot = (dZ * out).sum(axis=1, keepdims=True)
-            dact = (dZ - out * dot) / safe
-            dpre = dact * (pre > 0)
-            gWs[k] = dpre.T @ h
-            gWn[k] = dpre.T @ hn
-            dh = dpre @ Ws[k] + neigh_mean_t(dpre @ Wn[k])
-            dZ = dh
-        return gWs, gWn
-
-    # fixed hash-drawn negative set — the objective is then a single
-    # deterministic full-batch function, so GD descends it (and the loss
-    # history below is comparable across epochs)
-    negs = np.array(
-        [[int(_py_u01("gsneg", idx, t, seed) * n) for t in range(ns)]
-         for idx in range(m_edges)], dtype=np.int64).reshape(m_edges, ns)
-
-    def loss_and_grad(Z):
-        """Vectorized unsupervised SAGE loss over all edges at once —
-        O(E·d) gathers + deterministic np.add.at scatters (index order is
-        fixed by the sorted edge list), no per-edge Python."""
-        dZ = np.zeros_like(Z)
-        zu, zv = Z[e_src], Z[e_dst]
-        zp = np.clip((zu * zv).sum(axis=1), -30, 30)
-        p = 1.0 / (1.0 + np.exp(-zp))
-        tot = float(-np.log(np.clip(p, 1e-12, None)).sum())
-        g = (p - 1.0)[:, None]  # positive pairs
-        np.add.at(dZ, e_src, g * zv)
-        np.add.at(dZ, e_dst, g * zu)
-        for t in range(ns):
-            w = negs[:, t]
-            zw = Z[w]
-            zng = np.clip((zu * zw).sum(axis=1), -30, 30)
-            pneg = (1.0 / (1.0 + np.exp(-zng)))[:, None]
-            tot += float(-np.log(np.clip(1.0 - pneg, 1e-12, None)).sum())
-            np.add.at(dZ, e_src, pneg * zw)
-            np.add.at(dZ, w, pneg * zu)
-        m = max(1, m_edges)
-        return tot / m, dZ / m
-
-    history = []
-    for _ in range(int(epochs)):
-        Z, cache = forward(Ws, Wn)
-        loss, dZ = loss_and_grad(Z)
-        history.append(round(float(loss), 6))
-        gWs, gWn = backward(cache, dZ, Ws, Wn)
-        Ws = [w - lr * g for w, g in zip(Ws, gWs)]
-        Wn = [w - lr * g for w, g in zip(Wn, gWn)]
-    out = [{"w_self": Ws[k].tolist(), "w_neigh": Wn[k].tolist()}
-           for k in range(L)]
-    if return_history:
-        return out, history
-    return out

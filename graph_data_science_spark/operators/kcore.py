@@ -7,8 +7,8 @@ degree < k; a node's core value is the largest k for which it survives.
 Spark formulation:
 - :func:`k_core` (membership for one k): peel as a superstep loop — each
   round drops nodes whose current degree < k and recounts; converges when
-  no node is dropped. One partial-aggregated degree count + one semi-join
-  per round.
+  no node is dropped, and raises if ``max_iterations`` rounds end first.
+  One partial-aggregated degree count + one semi-join per round.
 - :func:`coreness`: full decomposition via the distributed h-index
   fixpoint (one Pregel superstep per round, no per-k driver loop) — see
   its docstring.
@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from graph_data_science_spark.graph import Graph
-from graph_data_science_spark.plans.loop_state import LoopState
+from graph_data_science_spark.plans.loop_state import Scratch
 from graph_data_science_spark.plans.partitioning import shuffle_hash
 from graph_data_science_spark.plans.pregel import ACTIVE_COL, Pregel
 
@@ -30,29 +30,40 @@ def _undirected_simple(graph: Graph) -> DataFrame:
 
 
 def k_core(graph: Graph, k: int, max_iterations: int = 100) -> DataFrame:
-    """Nodes of the k-core → ``(node_id, in_core: boolean)`` over all nodes."""
+    """Nodes of the k-core → ``(node_id, in_core: boolean)`` over all nodes.
+
+    Raises ``ValueError`` when ``max_iterations`` peeling rounds end before
+    the fixpoint: the survivors of a cut-short peel are a superset of the
+    k-core, not the k-core."""
     spark = graph.nodes.sparkSession
     edges = _undirected_simple(graph).persist()
-    loop = LoopState()
-    alive = loop.truncate(edges.select(F.col("src").alias("node_id")).distinct())
-    before = alive.count()
-    for _ in range(max_iterations):
-        cur = (
-            edges.join(alive.withColumnRenamed("node_id", "src"), "src", "left_semi")
-            .join(alive.withColumnRenamed("node_id", "dst"), "dst", "left_semi")
-        )
-        deg = cur.groupBy(F.col("src").alias("node_id")).agg(F.count(F.lit(1)).alias("_d"))
-        nxt = deg.where(F.col("_d") >= int(k)).select("node_id")
-        # one action per round: the checkpoint retires the previous round's
-        # blocks, and the survivor count is carried forward instead of
-        # recounting the (now-released) old state
-        alive = loop.truncate(nxt)
-        after = alive.count()
-        if after == before or after == 0:
-            break
-        before = after
-    loop.detach(alive)
-    edges.unpersist()
+    scratch = Scratch(spark)
+    try:
+        alive = scratch.truncate(
+            edges.select(F.col("src").alias("node_id")).distinct(), "alive",
+            rows_hint=graph.node_count())
+        before = scratch.rows("alive")
+        for _ in range(max_iterations):
+            cur = (
+                edges.join(alive.withColumnRenamed("node_id", "src"), "src", "left_semi")
+                .join(alive.withColumnRenamed("node_id", "dst"), "dst", "left_semi")
+            )
+            deg = cur.groupBy(F.col("src").alias("node_id")).agg(F.count(F.lit(1)).alias("_d"))
+            # one action per round: the survivor count rides the truncate
+            alive = scratch.truncate(deg.where(F.col("_d") >= int(k)).select("node_id"),
+                                     "alive")
+            after = scratch.rows("alive")
+            if after == before or after == 0:
+                break
+            before = after
+        else:
+            raise ValueError(
+                f"k_core did not converge in {max_iterations} iterations "
+                "— raise max_iterations")
+        alive = scratch.cleanup(keep=alive)
+    finally:
+        scratch.cleanup()
+        edges.unpersist()
     return graph.nodes.select("node_id").join(
         alive.withColumn("in_core", F.lit(True)), "node_id", "left"
     ).select("node_id", F.coalesce("in_core", F.lit(False)).alias("in_core"))

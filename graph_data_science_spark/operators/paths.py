@@ -71,6 +71,12 @@ def _frontier_min(graph: Graph, init_dist, relax_expr, max_iterations: int,
     driver = Pregel(spark, max_iterations=max_iterations)
     res = driver.run(state, step)
     edges.unpersist()
+    if not res.converged:
+        # a capped frontier leaves reachable nodes at inf or too far:
+        # wrong distances, not partial ones
+        raise ValueError(
+            f"frontier relaxation did not converge in {max_iterations} "
+            "iterations — raise max_iterations")
     return PathResult(
         res.state.select("node_id", F.col("dist").alias("distance")),
         res.ran_iterations, res.converged,
@@ -78,7 +84,9 @@ def _frontier_min(graph: Graph, init_dist, relax_expr, max_iterations: int,
 
 
 def bfs(graph: Graph, source: int, max_iterations: int = 100) -> PathResult:
-    """Hop distance from ``source`` → (node_id, distance); unreachable = inf."""
+    """Hop distance from ``source`` → (node_id, distance); unreachable = inf.
+    Raises ``ValueError`` if the frontier is still moving after
+    ``max_iterations`` supersteps (an eccentricity above the cap)."""
     init = F.when(F.col("node_id") == int(source), F.lit(0.0)).otherwise(F.lit(_INF))
     return _frontier_min(
         graph, init, F.col("_d") + F.lit(1.0), max_iterations, weighted=False)

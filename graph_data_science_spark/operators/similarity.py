@@ -8,11 +8,10 @@ here we emit each scored pair once per source node (node1, node2, similarity).
 
 Embedding similarity over the ``embeddings`` table (vec_id, embedding
 array<float/double>, label):
-- ``cosine_topk``: exact brute-force top-k. The scale path broadcasts the
-  (small) query-side matrix and runs a NumPy blocked matmul inside
-  ``mapInPandas`` — Arrow batches in, one BLAS GEMM per batch, no per-row
-  Python. For corpus×corpus self-join at 100 TB you'd tile both sides;
-  the kernel is written per-batch so tiling = repartitioning.
+- ``cosine_topk``: exact brute-force top-k. Both sides are packed into
+  executor-resident matrix blocks and every (query block × index shard)
+  tile runs one NumPy BLAS GEMM inside ``mapInPandas`` — no per-row
+  Python, and no matrix ever reaches the driver.
 - ``cosine_topk_ivf``: IVF-style approximate variant — deterministic
   centroids (a seeded hash-u01 sample of the id space, robust to sorted
   id layouts), assign every vector to its nearest centroid, search only
@@ -195,8 +194,32 @@ def _pack_side(vecs: DataFrame, id_col: str, vec_col: str, n_blocks: int,
         pack, schema=f"{block_col} long, _ids binary, _mat binary")
 
 
-def _cosine_topk_tiled(vecs, k, id_col, vec_col, queries,
-                       index_shards, query_blocks) -> DataFrame:
+def cosine_topk(
+    vecs: DataFrame,
+    k: int = 10,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    queries: DataFrame | None = None,
+    index_shards: int | None = None,
+    query_blocks: int | None = None,
+) -> DataFrame:
+    """Exact cosine top-k self-join → (vec_id, neighbor_id, cosine), self
+    excluded, ranked (cosine DESC, neighbor_id ASC), rounded 6dp.
+
+    Both sides are packed into executor-resident matrix blocks — index into
+    ``index_shards`` shards, queries into ``query_blocks`` blocks
+    (deterministic pmod on id) — then every (query block × index shard)
+    tile runs one BLAS GEMM inside ``mapInPandas`` and emits a per-shard
+    partial top-k; a final window takes the global top-k per query. Nothing
+    is collected to the driver, and tile size is bounded by
+    (rows/blocks × dim × 8 B) regardless of corpus size. Block counts
+    default to the session parallelism; at scale size them so a tile fits
+    executor memory (e.g. 64 MB blocks).
+
+    Ranking is on the 6dp-ROUNDED cosine (ties → smaller neighbor id), so
+    any engine recomputing with a different summation order ranks
+    identically — the cross-engine contract.
+    """
     import pickle
 
     spark = vecs.sparkSession
@@ -253,85 +276,6 @@ def _cosine_topk_tiled(vecs, k, id_col, vec_col, queries,
         partial.withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") <= kk)
         .drop("_rn")
-    )
-
-
-def cosine_topk(
-    vecs: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    queries: DataFrame | None = None,
-    strategy: str = "tiled",
-    index_shards: int | None = None,
-    query_blocks: int | None = None,
-) -> DataFrame:
-    """Exact cosine top-k self-join → (vec_id, neighbor_id, cosine), self
-    excluded, ranked (cosine DESC, neighbor_id ASC), rounded 6dp.
-
-    ``strategy="tiled"`` (default, the 100 TB path): both sides are packed
-    into executor-resident matrix blocks — index into ``index_shards``
-    shards, queries into ``query_blocks`` blocks (deterministic pmod on id)
-    — then every (query block × index shard) tile runs one BLAS GEMM inside
-    ``mapInPandas`` and emits a per-shard partial top-k; a final window takes
-    the global top-k per query. Nothing is collected to the driver, and tile
-    size is bounded by (rows/blocks × dim × 8 B) regardless of corpus size.
-    Block counts default to the session parallelism; at scale size them so a
-    tile fits executor memory (e.g. 64 MB blocks).
-
-    ``strategy="broadcast"`` (small-index fast path): the round-1 kernel —
-    index collected to a driver NumPy matrix and broadcast; query side
-    streams through as Arrow batches. Valid only while the index fits the
-    driver; kept for small dimension tables.
-
-    Both strategies rank on the 6dp-ROUNDED cosine (ties → smaller neighbor
-    id) so any engine recomputing with different summation order ranks
-    identically — the cross-engine contract.
-    """
-    if strategy == "tiled":
-        return _cosine_topk_tiled(vecs, k, id_col, vec_col, queries,
-                                  index_shards, query_blocks)
-    if strategy != "broadcast":
-        raise ValueError(f"unknown strategy {strategy!r}")
-    spark = vecs.sparkSession
-    ids, mat, norms = _collect_matrix(vecs, id_col, vec_col)
-    b_ids = spark.sparkContext.broadcast(ids)
-    b_mat = spark.sparkContext.broadcast(mat / norms[:, None])
-    kk = int(k)
-
-    q = queries if queries is not None else vecs
-
-    def gemm(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        index_ids = b_ids.value
-        index = b_mat.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            qids = pdf[id_col].to_numpy("int64")
-            qm = np.asarray([np.asarray(v, dtype="float64") for v in pdf[vec_col]])
-            qn = np.linalg.norm(qm, axis=1)
-            qn[qn == 0] = 1.0
-            sims = (qm / qn[:, None]) @ index.T  # (batch, n_index)
-            for r in range(sims.shape[0]):
-                row = sims[r]
-                self_mask = index_ids == qids[r]
-                row = np.where(self_mask, -np.inf, row)
-                take = min(kk, row.size - int(self_mask.sum()))
-                if take <= 0:
-                    continue
-                # rank on the ROUNDED similarity (ties → smaller id) so any
-                # engine recomputing with different summation order ranks
-                # identically — the 6dp round is the cross-engine contract
-                rounded = np.round(row, 6)
-                order = np.lexsort((index_ids, -rounded))[:take]
-                yield pd.DataFrame({
-                    "vec_id": np.repeat(qids[r], take),
-                    "neighbor_id": index_ids[order],
-                    "cosine": rounded[order],
-                })
-
-    return q.select(id_col, vec_col).mapInPandas(
-        gemm, schema="vec_id long, neighbor_id long, cosine double"
     )
 
 

@@ -18,12 +18,12 @@ Shape per merge round (the whole loop is ``n_merges`` rounds):
   inside whole-stage codegen; no Python touches a row.
 
 State (one row per DISTINCT word, not per occurrence) is truncated per
-round with ``LoopState`` (serialized checkpoint + retire-previous,
-plans/loop_state.py). At 100 TB the distinct-word table is ~10⁷ rows — tiny
-against the corpus — so each round is a shuffle over megabytes. When the
-engine's size policy puts the word table in the ``"local"`` tier
-(``loop_state.tier``), the whole merge loop finishes on the driver instead
-(:func:`bpe_train`).
+round through ``Scratch`` (plans/loop_state.py). At 100 TB the
+distinct-word table is ~10⁷ rows — tiny against the corpus — so each round
+is a shuffle over megabytes. When the engine's size policy
+(``loop_state.tier`` of the row count the first truncate observes) puts
+the word table in the ``"local"`` tier, the whole merge loop finishes on
+the driver instead (:func:`bpe_train`).
 
 Encoding applies the learned merge list as ``len(merges)`` chained folds in
 ONE projection (expression tree depth = #merges, no shuffle, no UDF) — a
@@ -44,7 +44,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from graph_data_science_spark.operators.dedup import _norm
-from graph_data_science_spark.plans.loop_state import LoopState, tier
+from graph_data_science_spark.plans.loop_state import Scratch, tier
 
 #: end-of-word marker (keeps merges from crossing word boundaries when the
 #: learned vocab is applied to running text — the Sennrich convention)
@@ -179,61 +179,64 @@ def bpe_train(docs: DataFrame, n_merges: int = 20, text_col: str = "text",
     symbols interact densely) — the local finish is the big lever; the
     batching bounds the distributed path (docs/SCALE_NOTES.md §33).
     """
-    loop = LoopState()
-    state = loop.truncate(_word_table(docs, text_col))
-    if tier(state.count()) == "local":
-        rows = [(r["freq"], r["syms"])
-                for r in state.select("freq", "syms")
-                .orderBy("word").collect()]
-        loop.release()
-        return _bpe_train_local(rows, int(n_merges))
-    # exact symbol registry: base alphabet (+EOW) now, + one entry per
-    # applied merge — every symbol in every word is one of the two
-    symbols = {r["s"] for r in
-               state.select(F.explode("syms").alias("s")).distinct().collect()}
-    merges: list[tuple[str, str]] = []
-    while len(merges) < int(n_merges):
-        pairs = state.where(F.size("syms") >= 2).select(
-            "freq",
-            F.explode(F.expr(
-                "zip_with(slice(syms, 1, size(syms) - 1),"
-                " slice(syms, 2, size(syms) - 1),"
-                " (a, b) -> struct(a AS l, b AS r))")).alias("p"),
-        ).groupBy("p.l", "p.r").agg(F.sum("freq").alias("c"))
-        top = pairs.orderBy(F.desc("c"), F.asc("l"), F.asc("r")) \
-            .limit(int(batch_candidates)).collect()
-        if not top or int(top[0]["c"]) < 2:
-            break
-        batch: list[tuple[str, str, int]] = []
-        used: set[str] = set()
-        stop_c = int(top[-1]["c"])  # conservative when nothing interacts
-        for r in top:
-            left, right, c = r["l"], r["r"], int(r["c"])
-            if c < 2:
-                stop_c = c
+    scratch = Scratch(docs.sparkSession)
+    try:
+        # unhinted: the word table's size is unknown until this truncate
+        # counts it, so it lands on the scale-safe parquet side
+        state = scratch.truncate(_word_table(docs, text_col), "words")
+        if tier(scratch.rows("words")) == "local":
+            rows = [(r["freq"], r["syms"])
+                    for r in state.select("freq", "syms")
+                    .orderBy("word").collect()]
+            return _bpe_train_local(rows, int(n_merges))
+        # exact symbol registry: base alphabet (+EOW) now, + one entry per
+        # applied merge — every symbol in every word is one of the two
+        symbols = {r["s"] for r in
+                   state.select(F.explode("syms").alias("s")).distinct().collect()}
+        merges: list[tuple[str, str]] = []
+        while len(merges) < int(n_merges):
+            pairs = state.where(F.size("syms") >= 2).select(
+                "freq",
+                F.explode(F.expr(
+                    "zip_with(slice(syms, 1, size(syms) - 1),"
+                    " slice(syms, 2, size(syms) - 1),"
+                    " (a, b) -> struct(a AS l, b AS r))")).alias("p"),
+            ).groupBy("p.l", "p.r").agg(F.sum("freq").alias("c"))
+            top = pairs.orderBy(F.desc("c"), F.asc("l"), F.asc("r")) \
+                .limit(int(batch_candidates)).collect()
+            if not top or int(top[0]["c"]) < 2:
                 break
-            concat = left + right
-            if (left in used or right in used or concat in used
-                    or concat in symbols):
-                stop_c = c
-                break
-            batch.append((left, right, c))
-            used.update((left, right, concat))
-        while batch and batch[-1][2] <= stop_c:
-            batch.pop()
-        if not batch:
-            # boundary tie (or concat collision at the top): classic
-            # single merge — always legal, always progress
-            batch = [(top[0]["l"], top[0]["r"], int(top[0]["c"]))]
-        col: Column = F.col("syms")
-        for left, right, _ in batch[: int(n_merges) - len(merges)]:
-            merges.append((left, right))
-            symbols.add(left + right)
-            col = _merge_fold(col, left, right)
-        state = loop.truncate(state.select("word", "freq",
-                                           col.alias("syms")))
-    loop.release()
-    return merges
+            batch: list[tuple[str, str, int]] = []
+            used: set[str] = set()
+            stop_c = int(top[-1]["c"])  # conservative when nothing interacts
+            for r in top:
+                left, right, c = r["l"], r["r"], int(r["c"])
+                if c < 2:
+                    stop_c = c
+                    break
+                concat = left + right
+                if (left in used or right in used or concat in used
+                        or concat in symbols):
+                    stop_c = c
+                    break
+                batch.append((left, right, c))
+                used.update((left, right, concat))
+            while batch and batch[-1][2] <= stop_c:
+                batch.pop()
+            if not batch:
+                # boundary tie (or concat collision at the top): classic
+                # single merge — always legal, always progress
+                batch = [(top[0]["l"], top[0]["r"], int(top[0]["c"]))]
+            col: Column = F.col("syms")
+            for left, right, _ in batch[: int(n_merges) - len(merges)]:
+                merges.append((left, right))
+                symbols.add(left + right)
+                col = _merge_fold(col, left, right)
+            state = scratch.truncate(
+                state.select("word", "freq", col.alias("syms")), "words")
+        return merges
+    finally:
+        scratch.cleanup()
 
 
 def bpe_encode(docs: DataFrame, merges: list[tuple[str, str]],

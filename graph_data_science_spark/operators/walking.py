@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from graph_data_science_spark.graph import Graph
-from graph_data_science_spark.plans.loop_state import LoopState
+from graph_data_science_spark.plans.loop_state import Scratch
 
 
 def collapse_path(graph: Graph, length: int = 2,
@@ -58,7 +58,6 @@ def sample_cnarw(graph: Graph, start_nodes: list[int], rounds: int = 10,
     Same hash-randomness discipline as :func:`sample_rwr` (xxhash64 of
     (edge, round, seed)); overlap counts are one triangle-style self-join
     computed once up front. Returns the sampled node set (node_id)."""
-    spark = graph.nodes.sparkSession
     edges = graph.edges.select("src", "dst").distinct().persist()
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     # |N(u) ∩ N(v)| over OUT-neighborhoods, per edge (u, v)
@@ -77,25 +76,13 @@ def sample_cnarw(graph: Graph, start_nodes: list[int], rounds: int = 10,
                                               F.coalesce("dv", F.lit(1))), F.lit(1)))
                         .alias("accept_p"))
                 ).persist()
-    loop = LoopState()
-    sampled = loop.truncate(spark.createDataFrame(
-        [(int(s),) for s in start_nodes], "node_id long"))
-    size = sampled.count()
-    for r in range(rounds):
-        frontier = weighted.join(
-            sampled.withColumnRenamed("node_id", "src"), "src", "left_semi"
-        ).where(
-            _u01(F.col("src"), F.col("dst"), F.lit(r), F.lit(int(seed)))
-            < F.col("accept_p")
-        ).select(F.col("dst").alias("node_id"))
-        sampled = loop.truncate(sampled.unionByName(frontier).distinct())
-        new_size = sampled.count()
-        if new_size == size:
-            break
-        size = new_size
-    edges.unpersist()
-    weighted.unpersist()
-    return loop.detach(sampled)
+    try:
+        return _grow(weighted, start_nodes, rounds,
+                     lambda r: _u01(F.col("src"), F.col("dst"), F.lit(r),
+                                    F.lit(int(seed))) < F.col("accept_p"))
+    finally:
+        edges.unpersist()
+        weighted.unpersist()
 
 
 def sample_rwr(graph: Graph, start_nodes: list[int], rounds: int = 10,
@@ -108,22 +95,37 @@ def sample_rwr(graph: Graph, start_nodes: list[int], rounds: int = 10,
     set stays in the sample. The induced subgraph is
     ``graph.subgraph`` semi-joined on the returned nodes.
     """
-    spark = graph.nodes.sparkSession
     edges = graph.edges.select("src", "dst").persist()
-    loop = LoopState()
-    sampled = loop.truncate(spark.createDataFrame(
-        [(int(s),) for s in start_nodes], "node_id long"))
-    size = sampled.count()
-    for r in range(rounds):
-        frontier = edges.join(
-            sampled.withColumnRenamed("node_id", "src"), "src", "left_semi"
-        ).where(
-            _u01(F.col("src"), F.col("dst"), F.lit(r), F.lit(int(seed))) < accept_prob
-        ).select(F.col("dst").alias("node_id"))
-        sampled = loop.truncate(sampled.unionByName(frontier).distinct())
-        new_size = sampled.count()
-        if new_size == size:
-            break
-        size = new_size
-    edges.unpersist()
-    return loop.detach(sampled)
+    try:
+        return _grow(edges, start_nodes, rounds,
+                     lambda r: _u01(F.col("src"), F.col("dst"), F.lit(r),
+                                    F.lit(int(seed))) < accept_prob)
+    finally:
+        edges.unpersist()
+
+
+def _grow(edges: DataFrame, start_nodes: list[int], rounds: int,
+          accept) -> DataFrame:
+    """The samplers' shared frontier loop: each round admits the targets of
+    the edges out of the sample that pass ``accept(round)``; stops after
+    ``rounds`` or when a round admits nothing new. The sample size rides
+    each truncate, so a round is one Spark job."""
+    spark = edges.sparkSession
+    scratch = Scratch(spark)
+    try:
+        sampled = scratch.truncate(
+            spark.createDataFrame([(int(s),) for s in start_nodes], "node_id long"),
+            "sampled", rows_hint=len(start_nodes))
+        size = scratch.rows("sampled")
+        for r in range(rounds):
+            frontier = edges.join(
+                sampled.withColumnRenamed("node_id", "src"), "src", "left_semi"
+            ).where(accept(r)).select(F.col("dst").alias("node_id"))
+            sampled = scratch.truncate(sampled.unionByName(frontier).distinct(),
+                                       "sampled")
+            if scratch.rows("sampled") == size:
+                break
+            size = scratch.rows("sampled")
+        return scratch.cleanup(keep=sampled)
+    finally:
+        scratch.cleanup()

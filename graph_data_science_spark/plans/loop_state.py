@@ -35,10 +35,9 @@ do that, chosen by :func:`tier` of the state's row count:
   rescans at the 57M-edge, 8M-row scale, where a row-wise checkpoint cache
   deserializes per row.
 
-:class:`Scratch` is the size-gated, multi-stream form (the Pregel driver and
-the ad-hoc operator loops); :class:`LoopState` is the memory-only,
-single-state form the remaining ad-hoc loops use (k-core peeling,
-random-walk frontiers, forest level descent, BPE rounds).
+:class:`Scratch` is the one truncation every loop uses: the Pregel driver
+and every ad-hoc operator loop (k-core peeling, random-walk frontiers,
+forest level descent, BPE rounds, ...), one named stream per state.
 """
 
 from __future__ import annotations
@@ -250,42 +249,3 @@ class Scratch:
         self._hist.clear()
         return keep
 
-
-class LoopState:
-    """Memory-only loop state with the previous iteration retired.
-
-    Usage::
-
-        loop = LoopState()
-        state = loop.truncate(initial_state)
-        for ...:
-            state = loop.truncate(new_state)   # old checkpoint retired here
-        return loop.detach(state)              # final state stays resident
-
-    At most TWO iteration states are ever resident (the new one and,
-    briefly, the one being retired); MEMORY_AND_DISK spills under pressure,
-    so the bound is cluster-safe. ``detach`` leaves exactly one checkpoint
-    resident — the returned DataFrame's — matching the single terminal
-    ``localCheckpoint`` the non-loop operators use."""
-
-    def __init__(self) -> None:
-        self._prev_rdd = None
-
-    def truncate(self, df: DataFrame) -> DataFrame:
-        new_df, rdd = _checkpoint(df)
-        _unpersist(self._prev_rdd)
-        self._prev_rdd = rdd
-        return new_df
-
-    def detach(self, df: DataFrame) -> DataFrame:
-        """Stop tracking: the final state's checkpoint stays resident for the
-        caller; earlier iterations are already retired."""
-        self._prev_rdd = None
-        return df
-
-    def release(self) -> None:
-        """Unpersist the final iteration's blocks too — for loops whose
-        result is a driver-side value (e.g. a trained model), where no
-        DataFrame escapes the loop."""
-        _unpersist(self._prev_rdd)
-        self._prev_rdd = None

@@ -1,6 +1,8 @@
 import functools
+import glob
 import os
 import sys
+import tempfile
 
 import pytest
 
@@ -28,6 +30,12 @@ def spark():
 
 def rows_to_dict(df, key, value):
     return {r[key]: r[value] for r in df.collect()}
+
+
+def scratch_dirs():
+    """The ``Scratch`` directories currently in the temp dir; a loop that
+    cleans up after itself leaves this set as it found it."""
+    return set(glob.glob(os.path.join(tempfile.gettempdir(), "gds_scratch_*")))
 
 
 def both_tiers(test):

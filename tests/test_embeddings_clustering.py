@@ -203,18 +203,6 @@ def test_node2vec_distributed_loss_descends(spark):
     assert hist[-1] < hist[0]  # full-batch GD descends the fixed objective
 
 
-def test_node2vec_parity_mode_unchanged(spark):
-    from graph_data_science_spark.operators.embeddings import node2vec
-
-    edges = edges_from_tuples(spark, [(0, 1), (1, 0), (1, 2), (2, 1)])
-    g = graph_from_edges(spark, edges)
-    a = {r["node_id"]: r["embedding"]
-         for r in node2vec(g, embedding_dim=4, seed=7, mode="parity").collect()}
-    b = {r["node_id"]: r["embedding"]
-         for r in node2vec(g, embedding_dim=4, seed=7, mode="parity").collect()}
-    assert a == b and len(a) == 3
-
-
 def test_node2vec_distributed_no_nrow_driver_collect(spark, monkeypatch):
     """The executor-resident trainer's driver traffic per epoch is one
     loss scalar; the only multi-row collect anywhere is the 64-row bucket

@@ -82,21 +82,8 @@ def test_sampling_caps_neighbors(spark, g):
     assert any(am[v] != fm[v] for v in NODES)
 
 
-def test_train_reduces_loss_and_is_deterministic(spark, g):
-    feats = degree_features(g)
-    w1, hist1 = graphsage_train(g, feats, [3, 4, 4], epochs=10,
-                                learning_rate=0.2, seed=3,
-                                return_history=True, mode="parity")
-    w2, hist2 = graphsage_train(g, feats, [3, 4, 4], epochs=10,
-                                learning_rate=0.2, seed=3,
-                                return_history=True, mode="parity")
-    assert (w1, hist1) == (w2, hist2)  # bit-reproducible parity mode
-    # fixed-negative full-batch objective descends
-    assert hist1[-1] < hist1[0]
-
-
 def test_train_distributed_descends_and_partition_invariant(spark, g):
-    """The DEFAULT trainer: executor-resident state, integer-fixed-point
+    """The trainer: executor-resident state, integer-fixed-point
     reductions. Bit-identical weights and loss history at 2 vs 8 shuffle
     partitions (the local[2]/local[8] proxy — every cross-row sum is an
     integer, so no float summation-order dependence exists), and the
@@ -130,30 +117,3 @@ def test_trained_weights_feed_distributed_predict(spark, g):
     for r in norms:
         assert r["n"] == pytest.approx(1.0, abs=1e-6) or r["n"] == 0.0
 
-
-def test_train_smoke_100k_nodes(spark):
-    """The sparse trainer's O(E) memory bound at six figures of nodes: a
-    100k-node / ~300k-edge ring graph trains one epoch without building
-    anything n×n (the dense round-2 trainer would need 80 GB here)."""
-    import numpy as np
-    from pyspark.sql import functions as F
-    from graph_data_science_spark.graph import Graph
-    from graph_data_science_spark.operators.graphsage import graphsage_train
-
-    n = 100_000
-    nodes = spark.range(n).select(F.col("id").alias("node_id"))
-    # ring + skip edges: 3 out-edges per node, deterministic
-    edges = spark.range(n).select(
-        F.col("id").alias("src"),
-        F.explode(F.array(
-            (F.col("id") + 1) % n, (F.col("id") + 7) % n,
-            (F.col("id") + 131) % n)).alias("dst"))
-    g = Graph(nodes=nodes, edges=edges)
-    feats = nodes.select(
-        "node_id",
-        F.array((F.col("node_id") % 17).cast("double"),
-                (F.col("node_id") % 5).cast("double")).alias("features"))
-    weights, hist = graphsage_train(
-        g, feats, layer_dims=[2, 4], epochs=1, return_history=True,
-        mode="parity")
-    assert len(weights) == 1 and np.isfinite(hist[0])

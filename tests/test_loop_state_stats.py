@@ -8,8 +8,8 @@ BigInteger's 2^31-bit cap ("BigInteger would overflow supported range")
 and spent planning time on multi-million-bit BigInt arithmetic well before
 that. strip_origin_stats (plans/loop_state.py) re-wraps the checkpointed
 RDD without the origin stats; these tests pin the invariant for every
-in-memory truncation path (LoopState, the Scratch memory path, and the
-Pregel driver, which truncates through Scratch). The memory path is forced
+in-memory truncation path (the Scratch memory path, and the Pregel driver,
+which truncates through Scratch). The memory path is forced
 by raising the size gate, loop_state.LARGE_STATE_ROWS.
 """
 
@@ -18,8 +18,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from graph_data_science_spark.plans import loop_state
-from graph_data_science_spark.plans.loop_state import (
-    LoopState, Scratch, strip_origin_stats)
+from graph_data_science_spark.plans.loop_state import Scratch, strip_origin_stats
 
 
 @pytest.fixture
@@ -64,20 +63,6 @@ def test_strip_origin_stats_resets_estimate(spark):
     # same data either way
     assert stripped.count() == 100
     assert stripped.schema == ck.schema
-
-
-def test_loop_state_truncate_keeps_stats_flat(spark):
-    df = spark.range(200).select(
-        F.col("id").alias("node_id"), F.col("id").alias("comp"))
-    loop = LoopState()
-    state = loop.truncate(df)
-    # 40 chained self-join truncations: with carried origin stats the
-    # estimate doubles its bit length per round (2^63 -> overflow at ~25)
-    for _ in range(40):
-        state = loop.truncate(_self_join_step(state))
-        assert _stats_bits(state) <= 64
-    assert state.count() == 200
-    loop.detach(state)
 
 
 def test_scratch_memory_mode_keeps_stats_flat(spark, memory_gate):

@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 from graph_data_science_spark.graph import UNDIRECTED, Graph, edges_from_tuples, graph_from_edges
 from graph_data_science_spark.operators.kcore import coreness, k_core
 from graph_data_science_spark.operators.paths import bfs, dag_levels, shortest_paths
-from tests.conftest import rows_to_dict
+from tests.conftest import rows_to_dict, scratch_dirs
 
 INF = float("inf")
 
@@ -229,3 +229,28 @@ def test_bellman_ford_iteration_cap_is_not_a_cycle(spark):
         bellman_ford(g, 0, max_iterations=2)
     # the same graph with enough rounds converges without a cycle
     assert bellman_ford(g, 0, max_iterations=5).contains_negative_cycle is False
+
+
+def _chain(spark, n):
+    return graph_from_edges(
+        spark, edges_from_tuples(spark, [(i, i + 1) for i in range(n - 1)]))
+
+
+def test_k_core_raises_at_its_cap(spark):
+    # a 10-node path peels two ends per round: two rounds leave 6 nodes
+    # that are not a 2-core (the true 2-core is empty)
+    g = _chain(spark, 10)
+    before = scratch_dirs()
+    with pytest.raises(ValueError, match="k_core did not converge in 2"):
+        k_core(g, k=2, max_iterations=2)
+    assert scratch_dirs() <= before
+    assert not any(rows_to_dict(k_core(g, k=2), "node_id", "in_core").values())
+
+
+def test_bfs_and_shortest_paths_raise_at_their_cap(spark):
+    # node 9 of an 11-node chain is 9 hops out: 3 supersteps cannot reach it
+    g = _chain(spark, 11)
+    with pytest.raises(ValueError, match="did not converge in 3"):
+        bfs(g, 0, max_iterations=3)
+    with pytest.raises(ValueError, match="did not converge in 3"):
+        shortest_paths(g, 0, weighted=False, max_iterations=3)
