@@ -27,6 +27,8 @@ from dataclasses import dataclass, field, replace
 
 from pyspark.sql import DataFrame, functions as F
 
+from graph_data_science_spark.plans import loop_state
+
 NATURAL = "NATURAL"
 REVERSE = "REVERSE"
 UNDIRECTED = "UNDIRECTED"
@@ -79,7 +81,8 @@ class Graph:
     edges: DataFrame
     directed: bool = True
     name: str = "graph"
-    #: filled lazily; ``node_count()`` / ``edge_count()`` populate these.
+    #: filled lazily; ``node_count()`` / ``edge_count()`` populate these,
+    #: and ``tier()`` reads them.
     _node_count: int | None = field(default=None, repr=False)
     _edge_count: int | None = field(default=None, repr=False)
     #: materialized inverse adjacency (``index_inverse()``), or None.
@@ -95,6 +98,13 @@ class Graph:
         if self._edge_count is None:
             object.__setattr__(self, "_edge_count", self.edges.count())
         return self._edge_count
+
+    def tier(self) -> str:
+        """The size policy's answer for this graph: ``loop_state.tier`` of
+        the larger of its node and edge counts. The gate of the driver-local
+        PageRank and triangle plans; the counts are cached, so kernels run
+        on one Graph count it once."""
+        return loop_state.tier(max(self.node_count(), self.edge_count()))
 
     def has_weight(self) -> bool:
         return "weight" in self.edges.columns

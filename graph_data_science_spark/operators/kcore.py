@@ -94,7 +94,7 @@ def coreness(graph: Graph, max_iterations: int = 100) -> DataFrame:
     from pyspark.sql import Window
 
     spark = graph.nodes.sparkSession
-    edges = _undirected_simple(graph).localCheckpoint(eager=True)
+    edges = _undirected_simple(graph).persist()
 
     deg = edges.groupBy(F.col("src").alias("node_id")).agg(
         F.count(F.lit(1)).cast("long").alias("core"))
@@ -127,5 +127,8 @@ def coreness(graph: Graph, max_iterations: int = 100) -> DataFrame:
 
     driver = Pregel(spark, max_iterations=max_iterations,
                     extra_metrics={"max_core": F.max("core")})
-    res = driver.run(state, step)
+    try:
+        res = driver.run(state, step)
+    finally:
+        edges.unpersist()
     return res.state.select("node_id", "core")

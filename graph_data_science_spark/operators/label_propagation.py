@@ -114,21 +114,22 @@ def label_propagation(
     """``gds.labelPropagation`` analog. Returns ``(node_id, label)``."""
     if weighted and not graph.has_weight():
         raise ValueError("weighted LPA requires edges.weight")
+    if mode not in ("sync", "batch_sequential"):
+        raise ValueError(f"unknown mode {mode!r}")
     edges = (
         graph.edges.select("src", "dst", "weight")
         if weighted
         else graph.edges.select("src", "dst", F.lit(1.0).alias("weight"))
     ).persist()
-    state = _initial_state(graph, seed_property, node_weight_property)
-    if mode == "sync":
-        res = _run_sync(graph, edges, state, max_iterations, checkpoint_dir, resume)
-    elif mode == "batch_sequential":
-        res = _run_batch_sequential(graph, edges, state, max_iterations, batch_size,
-                                    checkpoint_dir, resume)
-    else:
-        raise ValueError(f"unknown mode {mode!r}")
-    edges.unpersist()
-    return res
+    try:
+        state = _initial_state(graph, seed_property, node_weight_property)
+        if mode == "sync":
+            return _run_sync(graph, edges, state, max_iterations,
+                             checkpoint_dir, resume)
+        return _run_batch_sequential(graph, edges, state, max_iterations,
+                                     batch_size, checkpoint_dir, resume)
+    finally:
+        edges.unpersist()
 
 
 def _run_sync(graph, edges, state, max_iterations, checkpoint_dir, resume):

@@ -22,10 +22,10 @@ PageRankComputation.java:59-108), reproduced EXACTLY:
 Config defaults mirror PageRankConfig.java:41-66: dampingFactor 0.85,
 tolerance 1e-7, maxIterations 20, optional sourceNodes / weights / scaler.
 
-Two plans, chosen by the engine's size policy (``loop_state.tier``):
+Two plans, chosen by the engine's size policy (``Graph.tier``):
 
-- ``"local"`` (edge count and vertex-state rows both below
-  ``LARGE_STATE_ROWS``): the prepared initial state and the edges
+- ``"local"`` (node and edge counts both below ``LARGE_STATE_ROWS``):
+  the prepared initial state and the edges
   cross to the driver once through Arrow, node ids map to positions
   with ``argsort``/``searchsorted``, and each superstep is one sparse
   matrix-vector product (``np.bincount`` over the active senders' edges).
@@ -48,9 +48,11 @@ incoming messages differs.
 One kernel: ``_delta_push`` runs that recurrence, in either plan, from a
 prepared initial state. :func:`pagerank` and :func:`article_rank` seed it
 with α (the latter shifting degrees by the average degree);
-:func:`pagerank_incremental` seeds it with the warm-start residual, which can be negative — so activity and
-``delta_max`` test ``|delta|``, which equals the reference's
-``delta > tolerance`` on from-scratch runs, where deltas never go negative.
+:func:`pagerank_incremental` seeds it with the previous scores, and its
+first exchange turns them into the warm-start residual, which can be
+negative — so activity and ``delta_max`` test ``|delta|``, which equals the
+reference's ``delta > tolerance`` on from-scratch runs, where deltas never
+go negative.
 :func:`eigenvector` keeps its own normalized recurrence.
 """
 
@@ -65,7 +67,6 @@ from pyspark.sql import DataFrame, functions as F
 
 from graph_data_science_spark import progress
 from graph_data_science_spark.graph import Graph, id_positions
-from graph_data_science_spark.plans.loop_state import tier
 from graph_data_science_spark.plans.partitioning import shuffle_hash, two_level_sum
 from graph_data_science_spark.plans.pregel import ACTIVE_COL, Pregel
 from graph_data_science_spark.operators.scale_properties import apply_scaler
@@ -161,7 +162,7 @@ def _from_scratch(
         (init_rank > 0.0).cast("int").alias(ACTIVE_COL),
     )
     return _delta_push(
-        _prep_edges(graph, weighted), state, damping_factor,
+        graph, state, damping_factor,
         tolerance, max_iterations, weighted, scaler=scaler,
         checkpoint_dir=checkpoint_dir, resume=resume, skew_salt=skew_salt,
         manifest={"algorithm": "pagerank", "damping_factor": damping_factor,
@@ -183,17 +184,18 @@ def pagerank_incremental(
     (streaming/ingest.py emits edge deltas).
 
     Push-residual formulation: the delta-push kernel maintains the
-    invariant *rank + pending-push mass = fixpoint*. Seeding
-    ``rank = prev`` and ``delta = r`` with the fixpoint residual on the
-    NEW graph
+    invariant *rank + pending-push mass = fixpoint*. The kernel starts
+    from ``rank = delta = prev`` (0 for new nodes) with every node
+    active, and its first exchange is the residual on the NEW graph
 
         r_v = α + d · Σ_in prev_u / deg'_u − prev_v
 
-    restores that invariant exactly, so the shared superstep converges
-    to the same fixpoint a from-scratch run reaches. The initial frontier
-    is the nodes whose residual exceeds the tolerance (new nodes enter
-    with prev = 0 → residual α + inflow). Edge DELETIONS make residuals
-    negative, which the kernel's ``|delta|`` activity test covers.
+    (``delta = r``, ``rank = prev + r``), which restores that invariant
+    exactly, so the later exchanges converge to the same fixpoint a
+    from-scratch run reaches. ``max_iterations`` counts this exchange in
+    place of the send-only initial superstep; its ``metrics`` record's
+    ``active`` is the frontier, the nodes whose ``|r|`` exceeds the
+    tolerance. Edge DELETIONS make residuals negative.
 
     The frontier follows the edge delta only on tiny graphs (the locality
     test's). Measured on the 10k-file benchmark graph (perfbench
@@ -201,53 +203,23 @@ def pagerank_incremental(
     active from a capped base, and a converged base still starts 64%
     active at tol 1e-7: a residual above the tolerance spreads over the
     whole graph. So per-superstep cost, not frontier size, sets the
-    price. The residual is one superstep-shaped Spark job; the loop after
-    it is :func:`pagerank`'s kernel, so the size tier picks the same plan
-    (module doc): driver-local SpMV supersteps below the gate, one shuffle
-    join + one partial-agg sum + state join per superstep otherwise."""
-    alpha = 1.0 - damping_factor
-    edges = _prep_edges(graph, weighted)
-
+    price. The kernel is :func:`pagerank`'s, so the size tier picks the
+    same plan (module doc): driver-local SpMV supersteps below the gate,
+    one shuffle join + one partial-agg sum + state join per superstep
+    otherwise."""
     deg = graph.degrees("out", weighted=weighted)
     prev = prev_scores.select(
         F.col("node_id").alias("_pn"), F.col("score").alias("_prev"))
-    base = (deg.join(prev, deg.node_id == F.col("_pn"), "left")
-            .select("node_id", "degree",
-                    F.coalesce("_prev", F.lit(0.0)).alias("rank")))
-
-    # one superstep-shaped job computes the residual on the new topology
-    senders0 = shuffle_hash(
-        base.where((F.col("rank") != 0.0) & (F.col("degree") > 0.0))
-        .select("node_id", F.col("rank").alias("_r"), "degree"))
-    m0 = F.col("_r") / F.col("degree")
-    if weighted:
-        m0 = m0 * F.col("weight")
-    inflow = (edges.join(senders0, edges.src == senders0.node_id, "inner")
-              .select(F.col("dst"), m0.alias("m"))
-              .groupBy("dst").agg(F.sum("m").alias("inflow")))
-    # rank absorbs the residual immediately (x* = prev + Σ_{k≥0}(dP^T)^k r,
-    # and the superstep only accumulates the k≥1 terms) — exactly the
-    # from-scratch pattern rank = delta = α, which this reduces to when
-    # prev ≡ 0
-    state = (base.join(shuffle_hash(inflow),
-                       base.node_id == inflow.dst, "left")
-             .select(
-                 base.node_id, base.degree,
-                 (F.lit(alpha)
-                  + F.lit(damping_factor) * F.coalesce("inflow", F.lit(0.0))
-                  - F.col("rank")).alias("delta"),
-                 F.col("rank"))
-             .select(
-                 "node_id", "degree",
-                 (F.col("rank") + F.col("delta")).alias("rank"), "delta",
-                 (F.abs(F.col("delta")) > F.lit(tolerance))
-                 .cast("int").alias(ACTIVE_COL)))
-    return _delta_push(edges, state, damping_factor, tolerance,
-                       max_iterations, weighted)
+    rank = F.coalesce("_prev", F.lit(0.0))
+    state = (deg.join(prev, deg.node_id == F.col("_pn"), "left")
+             .select("node_id", "degree", rank.alias("rank"),
+                     rank.alias("delta"), F.lit(1).alias(ACTIVE_COL)))
+    return _delta_push(graph, state, damping_factor, tolerance,
+                       max_iterations, weighted, warm=True)
 
 
 def _delta_push(
-    edges: DataFrame,
+    graph: Graph,
     state: DataFrame,
     damping_factor: float,
     tolerance: float,
@@ -258,14 +230,16 @@ def _delta_push(
     resume: bool = False,
     skew_salt: int = 0,
     manifest: dict | None = None,
+    warm: bool = False,
 ) -> PageRankResult:
     """The one delta-push superstep loop, from a prepared initial
-    ``state`` ``(node_id, degree, rank, delta, _active)`` over ``edges``.
+    ``state`` ``(node_id, degree, rank, delta, _active)`` over the graph's
+    edges. With ``warm`` the first exchange is the residual exchange
+    (:func:`pagerank_incremental`): ``delta = α + d·msg − rank``.
 
-    The size policy picks the plan (module doc): driver-local when both
-    the edge count and the state's row count are in the ``"local"`` tier
-    and the run neither checkpoints nor salts, the Pregel join plan
-    otherwise.
+    The size policy picks the plan (module doc): driver-local when
+    ``graph.tier()`` is ``"local"`` and the run neither checkpoints nor
+    salts, the Pregel join plan otherwise.
 
     Activity and ``delta_max`` use ``|delta|``: from-scratch deltas are
     never negative, so this is the reference's ``delta > tolerance`` there,
@@ -273,28 +247,28 @@ def _delta_push(
     # GDS counts the send-only initial superstep in maxIterations
     # (Pregel.java:172-210 runs maxIterations supersteps, the first of which
     # only sends) — so the number of message exchanges is maxIterations - 1.
-    exchanges = max(0, max_iterations - 1)
-    # the state is counted first: it is the cheaper count (one row per
-    # node), and above the gate its answer alone sends the run to Pregel
+    # A warm start's residual exchange stands in for that superstep.
+    exchanges = max(0, max_iterations - 1) + warm
+    edges = _prep_edges(graph, weighted)
     if (not (checkpoint_dir or resume or skew_salt > 1)
-            and tier(state.count()) == "local"
-            and tier(edges.count()) == "local"):
+            and graph.tier() == "local"):
         scores, ran, converged, metrics = _local_push(
             edges, state, damping_factor, tolerance, exchanges, weighted,
-            manifest)
+            manifest, warm)
     else:
         res = _pregel_push(
             edges, state, damping_factor, tolerance, exchanges, weighted,
-            checkpoint_dir, resume, skew_salt, manifest)
+            checkpoint_dir, resume, skew_salt, manifest, warm)
         scores = res.state.select("node_id", F.col("rank").alias("score"))
         ran, converged, metrics = res.ran_iterations, res.converged, res.metrics
     if scaler:
         scores = apply_scaler(scores, "score", scaler)
-    return PageRankResult(scores, ran + 1, converged, metrics)
+    # the initial superstep counts even where nothing runs (an empty graph)
+    return PageRankResult(scores, max(1, ran + 1 - warm), converged, metrics)
 
 
 def _pregel_push(edges, state, damping_factor, tolerance, exchanges,
-                 weighted, checkpoint_dir, resume, skew_salt, manifest):
+                 weighted, checkpoint_dir, resume, skew_salt, manifest, warm):
     """The join plan: one Pregel superstep per message exchange, over
     ``edges`` persisted for the run and released when it ends."""
     edges = edges.persist()
@@ -314,6 +288,8 @@ def _pregel_push(edges, state, damping_factor, tolerance, exchanges,
             msgs = raw.groupBy("dst").agg(F.sum("m").alias("msg"))
         joined = st.join(shuffle_hash(msgs), st.node_id == msgs.dst, "left")
         new_delta = F.coalesce(F.lit(damping_factor) * F.col("msg"), F.lit(0.0))
+        if warm and superstep == 0:
+            new_delta = F.lit(1.0 - damping_factor) + new_delta - F.col("rank")
         return joined.select(
             st.node_id,
             st.degree,
@@ -337,7 +313,7 @@ def _pregel_push(edges, state, damping_factor, tolerance, exchanges,
 
 
 def _local_push(edges, state, damping_factor, tolerance, exchanges,
-                weighted, manifest):
+                weighted, manifest, warm):
     """The driver-local plan: the join plan's recurrence as one sparse
     matrix-vector product per exchange → ``(scores, exchanges run,
     converged, metrics)``.
@@ -380,6 +356,8 @@ def _local_push(edges, state, damping_factor, tolerance, exchanges,
                 m = m * w[send]
             delta = damping_factor * np.bincount(dp[send], weights=m,
                                                  minlength=n)
+            if warm and ran == 0:
+                delta = (1.0 - damping_factor) + delta - rank
             rank = rank + delta
             active = np.abs(delta) > tolerance
             n_active = int(active.sum())

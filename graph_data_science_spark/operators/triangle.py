@@ -13,15 +13,16 @@ Reference semantics (algo/src/main/java/org/neo4j/gds/triangle/):
   ``C(v) = 2*T(v) / (deg(v) * (deg(v)-1))``; 0 when deg < 2; NaN for
   nodes excluded by maxDegree.
 
-Two plans, chosen by the engine's size policy (``loop_state.tier`` of the
-graph's edge and node counts):
+Two plans, chosen by the engine's size policy through ``Graph.tier`` —
+the gate PageRank asks too, so a Graph that PageRank ran on is not counted
+again:
 
-- ``"local"`` (both below ``LARGE_STATE_ROWS``): the edges cross to the
-  driver once through Arrow and are canonicalized there by
-  ``graph.canonical_edges``'s rule (self-loops dropped, each unordered
-  pair once), which saves that function's distinct shuffle; the same
-  degree-ordered wedge closing then runs in NumPy, in passes of at most
-  as many wedges as edges (:func:`_local_triangles`). The triangle
+- ``"local"`` (node and edge counts both below ``LARGE_STATE_ROWS``): the
+  edges cross to the driver once through Arrow and are canonicalized
+  there by ``graph.canonical_edges``'s rule (self-loops dropped, each
+  unordered pair once), which saves that function's distinct shuffle; the
+  same degree-ordered wedge closing then runs in NumPy, in passes of at
+  most as many wedges as edges (:func:`_local_triangles`). The triangle
   stream and the per-node counts return through ``createDataFrame``.
 - otherwise, the Spark plan (SURVEY §2.4 "ordered two-hop self-join",
   degree-oriented — the compact-forward algorithm):
@@ -54,7 +55,6 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from graph_data_science_spark.graph import Graph, canonical_edges, id_positions
-from graph_data_science_spark.plans.loop_state import tier
 
 
 @dataclass
@@ -81,7 +81,7 @@ def triangles(graph: Graph, max_degree: int | None = None) -> DataFrame:
     intermediate caches are unpersisted before returning — so no block
     leaks across repeated calls, and consumers reuse the materialized
     triangle stream instead of recomputing the wedge join."""
-    if _local_tier(graph):
+    if graph.tier() == "local":
         ids, _, tri = _local_triangles(graph, max_degree)
         return _local_frame(graph, ids[tri], ("a", "b", "c"))
     tri, handles = _build_triangles(graph, max_degree)
@@ -89,11 +89,6 @@ def triangles(graph: Graph, max_degree: int | None = None) -> DataFrame:
     for h in handles:
         h.unpersist()
     return out
-
-
-def _local_tier(graph: Graph) -> bool:
-    return (tier(graph.edge_count()) == "local"
-            and tier(graph.node_count()) == "local")
 
 
 def _local_frame(graph: Graph, data, names) -> DataFrame:
@@ -231,7 +226,7 @@ def triangle_count(graph: Graph, max_degree: int | None = None) -> TriangleCount
 
     Excluded (degree > max_degree) nodes report -1, like the reference.
     """
-    if _local_tier(graph):
+    if graph.tier() == "local":
         ids, deg, tri = _local_triangles(graph, max_degree)
         node_ids = graph.nodes.select("node_id").toArrow().column(
             "node_id").to_numpy()

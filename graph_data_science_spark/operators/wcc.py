@@ -70,17 +70,6 @@ def wcc(
         if "weight" not in e.columns:
             raise ValueError("threshold requires edges.weight")
         e = e.where(F.col("weight") > float(threshold))
-    # WCC ignores direction: mirror every edge once, up front. NO dedup —
-    # min-label propagation is idempotent, so parallel/mirrored duplicate
-    # edges contribute the same min and the per-superstep map-side combine
-    # collapses them for free; a distinct here would cost a full shuffle
-    # of the edge table (measured 1.8 s of an 8.4 s sf0.1 run, removing
-    # ZERO rows) and at 10^12 edges that shuffle is the whole job.
-    e = e.select("src", "dst")
-    edges = e.unionByName(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).where(F.col("src") != F.col("dst")).persist()
-
     if seed_property is not None:
         if seed_property not in graph.nodes.columns:
             raise ValueError(f"missing seed column {seed_property!r}")
@@ -97,6 +86,17 @@ def wcc(
         init_comp.alias("component"),
         F.lit(1).cast("int").alias(ACTIVE_COL),
     )
+
+    # WCC ignores direction: mirror every edge once, up front. NO dedup —
+    # min-label propagation is idempotent, so parallel/mirrored duplicate
+    # edges contribute the same min and the per-superstep map-side combine
+    # collapses them for free; a distinct here would cost a full shuffle
+    # of the edge table (measured 1.8 s of an 8.4 s sf0.1 run, removing
+    # ZERO rows) and at 10^12 edges that shuffle is the whole job.
+    e = e.select("src", "dst")
+    edges = e.unionByName(
+        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    ).where(F.col("src") != F.col("dst")).persist()
 
     def step(st: DataFrame, superstep: int) -> DataFrame:
         # only nodes whose component changed last round need to re-broadcast
@@ -126,8 +126,10 @@ def wcc(
         manifest={"algorithm": "wcc", "threshold": threshold,
                   "seed_property": seed_property},
     )
-    res = driver.run(state, step, resume=resume)
-    edges.unpersist()
+    try:
+        res = driver.run(state, step, resume=resume)
+    finally:
+        edges.unpersist()
     comps = res.state.select("node_id", "component")
     if consecutive_ids:
         # cardinality = #components ≪ #nodes; the window runs over the small

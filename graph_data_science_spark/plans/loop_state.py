@@ -7,7 +7,10 @@ iterative loop uses.
 - ``"local"`` — a known count below it: a loop with a driver-local kernel
   (Louvain's local finish, BPE's merge loop, the PageRank superstep loop
   of ``operators/pagerank.py``, triangle counting) runs on the driver;
-  any other loop runs it as ``"memory"``.
+  any other loop runs it as ``"memory"``. PageRank and triangles ask
+  through one gate, ``Graph.tier()``: this function of the larger of the
+  graph's node and edge counts, which the Graph caches, so kernels run on
+  one Graph count it once.
 - ``"parquet"`` — at or above it, or unknown (the scale-safe side):
   parquet truncation, AQE off, superstep fusion, shuffled joins.
 - ``"memory"`` — only through the override :func:`pinned_tier`: the

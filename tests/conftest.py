@@ -32,6 +32,22 @@ def rows_to_dict(df, key, value):
     return {r[key]: r[value] for r in df.collect()}
 
 
+@pytest.fixture
+def count_calls(monkeypatch):
+    """Every ``DataFrame.count`` call made while the fixture is live."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    calls = []
+    orig = DataFrame.count
+
+    def spy(self):
+        calls.append(self)
+        return orig(self)
+
+    monkeypatch.setattr(DataFrame, "count", spy)
+    return calls
+
+
 def scratch_dirs():
     """The ``Scratch`` directories currently in the temp dir; a loop that
     cleans up after itself leaves this set as it found it."""

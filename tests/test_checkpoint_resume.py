@@ -44,14 +44,24 @@ def test_pagerank_resume_equals_uninterrupted(f1_graph, tmp_path):
 
 def test_mismatched_resume_raises_and_leaves_no_cached_frame(
         spark, f1_graph, tmp_path):
-    """A resume into snapshots written with another damping factor raises
-    the manifest error and still releases the persisted edge frame."""
+    """A resume into snapshots written with another damping factor (PageRank)
+    or threshold (WCC) raises the manifest error and still releases the
+    persisted edge frame."""
     ckpt = str(tmp_path / "pr")
     pagerank(f1_graph, tolerance=0.0, max_iterations=3, checkpoint_dir=ckpt)
     spark.catalog.clearCache()
     with pytest.raises(ValueError, match="manifest"):
         pagerank(f1_graph, damping_factor=0.5, tolerance=0.0,
                  max_iterations=5, checkpoint_dir=ckpt, resume=True)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+    weighted = Graph(nodes=f1_graph.nodes, edges=edges_from_tuples(
+        spark, [(a, b, 1.0) for a, b in F1_EDGES], weighted=True))
+    ckpt = str(tmp_path / "wcc")
+    wcc(weighted, max_iterations=3, checkpoint_dir=ckpt)
+    spark.catalog.clearCache()
+    with pytest.raises(ValueError, match="manifest"):
+        wcc(weighted, threshold=0.5, checkpoint_dir=ckpt, resume=True)
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 

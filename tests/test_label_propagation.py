@@ -105,3 +105,10 @@ def test_lpa_batch_sequential_multi_batch_deterministic(f4_graph):
         "node_id", "label",
     )
     assert a == b
+
+
+def test_lpa_unknown_mode_raises_and_leaves_no_cached_frame(spark, f4_graph):
+    spark.catalog.clearCache()
+    with pytest.raises(ValueError, match="unknown mode"):
+        label_propagation(f4_graph, mode="async")
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

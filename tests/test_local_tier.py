@@ -150,3 +150,14 @@ def test_pagerank_drops_edges_to_unknown_nodes_on_both_plans(spark):
                 g, tolerance=0.0, max_iterations=3).scores.collect()}
     assert set(runs["local"]) == {0, 1, 2}
     assert runs["local"] == pytest.approx(runs["memory"], abs=1e-12)
+
+
+def test_pagerank_and_triangles_count_a_graph_once(spark, count_calls):
+    """PageRank and triangles ask one gate, ``Graph.tier``, whose counts
+    the Graph keeps: triangles on a Graph that PageRank ran on count
+    nothing."""
+    g = _graph(spark, F1_EDGES, len(F1_NODES))
+    pagerank(g)
+    count_calls.clear()
+    triangle_count(g)
+    assert count_calls == []

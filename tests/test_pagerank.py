@@ -6,11 +6,13 @@ and doc/modules/ROOT/pages/algorithms/page-rank.adoc result tables.
 
 import math
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from graph_data_science_spark.graph import Graph, edges_from_tuples, graph_from_edges
-from graph_data_science_spark.operators.pagerank import pagerank
+from graph_data_science_spark.operators.pagerank import (
+    pagerank, pagerank_incremental)
 from graph_data_science_spark.plans.loop_state import pinned_tier
 
 from tests.conftest import both_tiers
@@ -230,18 +232,35 @@ def test_pagerank_incremental_frontier_is_local(spark):
     assert first_active is not None and first_active < (n + 1) // 2
 
 
-@pytest.mark.parametrize("fixture", ["F1", "F2"])
+def _f2_perturbation(spark):
+    """``(base graph, perturbed graph)``: F2 unweighted, then one edge
+    dropped and two added, one of them to a new node 99."""
+    base_edges = [(a, b) for (a, b, *_r) in F2_EDGES]
+    return (build_graph(spark, base_edges, F2_NODES),
+            build_graph(spark, base_edges[1:] + [(0, 6), (3, 99)],
+                        list(F2_NODES) + [99]))
+
+
+@pytest.mark.parametrize("fixture", ["F1", "F2", "F2_warm"])
 def test_pagerank_tiers_agree_on_run_records(spark, fixture):
     """The driver-local plan and the join plan stop at the same superstep
-    and leave the same per-superstep activity and row counts."""
+    and leave the same per-superstep activity and row counts — a warm
+    start's residual exchange included."""
     if fixture == "F1":
         g = build_graph(spark, F1_EDGES, F1_NODES)
-    else:
+    elif fixture == "F2":
         g = build_graph(spark, F2_EDGES, F2_NODES, weighted=True)
+    else:
+        g0, g = _f2_perturbation(spark)
+        prev = pagerank(g0, damping_factor=0.5, tolerance=1e-9,
+                        max_iterations=60).scores
     runs = {}
     for t in ("local", "memory"):
         with pinned_tier(t):
-            res = pagerank(g, tolerance=1e-4)
+            if fixture == "F2_warm":
+                res = pagerank_incremental(g, prev, tolerance=1e-4)
+            else:
+                res = pagerank(g, tolerance=1e-4)
         runs[t] = res
         assert {m["tier"] for m in res.metrics} == {t}
     local, memory = runs["local"], runs["memory"]
@@ -252,3 +271,29 @@ def test_pagerank_tiers_agree_on_run_records(spark, fixture):
     for a, b in zip(local.metrics, memory.metrics):
         assert a["delta_max"] == pytest.approx(b["delta_max"], abs=1e-12)
         assert a["rank_sum"] == pytest.approx(b["rank_sum"], abs=1e-12)
+
+
+@both_tiers
+def test_pagerank_incremental_first_exchange_is_the_residual(spark):
+    """A warm start's first exchange computes ``α + d·Pᵀ·prev − prev`` and
+    leaves the first metrics record, so every counted superstep has one."""
+    d, tol = 0.5, 1e-4
+    g0, g1 = _f2_perturbation(spark)
+    prev = scores_dict(pagerank(g0, damping_factor=0.5, tolerance=1e-9,
+                                max_iterations=60))
+    prev_df = spark.createDataFrame(list(prev.items()), "node_id long, score double")
+    inc = pagerank_incremental(g1, prev_df, damping_factor=d, tolerance=tol)
+    assert len(inc.metrics) == inc.ran_iterations
+
+    ids = sorted({r["node_id"] for r in g1.nodes.collect()})
+    edges = [(r["src"], r["dst"]) for r in g1.edges.collect()]
+    x = np.array([prev.get(i, 0.0) for i in ids])
+    pos = {v: k for k, v in enumerate(ids)}
+    out_deg = np.zeros(len(ids))
+    for a, _ in edges:
+        out_deg[pos[a]] += 1
+    inflow = np.zeros(len(ids))
+    for a, b in edges:
+        inflow[pos[b]] += x[pos[a]] / out_deg[pos[a]]
+    residual = (1 - d) + d * inflow - x
+    assert inc.metrics[0]["active"] == int((np.abs(residual) > tol).sum())

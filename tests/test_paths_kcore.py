@@ -76,6 +76,21 @@ def test_coreness(spark):
     assert got == {0: 3, 1: 3, 2: 3, 3: 3, 4: 1, 5: 1, 6: 2, 7: 2, 8: 2, 9: 0}
 
 
+def test_coreness_keeps_only_its_result_resident(spark):
+    """The mirrored edge frame goes with the call: of the RDDs the call
+    leaves persisted, only the returned state's remains."""
+    clique = [(i, j) for i in range(4) for j in range(i + 1, 4)]
+    g = graph_from_edges(spark, edges_from_tuples(spark, clique + [(3, 4)]))
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    before = persisted()
+    cores = coreness(g)
+    assert len(persisted() - before) == 1
+    assert {r["core"] for r in cores.collect()} == {1, 3}
+
+
 def test_dijkstra_paths(spark):
     from graph_data_science_spark.operators.paths import astar, dijkstra
 

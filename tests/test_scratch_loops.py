@@ -8,26 +8,11 @@ raising case is in tests/test_paths_kcore.py).
 """
 
 import pytest
-from pyspark.sql.classic.dataframe import DataFrame
 
 from graph_data_science_spark.graph import edges_from_tuples, graph_from_edges
 from graph_data_science_spark.operators.kcore import k_core
 from graph_data_science_spark.operators.walking import sample_cnarw, sample_rwr
 from tests.conftest import scratch_dirs
-
-
-@pytest.fixture
-def count_calls(monkeypatch):
-    """Every ``DataFrame.count`` call made while the fixture is live."""
-    calls = []
-    orig = DataFrame.count
-
-    def spy(self):
-        calls.append(self)
-        return orig(self)
-
-    monkeypatch.setattr(DataFrame, "count", spy)
-    return calls
 
 
 @pytest.mark.parametrize("run", [
