@@ -4,9 +4,12 @@ Reference analog: ``org.neo4j.gds.api.Graph`` / ``GraphStore``
 (core/src/main/java/org/neo4j/gds/api/GraphStore.java:46,
  core/src/main/java/org/neo4j/gds/core/huge/HugeGraph.java:97).
 The reference stores an in-memory CSR; here the canonical representation is
-relational — an ``edges`` DataFrame hash-partitioned by ``src`` — and CSR
-packing happens per-partition inside Arrow UDFs only where an algorithm
-kernel wants it.
+relational — an ``edges`` DataFrame hash-partitioned by ``src``. CSR packing
+happens per-partition inside Arrow UDFs where a distributed kernel wants it,
+and, below the size gate (``Graph.tier() == "local"``), on the driver: one
+:class:`LocalGraph` per Graph (:meth:`Graph.local`), collected once and read
+by every driver-local plan, as every reference algorithm reads its one
+``HugeGraph``.
 
 Schema conventions
 ------------------
@@ -25,6 +28,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field, replace
 
+import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
 from graph_data_science_spark.plans import loop_state
@@ -61,16 +65,35 @@ def canonical_edges(edges: DataFrame) -> DataFrame:
             .where(F.col("src") != F.col("dst")).distinct())
 
 
-def id_positions(ids, values):
-    """``(positions, present)`` of ``values`` in the sorted id array
-    ``ids`` — how the driver-local kernels map node ids to array slots.
-    Where ``present`` is False the position is a placeholder."""
-    import numpy as np
-    if not len(ids):
-        return (np.zeros(len(values), dtype=np.int64),
-                np.zeros(len(values), dtype=bool))
-    pos = np.minimum(np.searchsorted(ids, values), len(ids) - 1)
-    return pos, ids[pos] == values
+@dataclass(frozen=True)
+class LocalGraph:
+    """A Graph's driver-resident view (:meth:`Graph.local`).
+
+    ``ids`` is the sorted union of node ids and edge endpoints, and
+    ``is_node`` marks the ids that are nodes: PageRank drops an edge with
+    an endpoint that is not a node (while its degree counts the edge), and
+    triangles keep every edge. ``src``/``dst`` are each edge's endpoints as
+    positions into ``ids``; ``weight`` is each edge's weight, or None when
+    the graph has no weight column."""
+
+    ids: np.ndarray
+    is_node: np.ndarray
+    src: np.ndarray
+    dst: np.ndarray
+    weight: np.ndarray | None
+
+    def out_degree(self, weighted: bool = False) -> np.ndarray:
+        """Per-id out-degree over the rows :meth:`Graph.degrees` counts:
+        every edge from the id, or, ``weighted``, the sum of its weights
+        > 0."""
+        n = len(self.ids)
+        if not weighted:
+            return np.bincount(self.src, minlength=n).astype(np.float64)
+        if self.weight is None:
+            raise ValueError("weighted degree requires a 'weight' column")
+        pos = self.weight > 0.0
+        return np.bincount(self.src[pos], weights=self.weight[pos],
+                           minlength=n)
 
 
 @dataclass
@@ -85,8 +108,11 @@ class Graph:
     #: and ``tier()`` reads them.
     _node_count: int | None = field(default=None, repr=False)
     _edge_count: int | None = field(default=None, repr=False)
-    #: materialized inverse adjacency (``index_inverse()``), or None.
-    _inverse_edges: DataFrame | None = field(default=None, repr=False)
+    #: filled lazily by ``local()``. Not an ``__init__`` field, so
+    #: ``dataclasses.replace`` does not copy it: every derived Graph
+    #: (``oriented``, ``subgraph``, ``to_undirected``, ...) builds its own.
+    _local: LocalGraph | None = field(default=None, init=False, repr=False,
+                                      compare=False)
 
     # -- basic accessors ---------------------------------------------------
     def node_count(self) -> int:
@@ -109,6 +135,29 @@ class Graph:
     def has_weight(self) -> bool:
         return "weight" in self.edges.columns
 
+    def local(self) -> LocalGraph:
+        """This graph on the driver, for the plans that run when
+        :meth:`tier` is ``"local"``, so its size is bounded by the gate.
+        Built on first use from one Arrow collect of ``nodes.node_id`` and
+        one of the edges, and kept on the Graph (driver memory, not a
+        Spark cache)."""
+        if self._local is None:
+            node_ids = self.nodes.select("node_id").toArrow().column(
+                "node_id").to_numpy()
+            e = self.edges.select(
+                "src", "dst", *(["weight"] if self.has_weight() else [])
+            ).toArrow()
+            src, dst = e.column("src").to_numpy(), e.column("dst").to_numpy()
+            ids = np.unique(np.concatenate([node_ids, src, dst]))
+            is_node = np.zeros(len(ids), dtype=bool)
+            is_node[np.searchsorted(ids, node_ids)] = True
+            weight = (np.asarray(e.column("weight").to_numpy(), np.float64)
+                      if self.has_weight() else None)
+            object.__setattr__(self, "_local", LocalGraph(
+                ids, is_node, np.searchsorted(ids, src),
+                np.searchsorted(ids, dst), weight))
+        return self._local
+
     # -- orientation / transforms -----------------------------------------
     def oriented(self, orientation: str = NATURAL) -> "Graph":
         """Return a graph with the requested edge orientation.
@@ -121,46 +170,13 @@ class Graph:
             return self
         e = self.edges
         extra = [c for c in e.columns if c not in ("src", "dst")]
-        if orientation == REVERSE:
-            if self._inverse_edges is not None:
-                # the derived graph's edge set is no longer the one the
-                # index mirrors — detach it (it stays valid on `self`)
-                return replace(self, edges=self._inverse_edges,
-                               _inverse_edges=None)
-            rev = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"), *extra)
-            return replace(self, edges=rev, _inverse_edges=None)
-        if orientation == UNDIRECTED:
-            rev = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"), *extra)
-            return replace(self, edges=e.select("src", "dst", *extra).unionByName(rev),
-                           directed=False, _inverse_edges=None, _edge_count=None)
-        raise ValueError(f"unknown orientation {orientation!r}")
-
-    def index_inverse(self, partitions: int | None = None) -> "Graph":
-        """``gds.graph.relationships.indexInverse`` analog
-        (algo/.../indexInverse/InverseRelationships.java — builds the
-        incoming-adjacency CSR so REVERSE traversals don't rescan).
-
-        Spark-first: an "inverse index" IS a physical layout — the reversed
-        edge table hash-partitioned on its traversal key (the new ``src``,
-        i.e. the original ``dst``) and persisted, so every subsequent
-        REVERSE-orientation join/groupBy starts from a co-located cached
-        scan instead of re-shuffling the natural-orientation table. At
-        cluster scale this is the difference between one shuffle at index
-        time and one shuffle per consuming superstep. Eagerly materialized,
-        like the reference's index build task."""
-        e = self.edges
-        extra = [c for c in e.columns if c not in ("src", "dst")]
         rev = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"), *extra)
-        rev = (rev.repartition(partitions, "src") if partitions
-               else rev.repartition("src")).persist()
-        rev.count()
-        return replace(self, _inverse_edges=rev)
-
-    def drop_inverse_index(self) -> "Graph":
-        """Release the materialized inverse index (unpersist + detach)."""
-        if self._inverse_edges is not None:
-            self._inverse_edges.unpersist()
-        return replace(self, _inverse_edges=None)
+        if orientation == REVERSE:
+            return replace(self, edges=rev)
+        if orientation == UNDIRECTED:
+            return replace(self, edges=e.select("src", "dst", *extra).unionByName(rev),
+                           directed=False, _edge_count=None)
+        raise ValueError(f"unknown orientation {orientation!r}")
 
     def to_undirected(self, aggregation: str = "SINGLE") -> "Graph":
         """``gds.beta.graph.relationships.toUndirected`` analog
@@ -172,8 +188,7 @@ class Graph:
             e = e.groupBy("src", "dst").agg(_agg_weight(aggregation).alias("weight"))
         else:
             e = e.select("src", "dst").distinct()
-        return replace(g, edges=e, directed=False, _inverse_edges=None,
-                       _edge_count=None)
+        return replace(g, edges=e, directed=False, _edge_count=None)
 
     def canonical_undirected_edges(self) -> DataFrame:
         """:func:`canonical_edges` of this graph's edges."""
@@ -221,7 +236,7 @@ class Graph:
             .join(ids.withColumnRenamed("node_id", "dst"), "dst", "left_semi")
         )
         return replace(self, nodes=nodes, edges=edges, _node_count=None,
-                       _edge_count=None, _inverse_edges=None)
+                       _edge_count=None)
 
     def with_node_property(self, values: DataFrame, column: str) -> "Graph":
         """MUTATE-mode analog: attach an algorithm result ``(node_id, column)``

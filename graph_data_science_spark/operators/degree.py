@@ -2,13 +2,14 @@
 
 Reference: algo/src/main/java/org/neo4j/gds/degree/DegreeCentrality.java —
 orientation-dependent degree; weighted degree sums only weights > 0
-(DegreeCentrality.java:315-319 — negative/zero weights ignored). Plain
-partial-aggregated groupBy; stays entirely in whole-stage codegen.
+(DegreeCentrality.java:315-319 — negative/zero weights ignored). The one
+degree definition is ``Graph.degrees``: a plain partial-aggregated
+groupBy that stays entirely in whole-stage codegen.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from graph_data_science_spark.graph import NATURAL, Graph
 
@@ -18,36 +19,12 @@ def degree_centrality(
     orientation: str = NATURAL,
     weighted: bool = False,
 ) -> DataFrame:
-    """Per-node degree → ``(node_id, score: double)``.
+    """Per-node degree → ``(node_id, score: double)``: ``Graph.degrees``
+    of the graph in ``orientation``.
 
     NATURAL = out-degree, REVERSE = in-degree, UNDIRECTED = both directions
     (sum of out+in, parallel edges counted — matching the reference's
     undirected CSR which materializes both directions).
     """
-    e = graph.edges
-    if weighted and "weight" not in e.columns:
-        # checked BEFORE the projections below reference the column, so the
-        # caller gets this error instead of a raw AnalysisException
-        raise ValueError("weighted degree requires edges.weight")
-    if orientation == "UNDIRECTED":
-        sides = e.select(F.col("src").alias("node_id"), *( ["weight"] if weighted else [] )).unionByName(
-            e.select(F.col("dst").alias("node_id"), *( ["weight"] if weighted else [] ))
-        )
-    elif orientation == "REVERSE":
-        sides = e.select(F.col("dst").alias("node_id"), *( ["weight"] if weighted else [] ))
-    else:
-        sides = e.select(F.col("src").alias("node_id"), *( ["weight"] if weighted else [] ))
-
-    if weighted:
-        deg = (
-            sides.where(F.col("weight") > 0.0)
-            .groupBy("node_id")
-            .agg(F.sum("weight").cast("double").alias("score"))
-        )
-    else:
-        deg = sides.groupBy("node_id").agg(F.count(F.lit(1)).cast("double").alias("score"))
-    return (
-        graph.nodes.select("node_id")
-        .join(deg, "node_id", "left")
-        .select("node_id", F.coalesce("score", F.lit(0.0)).alias("score"))
-    )
+    return (graph.oriented(orientation).degrees("out", weighted)
+            .withColumnRenamed("degree", "score"))

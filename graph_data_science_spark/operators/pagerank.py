@@ -25,15 +25,17 @@ tolerance 1e-7, maxIterations 20, optional sourceNodes / weights / scaler.
 Two plans, chosen by the engine's size policy (``Graph.tier``):
 
 - ``"local"`` (node and edge counts both below ``LARGE_STATE_ROWS``):
-  the prepared initial state and the edges
-  cross to the driver once through Arrow, node ids map to positions
-  with ``argsort``/``searchsorted``, and each superstep is one sparse
-  matrix-vector product (``np.bincount`` over the active senders' edges).
-  The result returns through one ``createDataFrame`` plus one
-  ``localCheckpoint``. On a seeded 10k-node, 75k-edge graph at
-  ``local[4]`` on a 4-core VM, 20 iterations take about 1 s in 10 Spark
-  jobs here and 10–11 s in 100 jobs on the join plan, whose cost is the
-  fixed per-superstep job cost (docs/SCALE_NOTES.md §35).
+  the kernel reads the Graph's driver view, ``Graph.local()`` — node ids
+  and edges collected once per Graph and shared with the triangle
+  kernel — plus one Arrow collect of the seed's ``(node_id, rank)``.
+  Degrees are one ``np.bincount`` over the view's edges, and each
+  superstep is one sparse matrix-vector product (``np.bincount`` over the
+  active senders' edges). The result returns through one
+  ``createDataFrame`` plus one ``localCheckpoint``. On a seeded
+  10k-node, 75k-edge graph at ``local[4]`` on a 4-core VM, 20 iterations
+  take about 0.7 s in 8 Spark jobs here and 10–11 s in 100 jobs on the
+  join plan, whose cost is the fixed per-superstep job cost
+  (docs/SCALE_NOTES.md §35, §38).
 - otherwise, and for every ``checkpoint_dir``/``resume`` or ``skew_salt``
   run, the Spark plan per superstep: one shuffle join (edges ⋈ active
   senders on src — AQE skew-join splits hub sources) + one
@@ -46,13 +48,13 @@ Both run the same recurrence and fill the same ``metrics`` records
 incoming messages differs.
 
 One kernel: ``_delta_push`` runs that recurrence, in either plan, from a
-prepared initial state. :func:`pagerank` and :func:`article_rank` seed it
-with α (the latter shifting degrees by the average degree);
-:func:`pagerank_incremental` seeds it with the previous scores, and its
-first exchange turns them into the warm-start residual, which can be
-negative — so activity and ``delta_max`` test ``|delta|``, which equals the
-reference's ``delta > tolerance`` on from-scratch runs, where deltas never
-go negative.
+seed: a ``(node_id, rank)`` frame over ``graph.nodes``. :func:`pagerank`
+and :func:`article_rank` seed it with α (the latter shifting degrees by
+the average degree); :func:`pagerank_incremental` seeds it with the
+previous scores, and its first exchange turns them into the warm-start
+residual, which can be negative — so activity and ``delta_max`` test
+``|delta|``, which equals the reference's ``delta > tolerance`` on
+from-scratch runs, where deltas never go negative.
 :func:`eigenvector` keeps its own normalized recurrence.
 """
 
@@ -66,7 +68,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from graph_data_science_spark import progress
-from graph_data_science_spark.graph import Graph, id_positions
+from graph_data_science_spark.graph import Graph
 from graph_data_science_spark.plans.partitioning import shuffle_hash, two_level_sum
 from graph_data_science_spark.plans.pregel import ACTIVE_COL, Pregel
 from graph_data_science_spark.operators.scale_properties import apply_scaler
@@ -143,31 +145,20 @@ def _from_scratch(
     skew_salt: int,
     degree_shift: float,
 ) -> PageRankResult:
-    """The reference's α seed: ``rank = delta = α`` (or only on
-    ``source_nodes``), over degrees shifted by ``degree_shift``."""
-    alpha = 1.0 - damping_factor
+    """The reference's α seed: ``rank = α`` on every node, or only on
+    ``source_nodes`` (others 0), over degrees shifted by ``degree_shift``."""
+    rank = F.lit(1.0 - damping_factor)
     if source_nodes is not None:
-        init_rank = F.when(F.col("node_id").isin([int(s) for s in source_nodes]),
-                           F.lit(alpha)).otherwise(F.lit(0.0))
-    else:
-        init_rank = F.lit(alpha)
-    state = graph.degrees("out", weighted=weighted).select(
-        "node_id",
-        (F.col("degree") + F.lit(degree_shift)).alias("degree"),
-        init_rank.alias("rank"),
-        init_rank.alias("delta"),
-        # initial superstep sends regardless of tolerance (PageRankComputation
-        # L90: `delta > tolerance || isInitialSuperstep`); zero-delta nodes
-        # would send zeros — skip them, which is message-equivalent.
-        (init_rank > 0.0).cast("int").alias(ACTIVE_COL),
-    )
+        rank = F.when(F.col("node_id").isin([int(s) for s in source_nodes]),
+                      rank).otherwise(F.lit(0.0))
     return _delta_push(
-        graph, state, damping_factor,
-        tolerance, max_iterations, weighted, scaler=scaler,
+        graph, graph.nodes.select("node_id", rank.alias("rank")),
+        damping_factor, tolerance, max_iterations, weighted, scaler=scaler,
         checkpoint_dir=checkpoint_dir, resume=resume, skew_salt=skew_salt,
         manifest={"algorithm": "pagerank", "damping_factor": damping_factor,
                   "tolerance": tolerance, "weighted": weighted,
                   "source_nodes": source_nodes, "degree_shift": degree_shift},
+        degree_shift=degree_shift,
     )
 
 
@@ -207,20 +198,18 @@ def pagerank_incremental(
     same plan (module doc): driver-local SpMV supersteps below the gate,
     one shuffle join + one partial-agg sum + state join per superstep
     otherwise."""
-    deg = graph.degrees("out", weighted=weighted)
     prev = prev_scores.select(
         F.col("node_id").alias("_pn"), F.col("score").alias("_prev"))
-    rank = F.coalesce("_prev", F.lit(0.0))
-    state = (deg.join(prev, deg.node_id == F.col("_pn"), "left")
-             .select("node_id", "degree", rank.alias("rank"),
-                     rank.alias("delta"), F.lit(1).alias(ACTIVE_COL)))
-    return _delta_push(graph, state, damping_factor, tolerance,
+    seed = (graph.nodes.select("node_id")
+            .join(prev, F.col("node_id") == F.col("_pn"), "left")
+            .select("node_id", F.coalesce("_prev", F.lit(0.0)).alias("rank")))
+    return _delta_push(graph, seed, damping_factor, tolerance,
                        max_iterations, weighted, warm=True)
 
 
 def _delta_push(
     graph: Graph,
-    state: DataFrame,
+    seed: DataFrame,
     damping_factor: float,
     tolerance: float,
     max_iterations: int,
@@ -231,15 +220,21 @@ def _delta_push(
     skew_salt: int = 0,
     manifest: dict | None = None,
     warm: bool = False,
+    degree_shift: float = 0.0,
 ) -> PageRankResult:
-    """The one delta-push superstep loop, from a prepared initial
-    ``state`` ``(node_id, degree, rank, delta, _active)`` over the graph's
-    edges. With ``warm`` the first exchange is the residual exchange
-    (:func:`pagerank_incremental`): ``delta = α + d·msg − rank``.
+    """The one delta-push superstep loop over the graph's edges, from a
+    ``seed`` ``(node_id, rank)`` over ``graph.nodes``: ``rank = delta =
+    seed``, over out-degrees shifted by ``degree_shift``. The initial
+    superstep sends regardless of tolerance (PageRankComputation L90:
+    ``delta > tolerance || isInitialSuperstep``), so every node seeded
+    above 0 starts active (zero-delta nodes would send zeros), and every
+    node when ``warm``. With ``warm`` the first exchange is the residual
+    exchange (:func:`pagerank_incremental`): ``delta = α + d·msg − rank``.
 
     The size policy picks the plan (module doc): driver-local when
     ``graph.tier()`` is ``"local"`` and the run neither checkpoints nor
-    salts, the Pregel join plan otherwise.
+    salts, the Pregel join plan otherwise. The join plan joins the seed
+    onto ``graph.degrees``; the local plan places it into ``graph.local()``.
 
     Activity and ``delta_max`` use ``|delta|``: from-scratch deltas are
     never negative, so this is the reference's ``delta > tolerance`` there,
@@ -249,13 +244,21 @@ def _delta_push(
     # only sends) — so the number of message exchanges is maxIterations - 1.
     # A warm start's residual exchange stands in for that superstep.
     exchanges = max(0, max_iterations - 1) + warm
-    edges = _prep_edges(graph, weighted)
+    edges = _prep_edges(graph, weighted)  # checks the weight column too
     if (not (checkpoint_dir or resume or skew_salt > 1)
             and graph.tier() == "local"):
         scores, ran, converged, metrics = _local_push(
-            edges, state, damping_factor, tolerance, exchanges, weighted,
-            manifest, warm)
+            graph, seed, damping_factor, tolerance, exchanges, weighted,
+            degree_shift, manifest, warm)
     else:
+        state = graph.degrees("out", weighted=weighted).join(
+            seed, "node_id").select(
+            "node_id",
+            (F.col("degree") + F.lit(degree_shift)).alias("degree"),
+            "rank",
+            F.col("rank").alias("delta"),
+            (F.lit(warm) | (F.col("rank") > 0.0)).cast("int").alias(ACTIVE_COL),
+        )
         res = _pregel_push(
             edges, state, damping_factor, tolerance, exchanges, weighted,
             checkpoint_dir, resume, skew_salt, manifest, warm)
@@ -312,37 +315,41 @@ def _pregel_push(edges, state, damping_factor, tolerance, exchanges,
         edges.unpersist()
 
 
-def _local_push(edges, state, damping_factor, tolerance, exchanges,
-                weighted, manifest, warm):
-    """The driver-local plan: the join plan's recurrence as one sparse
-    matrix-vector product per exchange → ``(scores, exchanges run,
-    converged, metrics)``.
+def _local_push(graph, seed, damping_factor, tolerance, exchanges,
+                weighted, degree_shift, manifest, warm):
+    """The driver-local plan: the join plan's recurrence over
+    ``graph.local()`` as one sparse matrix-vector product per exchange →
+    ``(scores, exchanges run, converged, metrics)``.
 
-    Edges whose endpoint is not a state row are dropped, as the join
-    plan's inner and left joins drop them. Each exchange leaves the same
-    metrics record a Pregel block does (``fused`` 1, ``tier`` ``"local"``)
-    and the run registers with ``progress`` the way ``Pregel.run`` does."""
+    The state is the view's nodes; the seed's two columns are collected
+    and placed into it by one ``searchsorted``. Edges with an endpoint
+    that is not a node, or, ``weighted``, with a weight ≤ 0, carry no
+    message, as the join plan's inner and left joins drop them. Each
+    exchange leaves the same metrics record a Pregel block does
+    (``fused`` 1, ``tier`` ``"local"``) and the run registers with
+    ``progress`` the way ``Pregel.run`` does."""
     task = progress.begin(
         str((manifest or {}).get("algorithm", "pregel")),
         volume_total=exchanges)
     try:
-        st = state.toArrow()
-        e = edges.toArrow()
-        order = np.argsort(st.column("node_id").to_numpy(), kind="stable")
-
-        def col(name):
-            return st.column(name).to_numpy()[order]
-
-        ids, degree = col("node_id"), col("degree")
-        rank, delta = col("rank"), col("delta")
-        active = col(ACTIVE_COL) == 1
+        view = graph.local()
+        node = view.is_node
+        ids = view.ids[node]
         n = len(ids)
-        src, dst = e.column("src").to_numpy(), e.column("dst").to_numpy()
-        sp, src_known = id_positions(ids, src)
-        dp, dst_known = id_positions(ids, dst)
-        known = src_known & dst_known
-        sp, dp = sp[known], dp[known]
-        w = e.column("weight").to_numpy()[known] if weighted else None
+        degree = view.out_degree(weighted)[node] + degree_shift
+        s = seed.toArrow()
+        rank = np.zeros(n)
+        rank[np.searchsorted(ids, s.column("node_id").to_numpy())] = (
+            s.column("rank").to_numpy())
+        delta = rank
+        active = (rank > 0.0) | warm
+        # the edges that carry messages, as positions among the nodes
+        slot = np.cumsum(node) - 1
+        known = node[view.src] & node[view.dst]
+        if weighted:
+            known &= view.weight > 0.0
+        sp, dp = slot[view.src[known]], slot[view.dst[known]]
+        w = view.weight[known] if weighted else None
 
         metrics: list[dict] = []
         converged = not active.any()
@@ -374,7 +381,7 @@ def _local_push(edges, state, damping_factor, tolerance, exchanges,
             ran += 1
             progress.update(task, ran)
             converged = n_active == 0
-        scores = edges.sparkSession.createDataFrame(
+        scores = graph.edges.sparkSession.createDataFrame(
             pa.table({"node_id": ids, "score": rank})).localCheckpoint(eager=True)
     except BaseException:
         progress.finish(task, failed=True)

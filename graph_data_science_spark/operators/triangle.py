@@ -18,12 +18,15 @@ the gate PageRank asks too, so a Graph that PageRank ran on is not counted
 again:
 
 - ``"local"`` (node and edge counts both below ``LARGE_STATE_ROWS``): the
-  edges cross to the driver once through Arrow and are canonicalized
-  there by ``graph.canonical_edges``'s rule (self-loops dropped, each
-  unordered pair once), which saves that function's distinct shuffle; the
-  same degree-ordered wedge closing then runs in NumPy, in passes of at
-  most as many wedges as edges (:func:`_local_triangles`). The triangle
-  stream and the per-node counts return through ``createDataFrame``.
+  kernel reads the Graph's driver view, ``Graph.local()`` — node ids and
+  edges collected once per Graph and shared with PageRank — and
+  canonicalizes the edges there by ``graph.canonical_edges``'s rule
+  (self-loops dropped, each unordered pair once), which saves that
+  function's distinct shuffle; the same degree-ordered wedge closing then
+  runs in NumPy, in passes of at most as many wedges as edges
+  (:func:`_local_triangles`). The per-node counts are one ``bincount``
+  over the view's ids, kept where they are nodes. The triangle stream and
+  the per-node counts return through ``createDataFrame``.
 - otherwise, the Spark plan (SURVEY §2.4 "ordered two-hop self-join",
   degree-oriented — the compact-forward algorithm):
 
@@ -54,7 +57,7 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
-from graph_data_science_spark.graph import Graph, canonical_edges, id_positions
+from graph_data_science_spark.graph import Graph, canonical_edges
 
 
 @dataclass
@@ -82,8 +85,8 @@ def triangles(graph: Graph, max_degree: int | None = None) -> DataFrame:
     leaks across repeated calls, and consumers reuse the materialized
     triangle stream instead of recomputing the wedge join."""
     if graph.tier() == "local":
-        ids, _, tri = _local_triangles(graph, max_degree)
-        return _local_frame(graph, ids[tri], ("a", "b", "c"))
+        _, tri = _local_triangles(graph, max_degree)
+        return _local_frame(graph, graph.local().ids[tri], ("a", "b", "c"))
     tri, handles = _build_triangles(graph, max_degree)
     out = tri.localCheckpoint(eager=True)
     for h in handles:
@@ -100,11 +103,10 @@ def _local_frame(graph: Graph, data, names) -> DataFrame:
 
 
 def _local_triangles(graph: Graph, max_degree: int | None):
-    """The driver-local plan (module doc) → ``(ids, deg, tri)``: the
-    sorted endpoint ids of the graph's edges, their degree on the simple
-    undirected graph, and a ``(k, 3)`` array of triangles as positions into
-    ``ids``, ascending within a row (so ``ids[tri]`` is the stream
-    ``a < b < c``).
+    """The driver-local plan (module doc) → ``(deg, tri)``: the degree of
+    each of ``graph.local().ids`` on the simple undirected graph, and a
+    ``(k, 3)`` array of triangles as positions into those ids, ascending
+    within a row (so ``ids[tri]`` is the stream ``a < b < c``).
 
     The same compact-forward steps as the Spark plan: drop nodes above
     ``max_degree``, orient each surviving edge from its lower (degree, id)
@@ -112,11 +114,8 @@ def _local_triangles(graph: Graph, max_degree: int | None):
     wedge when its closing edge is an oriented edge. A pass over the
     wedges generates at most as many as there are edges, so the driver
     holds O(edges) at a time whatever the wedge count."""
-    e = graph.edges.select("src", "dst").toArrow()
-    src, dst = e.column("src").to_numpy(), e.column("dst").to_numpy()
-    ids = np.unique(np.concatenate([src, dst]))
-    n = len(ids)
-    a, b = np.searchsorted(ids, src), np.searchsorted(ids, dst)
+    view = graph.local()
+    n, a, b = len(view.ids), view.src, view.dst
     # the simple undirected graph: self-loops dropped, each pair once
     simple = np.unique((np.minimum(a, b) * n + np.maximum(a, b))[a != b])
     s, d = simple // n, simple % n
@@ -155,7 +154,7 @@ def _local_triangles(graph: Graph, max_degree: int | None):
         found.append(np.stack([lo[first[hit]], hi[first[hit]],
                                hi[second[hit]]], axis=1))
         i0 = i1
-    return ids, deg, np.sort(by_rank[np.concatenate(found)], axis=1)
+    return deg, np.sort(by_rank[np.concatenate(found)], axis=1)
 
 
 def _build_triangles(graph: Graph, max_degree: int | None = None):
@@ -227,22 +226,16 @@ def triangle_count(graph: Graph, max_degree: int | None = None) -> TriangleCount
     Excluded (degree > max_degree) nodes report -1, like the reference.
     """
     if graph.tier() == "local":
-        ids, deg, tri = _local_triangles(graph, max_degree)
-        node_ids = graph.nodes.select("node_id").toArrow().column(
-            "node_id").to_numpy()
-        pos, present = id_positions(ids, node_ids)
-        pos = pos[present]
-        counts = np.bincount(tri.ravel(), minlength=len(ids))
-        per_node = np.zeros(len(node_ids), dtype=np.int64)
-        per_node[present] = counts[pos]
+        deg, tri = _local_triangles(graph, max_degree)
+        view = graph.local()
+        counts = np.bincount(tri.ravel(), minlength=len(view.ids))
         if max_degree is not None:
-            node_deg = np.zeros(len(node_ids), dtype=np.int64)
-            node_deg[present] = deg[pos]
-            per_node[node_deg > int(max_degree)] = -1
+            counts[deg > int(max_degree)] = -1
+        node = view.is_node
         return TriangleCountResult(
-            _local_frame(graph, np.stack([node_ids, per_node], axis=1),
+            _local_frame(graph, np.stack([view.ids[node], counts[node]], axis=1),
                          ("node_id", "triangles")),
-            len(tri), _local_frame(graph, ids[tri], ("a", "b", "c")))
+            len(tri), _local_frame(graph, view.ids[tri], ("a", "b", "c")))
     tri = triangles(graph, max_degree=max_degree)  # checkpointed, leak-free
     corners = (
         tri.select(F.col("a").alias("node_id"))

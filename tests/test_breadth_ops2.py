@@ -200,62 +200,6 @@ def test_estimate_new_families_run():
         assert out and all(v > 0 for v in out.values()), algo
 
 
-# ---- indexInverse ----------------------------------------------------------
-
-def test_index_inverse_matches_plain_reverse(spark):
-    from graph_data_science_spark.graph import REVERSE
-    edges = edges_from_tuples(spark, [(0, 1), (0, 2), (1, 2), (2, 3)])
-    g = graph_from_edges(spark, edges)
-    plain = {(r["src"], r["dst"]) for r in g.oriented(REVERSE).edges.collect()}
-    gi = g.index_inverse(partitions=4)
-    indexed = {(r["src"], r["dst"]) for r in gi.oriented(REVERSE).edges.collect()}
-    assert indexed == plain == {(1, 0), (2, 0), (2, 1), (3, 2)}
-    # the index is a persisted (cached) layout: REVERSE scans hit the cache
-    plan = gi.oriented(REVERSE).edges._jdf.queryExecution().optimizedPlan().toString()
-    assert "InMemoryRelation" in plan
-    # NATURAL orientation is untouched by the index
-    nat = {(r["src"], r["dst"]) for r in gi.edges.collect()}
-    assert nat == {(0, 1), (0, 2), (1, 2), (2, 3)}
-    gd = gi.drop_inverse_index()
-    assert gd._inverse_edges is None
-
-
-def test_index_inverse_preserves_weight(spark):
-    edges = edges_from_tuples(
-        spark, [(0, 1, 2.0), (1, 2, 3.5)], weighted=True)
-    g = graph_from_edges(spark, edges).index_inverse(partitions=2)
-    got = {(r["src"], r["dst"]): r["weight"]
-           for r in g.oriented("REVERSE").edges.collect()}
-    assert got == {(1, 0): 2.0, (2, 1): 3.5}
-    # weighted in-degree rides the indexed layout unchanged
-    deg = rows_to_dict(
-        g.oriented("REVERSE").degrees("out", weighted=True),
-        "node_id", "degree")
-    assert deg == {0: 0.0, 1: 2.0, 2: 3.5}
-
-
-def test_index_inverse_detaches_on_derived_graphs(spark):
-    """The materialized inverse index must not survive edge-set-changing
-    derivations — a filtered subgraph's REVERSE orientation has to reflect
-    the filter, and double-REVERSE must restore the natural edges."""
-    from graph_data_science_spark.graph import REVERSE
-    edges = edges_from_tuples(
-        spark, [(0, 1, 1.0), (0, 2, 9.0), (1, 2, 1.0)], weighted=True)
-    gi = graph_from_edges(spark, edges).index_inverse(partitions=2)
-    # subgraph drops the hot edge; its REVERSE must too
-    sub = gi.subgraph(rel_filter="weight < 5")
-    assert sub._inverse_edges is None
-    rev = {(r["src"], r["dst"]) for r in sub.oriented(REVERSE).edges.collect()}
-    assert rev == {(1, 0), (2, 1)}
-    # double REVERSE returns the natural orientation, not the index again
-    back = {(r["src"], r["dst"])
-            for r in gi.oriented(REVERSE).oriented(REVERSE).edges.collect()}
-    assert back == {(0, 1), (0, 2), (1, 2)}
-    # to_undirected mirrors everything and drops the directed index
-    und = gi.to_undirected()
-    assert und._inverse_edges is None
-
-
 def test_edge_count_invalidated_by_undirected(spark):
     from graph_data_science_spark.graph import UNDIRECTED
     g = graph_from_edges(spark, edges_from_tuples(spark, [(0, 1), (1, 2)]))
